@@ -191,8 +191,9 @@ def _stage_table(
         # os.rename onto an existing directory fails on POSIX, so exactly
         # one process wins a cross-process race; the loser discards its
         # stage dir and reads the winner's table. (On HDFS/S3 the same
-        # protocol is a rename/commit — write_path._staged_swap is the
-        # catalog-table twin of this file-level swap.)
+        # protocol is a rename/commit. write_path's table rewrites commit
+        # the same way one level up: a new version directory, then one
+        # catalog repoint.)
         stage = f"{final}.__stage_{uuid.uuid4().hex}"
         os.makedirs(os.path.dirname(final), exist_ok=True)
         build().write.mode("errorifexists").parquet(stage)

@@ -39,7 +39,34 @@ DEFAULT_SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
 
 
 def default_cpus() -> str:
-    return os.environ.get("SPARK_GRAFT_CPUS", "32")
+    """Cores for ``local[n]``: ``SPARK_GRAFT_CPUS``, else the cores this
+    process may run on (its CPU affinity, which honours cgroup pinning)."""
+    return os.environ.get("SPARK_GRAFT_CPUS") or str(len(os.sched_getaffinity(0)))
+
+
+DRIVER_MEM_CAP_GB = 24
+
+
+def driver_memory_for(mem_total_kb: int) -> str:
+    """Driver heap for a host with ``mem_total_kb`` of RAM: about 40% of it,
+    leaving room for off-heap buffers, Python workers and the OS, at least
+    1g and at most ``DRIVER_MEM_CAP_GB``."""
+    gb = int(mem_total_kb * 0.4 / (1024 * 1024))
+    return f"{min(max(gb, 1), DRIVER_MEM_CAP_GB)}g"
+
+
+def default_driver_memory() -> str:
+    """``SPARK_GRAFT_DRIVER_MEM``, else sized from ``MemTotal`` in
+    /proc/meminfo (the cap where that cannot be read)."""
+    override = os.environ.get("SPARK_GRAFT_DRIVER_MEM")
+    if override:
+        return override
+    try:
+        with open("/proc/meminfo") as f:
+            total_kb = next(int(line.split()[1]) for line in f if line.startswith("MemTotal:"))
+    except OSError:
+        return f"{DRIVER_MEM_CAP_GB}g"
+    return driver_memory_for(total_kb)
 
 
 def build_session(
@@ -73,7 +100,7 @@ def build_session(
         # Spark 4.1's TIME type (feature-flagged) backs the reference's
         # `time` type (TimeType.java) — literals, casts, extraction, min/max.
         .config("spark.sql.timeType.enabled", "true")
-        .config("spark.driver.memory", os.environ.get("SPARK_GRAFT_DRIVER_MEM", "24g"))
+        .config("spark.driver.memory", default_driver_memory())
         .config("spark.ui.enabled", "false")
         # Whole-stage-codegen class cache (static conf, default 100
         # entries). A long-lived query service compiles each distinct plan

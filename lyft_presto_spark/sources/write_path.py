@@ -14,15 +14,30 @@ Reference mapping:
                     Iceberg rewrite_data_files analog — the reference
                     delegates compaction to Hive; a 100 TB micro-batch
                     ingest pipeline needs it as a first-class verb)
+- merge_into      ≈ extension: ANSI MERGE upsert
+
+Snapshot model: the three rewriting verbs (``delete_where``,
+``optimize_table``, ``merge_into``) write the table's new rows once, into a
+fresh hidden version directory under the table's CTAS root, and commit by
+repointing the catalog table at it (``ALTER TABLE … SET LOCATION``) — the
+reference's writer-then-TableFinish split, with the commit a metadata step.
+Readers see the old snapshot or the new one, never a partial one. Only the
+current version is kept: the previous one is deleted after the commit.
 
 Scale notes: writes go through Spark's committer (task-level speculative-safe
-commit, the TableFinish analog); partitioned CTAS lays out partition
-directories so downstream scans partition-prune.
+commit); partitioned CTAS lays out partition directories so downstream scans
+partition-prune, and rewrites keep that layout.
 """
 
 from __future__ import annotations
 
+import json
+import re
+import uuid
+from urllib.parse import unquote
+
 from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import functions as F
 
 
 def ctas(
@@ -45,48 +60,112 @@ def insert_into(spark: SparkSession, df: DataFrame, table: str) -> None:
     df.write.insertInto(table, overwrite=False)
 
 
-def _staged_swap(spark: SparkSession, df: DataFrame, table: str, stage: str) -> None:
-    """Write ``df`` to ``stage``, then overwrite ``table`` from it.
+_VERSION_DIR = re.compile(r"_v[0-9a-f]{32}")
 
-    Failure containment (ADVICE r9): if the STAGE write fails, the stage is
-    dropped and the target is untouched. If the SWAP overwrite fails
-    mid-write, the target may be truncated — so the stage table (now the
-    only complete copy of the data) is deliberately KEPT and its name
-    surfaced for recovery; only a fully successful swap drops it. (An
-    atomic-rename catalog would swap via ALTER instead; the parquet
-    session catalog has no atomic swap.)
+
+def _rewrite(spark: SparkSession, table: str, df: DataFrame) -> None:
+    """Replace ``table``'s rows with ``df`` by committing a new snapshot.
+
+    The rows are written once, into a fresh hidden version directory
+    ``<table root>/_v<uuid>`` (Spark's file listing skips ``_``-prefixed
+    entries, so an unfinished version is invisible to readers). The commit
+    is a metadata step, the TableFinish analog: ``ALTER TABLE … SET
+    LOCATION`` repoints the table and the catalog partitions are brought in
+    line with the new version. Only then is every other entry under the
+    table root deleted, so the old snapshot stays whole until the repoint.
+
+    ``df`` is aligned to the table's columns by name and cast to their
+    types, so callers may build it in any column order.
+
+    If the write or the repoint fails, the table is pointed back at its old
+    snapshot, the new directory is removed and the error re-raised.
+    Retention is "keep only the current version"; cleanup that did not
+    finish is redone by the next rewrite.
     """
-    spark.sql(f"DROP TABLE IF EXISTS {stage}")
+    meta = _describe(spark, table)
+    location, part_cols = meta["location"], meta.get("partition_columns", [])
+    # versions live under the root the table was created at (CTAS), never
+    # nested inside each other
+    parent, name = location.rsplit("/", 1)
+    root = parent if _VERSION_DIR.fullmatch(name) else location
+    new = f"{root}/_v{uuid.uuid4().hex}"
+    schema = spark.table(table).schema
+    if df.schema != schema:
+        df = df.select(*[F.col(f.name).cast(f.dataType) for f in schema])
+    w = df.write.format(meta["provider"]).mode("errorifexists")
+    if part_cols:
+        w = w.partitionBy(*part_cols)
+    fs, new_path = _fs_path(spark, new)
     try:
-        df.write.format("parquet").saveAsTable(stage)
+        w.save(new)
+        _point_table_at(spark, table, new, part_cols)
     except Exception:
-        spark.sql(f"DROP TABLE IF EXISTS {stage}")  # partial stage; target intact
+        if _describe(spark, table)["location"] != location:
+            _point_table_at(spark, table, location, part_cols)
+        fs.delete(new_path, True)
         raise
-    try:
-        spark.table(stage).write.insertInto(table, overwrite=True)
-    except Exception as e:
-        raise RuntimeError(
-            f"staged swap into {table!r} failed mid-overwrite; the complete "
-            f"pre-swap data is preserved in stage table {stage!r} — recover "
-            f"with: INSERT OVERWRITE {table} SELECT * FROM {stage}"
-        ) from e
-    spark.sql(f"DROP TABLE IF EXISTS {stage}")
+    for st in fs.listStatus(new_path.getParent()):
+        if st.getPath().getName() != new_path.getName():
+            fs.delete(st.getPath(), True)
+
+
+def _describe(spark: SparkSession, table: str) -> dict:
+    """The catalog's metadata for ``table``: ``location``, ``provider``,
+    ``partition_columns`` (absent when unpartitioned), ``columns``, …"""
+    return json.loads(spark.sql(f"DESCRIBE TABLE EXTENDED {table} AS JSON").first()[0])
+
+
+def _point_table_at(
+    spark: SparkSession, table: str, location: str, part_cols: list[str]
+) -> None:
+    """Repoint ``table`` at ``location`` and make its catalog partitions
+    exactly the partition directories found there."""
+    spark.sql(f"ALTER TABLE {table} SET LOCATION '{_sql_str(location)}'")
+    if not part_cols:
+        return
+    # SYNC PARTITIONS adds the new version's partitions and moves the
+    # existing ones to it, but keeps a partition whose old directory still
+    # exists even when the new version has none: drop those explicitly.
+    spark.sql(f"MSCK REPAIR TABLE {table} SYNC PARTITIONS")
+    fs, pattern = _fs_path(spark, location + "/*" * len(part_cols))
+    live = {
+        "/".join(str(st.getPath()).split("/")[-len(part_cols):])
+        for st in (fs.globStatus(pattern) or [])
+        if st.isDirectory()
+    }
+    for r in spark.sql(f"SHOW PARTITIONS {table}").collect():
+        if r[0] not in live:
+            spec = ", ".join(
+                f"{k} = '{_sql_str(unquote(v))}'"
+                for k, v in (kv.split("=", 1) for kv in r[0].split("/"))
+            )
+            spark.sql(f"ALTER TABLE {table} DROP IF EXISTS PARTITION ({spec})")
+
+
+def _sql_str(v: str) -> str:
+    return v.replace("\\", "\\\\").replace("'", "\\'")
+
+
+def _fs_path(spark: SparkSession, path: str):
+    """(Hadoop FileSystem, Path) for ``path`` — scheme-agnostic, like
+    ``_total_file_bytes``."""
+    jpath = spark._jvm.org.apache.hadoop.fs.Path(path)
+    return jpath.getFileSystem(spark._jsc.hadoopConfiguration()), jpath
 
 
 def delete_where(spark: SparkSession, table: str, predicate: str) -> None:
-    """DELETE FROM table WHERE predicate, as overwrite-minus-matches.
+    """DELETE FROM table WHERE predicate, as a rewrite minus the matches.
 
-    Parquet-table semantics: rewrite retained rows (the reference's
-    whole-table path); with a partitioned table and a partition-aligned
-    predicate, dynamic partition overwrite rewrites only affected partitions.
+    Parquet has no row-level delete, so the retained rows become the
+    table's next snapshot (the reference's whole-table path). The rewrite is
+    one distributed write, never ``.collect()``: at 100 TB that is a
+    guaranteed driver OOM, and the Python round-trip perturbs
+    timestamp/decimal types. Reading the old snapshot while writing the new
+    one is safe because the two live in different directories.
     """
-    remaining = spark.table(table).filter(f"NOT ({predicate})")
-    # Stage the retained rows to a scratch table with a distributed write
-    # (never .collect(): at 100 TB that is a guaranteed driver OOM, and the
-    # Python round-trip perturbs timestamp/decimal types). The staged copy
-    # breaks the read-own-table-mid-overwrite cycle; the swap back is a
-    # second distributed write (failure-contained in _staged_swap).
-    _staged_swap(spark, remaining, table, f"{table}__delete_stage")
+    # SQL DELETE keeps a row whose predicate is NULL; NOT(NULL) would drop it
+    kept = spark.table(table).filter(f"NOT coalesce(({predicate}), false)")
+    _rewrite(spark, table, kept)
 
 
 def optimize_table(
@@ -97,13 +176,12 @@ def optimize_table(
     beyond the reference, which delegates compaction to Hive itself). A
     100 TB ingest pipeline accretes small files from micro-batch appends;
     scans then pay per-file open/footer costs and lose row-group locality.
-    This rewrites the table into ~``target_file_mb`` files via the same
-    staged-swap, never-``collect()`` discipline as ``delete_where``: file
-    sizing is metadata-only (``inputFiles`` + Hadoop FileSystem status —
-    scheme-agnostic, so HDFS/S3 paths size correctly, ADVICE r9), the
-    rewrite is ONE distributed ``repartition(n)`` write (round-robin, so
-    output files are uniformly sized), and the swap back is a second
-    distributed write. Returns before/after file counts."""
+    This rewrites the table into ~``target_file_mb`` files as one new
+    snapshot, like ``delete_where``: file sizing is metadata-only
+    (``inputFiles`` + Hadoop FileSystem status — scheme-agnostic, so
+    HDFS/S3 paths size correctly, ADVICE r9), and the rewrite is ONE
+    distributed ``repartition(n)`` write (round-robin, so output files are
+    uniformly sized). Returns before/after file counts."""
     df = spark.table(table)
     files = df.inputFiles()
     before = len(files)
@@ -118,16 +196,12 @@ def optimize_table(
     # a partitioned table must repartition BY its partition columns:
     # round-robin would send every output task into every partition
     # directory, multiplying files instead of compacting them
-    part_cols = [
-        c.name for c in spark.catalog.listColumns(table) if c.isPartition
-    ]
-    from pyspark.sql import functions as F
-
+    part_cols = _describe(spark, table).get("partition_columns", [])
     if part_cols:
         compacted = df.repartition(n_target, *[F.col(c) for c in part_cols])
     else:
         compacted = df.repartition(n_target)
-    _staged_swap(spark, compacted, table, f"{table}__optimize_stage")
+    _rewrite(spark, table, compacted)
     return {"files_before": before, "files_after": len(spark.table(table).inputFiles())}
 
 
@@ -174,8 +248,8 @@ def merge_into(
 
     Scale shape: ONE equi-join on the merge keys decides matched rows
     (broadcast when the source is small, shuffle-equi at 100 TB — never
-    a cartesian), the rewrite is a distributed staged swap
-    (never ``collect()``), and the ANSI cardinality rule is enforced:
+    a cartesian), the merged rows are written once as the table's next
+    snapshot (never ``collect()``), and the ANSI cardinality rule is enforced:
     a source with duplicate merge keys raises (a matched target row
     must match at most one source row) — the same error MERGE throws in
     ANSI engines, checked with one distributed aggregation. The TARGET
@@ -218,7 +292,8 @@ def merge_into(
         merged = unmatched_target.unionByName(updated).unionByName(new_rows)
     else:  # delete: matched target rows go away; unmatched source rows insert
         merged = unmatched_target.unionByName(new_rows)
-    _staged_swap(spark, merged, table, f"{table}__merge_stage")
+    # the using-joins put the keys first; _rewrite writes by name
+    _rewrite(spark, table, merged)
     return {"matched": matched, "inserted": inserted}
 
 

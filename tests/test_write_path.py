@@ -2,6 +2,8 @@
 
 from __future__ import annotations
 
+import os
+
 import pytest
 
 from lyft_presto_spark.session import load_table
@@ -17,6 +19,11 @@ from lyft_presto_spark.sources.write_path import (
 @pytest.fixture()
 def nation(spark, sf_dir):
     return load_table(spark, sf_dir, "nation")
+
+
+def _tables(spark) -> set[str]:
+    """Catalog tables (not temp views) in the current database."""
+    return {t.name for t in spark.catalog.listTables() if not t.isTemporary}
 
 
 def test_ctas_insert_delete_analyze(spark, nation, tmp_path):
@@ -53,6 +60,7 @@ def test_delete_where_stays_distributed(spark, sf_dir, tmp_path, monkeypatch):
     table = "t_orders_del"
     spark.sql(f"DROP TABLE IF EXISTS {table}")
     ctas(spark, orders, table, str(tmp_path / "orders_del"))
+    tables = _tables(spark)
     expected = orders.filter("NOT (o_orderpriority = '1-URGENT')")
     exp_n = expected.count()
     exp_sum = expected.selectExpr("CAST(sum(CAST(o_totalprice AS DECIMAL(18,2))) AS DOUBLE) s").first()["s"]
@@ -71,9 +79,9 @@ def test_delete_where_stays_distributed(spark, sf_dir, tmp_path, monkeypatch):
     assert after.filter("o_orderpriority = '1-URGENT'").count() == 0
     got_sum = after.selectExpr("CAST(sum(CAST(o_totalprice AS DECIMAL(18,2))) AS DOUBLE) s").first()["s"]
     assert got_sum == exp_sum
-    # Type fidelity: the staged write preserves the original schema exactly.
+    # Type fidelity: the rewrite preserves the original schema exactly.
     assert after.schema == orders.schema
-    assert not [t for t in spark.catalog.listTables() if t.name == f"{table}__delete_stage"]
+    assert _tables(spark) == tables  # no side tables
     spark.sql(f"DROP TABLE {table}")
 
 
@@ -134,7 +142,7 @@ def test_alter_table_add_columns_and_rename(spark, sf_dir, tmp_path_factory):
 def test_optimize_table_compacts_small_files(spark, sf_dir, tmp_path, monkeypatch):
     """OPTIMIZE (small-file compaction): many tiny appended files rewrite
     into ~target-size files with byte-identical content, through the same
-    staged-swap never-collect() discipline as DELETE."""
+    never-collect() snapshot rewrite as DELETE."""
     import pyspark.sql
 
     from lyft_presto_spark.sources.write_path import optimize_table
@@ -148,6 +156,7 @@ def test_optimize_table_compacts_small_files(spark, sf_dir, tmp_path, monkeypatc
         insert_into(spark, nation.filter(f"n_nationkey % 8 = {i}"), table)
     before_rows = sorted(map(tuple, spark.table(table).collect()))
     assert len(spark.table(table).inputFiles()) >= 8
+    tables = _tables(spark)
 
     def _no_collect(self):
         raise AssertionError("optimize_table must not collect() to the driver")
@@ -163,7 +172,7 @@ def test_optimize_table_compacts_small_files(spark, sf_dir, tmp_path, monkeypatc
     after_rows = sorted(map(tuple, spark.table(table).collect()))
     assert after_rows == before_rows  # content byte-identical
     assert spark.table(table).schema == nation.schema
-    assert not [t for t in spark.catalog.listTables() if t.name == f"{table}__optimize_stage"]
+    assert _tables(spark) == tables  # no side tables
     spark.sql(f"DROP TABLE {table}")
 
 
@@ -190,56 +199,6 @@ def test_optimize_table_respects_partitions(spark, sf_dir, tmp_path):
     assert stats["files_after"] == n_parts
     assert sorted(map(tuple, spark.table(table).collect())) == before_rows
     spark.sql(f"DROP TABLE {table}")
-
-
-def test_staged_swap_failure_preserves_stage_table(spark, sf_dir, tmp_path):
-    """ADVICE r9: if the swap overwrite fails mid-write, the stage table is
-    the only complete copy — it must be KEPT and named in the error, not
-    dropped by a finally block."""
-    import pytest
-
-    from lyft_presto_spark.sources.write_path import _staged_swap
-
-    nation = load_table(spark, sf_dir, "nation")
-    table = "t_swapfail"
-    stage = f"{table}__delete_stage"
-    spark.sql(f"DROP TABLE IF EXISTS {table}")
-    spark.sql(f"DROP TABLE IF EXISTS {stage}")
-    ctas(spark, nation, table, str(tmp_path / "swapfail"))
-    # force the SWAP (second phase) to fail: drop the target between the
-    # stage write and the overwrite by pointing the swap at a bad table name
-    broken = nation.selectExpr("n_nationkey AS wrong_col")  # schema mismatch
-    with pytest.raises(RuntimeError, match=stage):
-        _staged_swap(spark, broken, table, stage)
-    # stage survives with the complete staged data, target not silently lost
-    assert [t for t in spark.catalog.listTables() if t.name == stage]
-    assert spark.table(stage).count() == nation.count()
-    spark.sql(f"DROP TABLE IF EXISTS {stage}")
-    spark.sql(f"DROP TABLE IF EXISTS {table}")
-
-
-def test_staged_swap_stage_write_failure_drops_partial_stage(spark, sf_dir, tmp_path):
-    """If the STAGE write itself fails the target is untouched and the
-    partial stage is cleaned up (nothing to recover: target still complete)."""
-    import pytest
-    from pyspark.sql import functions as F
-
-    from lyft_presto_spark.sources.write_path import _staged_swap
-
-    nation = load_table(spark, sf_dir, "nation")
-    table = "t_stagefail"
-    stage = f"{table}__delete_stage"
-    spark.sql(f"DROP TABLE IF EXISTS {table}")
-    spark.sql(f"DROP TABLE IF EXISTS {stage}")
-    ctas(spark, nation, table, str(tmp_path / "stagefail"))
-    exploding = nation.withColumn(
-        "boom", F.assert_true(F.col("n_nationkey") < 0, F.lit("stage write fails"))
-    )
-    with pytest.raises(Exception):
-        _staged_swap(spark, exploding, table, stage)
-    assert not [t for t in spark.catalog.listTables() if t.name == stage]
-    assert spark.table(table).count() == nation.count()  # target intact
-    spark.sql(f"DROP TABLE IF EXISTS {table}")
 
 
 def test_total_file_bytes_via_hadoop_fs(spark, sf_dir, tmp_path):
@@ -277,6 +236,7 @@ def test_merge_into_upsert_updates_and_inserts(spark, sf_dir, tmp_path, monkeypa
     table = "t_merge"
     spark.sql(f"DROP TABLE IF EXISTS {table}")
     ctas(spark, nation, table, str(tmp_path / "merge"))
+    tables = _tables(spark)
     n = nation.count()
     # source: update keys 0..4 (marked names), insert keys 1000..1002
     updates = nation.filter("n_nationkey < 5").withColumn(
@@ -299,7 +259,7 @@ def test_merge_into_upsert_updates_and_inserts(spark, sf_dir, tmp_path, monkeypa
     untouched = got.filter("n_nationkey >= 5 AND n_nationkey < 1000")
     want = nation.filter("n_nationkey >= 5")
     assert sorted(map(tuple, untouched.collect())) == sorted(map(tuple, want.collect()))
-    assert not [t for t in spark.catalog.listTables() if t.name == f"{table}__merge_stage"]
+    assert _tables(spark) == tables  # no side tables
     spark.sql(f"DROP TABLE {table}")
 
 
@@ -389,4 +349,163 @@ def test_optimize_table_aborts_when_size_probe_fails(spark, nation, tmp_path, mo
     stats = write_path.optimize_table(spark, table)
     assert stats == {"files_before": before, "files_after": before, "skipped": 1}
     assert len(spark.table(table).inputFiles()) == before  # no rewrite ran
+    spark.sql(f"DROP TABLE {table}")
+
+
+def _rows(df) -> list[tuple]:
+    return sorted(map(tuple, df.collect()))
+
+
+def _location(spark, table) -> str:
+    rows = spark.sql(f"DESCRIBE TABLE EXTENDED {table}").collect()
+    return next(r.data_type for r in rows if r.col_name == "Location")
+
+
+def _versions(root) -> list[str]:
+    return [e for e in os.listdir(root) if e.startswith("_v")]
+
+
+def test_merge_into_non_leading_keys(spark, nation, tmp_path):
+    """The merge keys need not be the table's leading columns: the merged
+    rows are written by name, so no column shifts or fails to cast."""
+    from pyspark.sql import functions as F
+
+    from lyft_presto_spark.sources.write_path import merge_into
+
+    table = "t_merge_nonlead"
+    spark.sql(f"DROP TABLE IF EXISTS {table}")
+    ctas(spark, nation, table, str(tmp_path / "merge_nonlead"))
+    src = nation.filter("n_nationkey < 3").withColumn(
+        "n_name", F.concat(F.lit("M_"), F.col("n_name"))
+    )
+    stats = merge_into(spark, table, src, on=("n_regionkey", "n_nationkey"))
+    assert stats == {"matched": 3, "inserted": 0}
+    want = nation.filter("n_nationkey >= 3").unionByName(src)
+    assert spark.table(table).columns == nation.columns
+    assert _rows(spark.table(table)) == _rows(want)
+    spark.sql(f"DROP TABLE {table}")
+
+
+def test_rewrite_write_failure_leaves_table_untouched(spark, nation, tmp_path):
+    """A rewrite whose write fails leaves the old snapshot in place and no
+    half-written version directory behind."""
+    root = tmp_path / "wfail"
+    table = "t_wfail"
+    spark.sql(f"DROP TABLE IF EXISTS {table}")
+    ctas(spark, nation, table, str(root))
+    before = _rows(spark.table(table))
+    with pytest.raises(Exception, match="rewrite fails"):
+        delete_where(
+            spark, table, "assert_true(n_nationkey < 0, 'rewrite fails') IS NOT NULL"
+        )
+    assert _rows(spark.table(table)) == before
+    assert _versions(root) == []
+    spark.sql(f"DROP TABLE {table}")
+
+
+@pytest.mark.parametrize(
+    "partition_by, fail_on",
+    [((), "SET LOCATION"), (("n_regionkey",), "MSCK REPAIR")],
+    ids=["alter_fails", "partition_sync_fails"],
+)
+def test_rewrite_repoint_failure_leaves_table_untouched(
+    spark, nation, tmp_path, monkeypatch, partition_by, fail_on
+):
+    """A failure between the write and the commit (the ALTER itself, or the
+    partition sync after it) leaves the table on its old snapshot, with its
+    old partitions, and removes the new version directory."""
+    from lyft_presto_spark.sources.write_path import optimize_table
+
+    root = tmp_path / "rfail"
+    table = "t_rfail"
+    spark.sql(f"DROP TABLE IF EXISTS {table}")
+    ctas(spark, nation, table, str(root), partition_by=partition_by)
+    insert_into(spark, nation.filter("n_nationkey < 3"), table)
+    before = _rows(spark.table(table))
+    parts = _rows(spark.sql(f"SHOW PARTITIONS {table}")) if partition_by else []
+    location = _location(spark, table)
+    real_sql = spark.sql
+    failed = []
+
+    def flaky_sql(query, *args, **kwargs):
+        if fail_on in query and not failed:
+            failed.append(query)
+            raise RuntimeError("injected repoint failure")
+        return real_sql(query, *args, **kwargs)
+
+    monkeypatch.setattr(spark, "sql", flaky_sql)
+    with pytest.raises(RuntimeError, match="injected repoint failure"):
+        optimize_table(spark, table)
+    monkeypatch.undo()
+    assert failed
+    assert _location(spark, table) == location
+    assert _rows(spark.table(table)) == before
+    if partition_by:
+        assert _rows(spark.sql(f"SHOW PARTITIONS {table}")) == parts
+    assert _versions(root) == []
+    spark.sql(f"DROP TABLE {table}")
+
+
+def test_rewrites_keep_only_the_current_version(spark, nation, tmp_path):
+    """Every rewrite commits a new version under the table root and deletes
+    the rest: after several rewrites the root holds exactly one version and
+    no catalog table besides the target was created."""
+    from pyspark.sql import functions as F
+
+    from lyft_presto_spark.sources.write_path import merge_into, optimize_table
+
+    root = tmp_path / "retain"
+    table = "t_retain"
+    spark.sql(f"DROP TABLE IF EXISTS {table}")
+    ctas(spark, nation, table, str(root))
+    tables = _tables(spark)
+    optimize_table(spark, table)
+    insert_into(spark, nation.filter("n_nationkey < 5"), table)
+    delete_where(spark, table, "n_nationkey = 1")
+    merge_into(
+        spark, table,
+        nation.filter("n_nationkey = 2").withColumn("n_name", F.lit("MERGED")),
+        on=("n_nationkey",),
+    )
+    optimize_table(spark, table)
+    entries = os.listdir(root)
+    assert len(entries) == 1 and _versions(root) == entries
+    assert _tables(spark) == tables
+    want = (
+        nation.unionByName(nation.filter("n_nationkey < 5"))
+        .filter("n_nationkey <> 1")
+        .withColumn(
+            "n_name",
+            F.when(F.col("n_nationkey") == 2, F.lit("MERGED")).otherwise(F.col("n_name")),
+        )
+    )
+    assert _rows(spark.table(table)) == _rows(want)
+    spark.sql(f"DROP TABLE {table}")
+
+
+def test_delete_where_drops_emptied_partition(spark, nation, tmp_path):
+    """A delete that empties a whole partition removes it from the catalog
+    and from the rows read, although the old partition directory is still
+    on disk when the table is repointed."""
+    table = "t_del_part"
+    spark.sql(f"DROP TABLE IF EXISTS {table}")
+    ctas(spark, nation, table, str(tmp_path / "del_part"), partition_by=("n_regionkey",))
+    delete_where(spark, table, "n_regionkey = 0")
+    parts = {r[0] for r in spark.sql(f"SHOW PARTITIONS {table}").collect()}
+    assert parts == {f"n_regionkey={k}" for k in range(1, 5)}
+    assert _rows(spark.table(table)) == _rows(nation.filter("n_regionkey <> 0"))
+    spark.sql(f"DROP TABLE {table}")
+
+
+def test_delete_where_keeps_rows_whose_predicate_is_null(spark, nation, tmp_path):
+    """SQL DELETE removes only rows where the predicate is TRUE: a row on
+    which it evaluates to NULL stays."""
+    table = "t_del_null"
+    spark.sql(f"DROP TABLE IF EXISTS {table}")
+    with_nulls = nation.selectExpr(
+        "n_nationkey", "IF(n_nationkey < 3, NULL, n_name) AS n_name", "n_regionkey"
+    )
+    ctas(spark, with_nulls, table, str(tmp_path / "del_null"))
+    delete_where(spark, table, "n_name = 'NATION_5'")
+    assert _rows(spark.table(table)) == _rows(with_nulls.filter("n_nationkey <> 5"))
     spark.sql(f"DROP TABLE {table}")
