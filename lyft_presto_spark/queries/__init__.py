@@ -2,365 +2,15 @@
 
 Every module in this package registers named queries into
 ``registry.REGISTRY``. ``lyft_presto_spark.queries.all_queries()`` imports all
-modules and returns the full inventory — this is what ``__spark_entry__.py``
-exposes to the driver and what the test harness runs against the DuckDB
-oracle.
+modules and returns the full inventory in registration order. This is what
+``__spark_entry__.py`` exposes, what perfbench looks queries up in by name,
+and what ``tests/test_queries_oracle.py`` checks, query by query, against
+its DuckDB oracle.
 """
 
 from __future__ import annotations
 
 from .registry import REGISTRY, Query, query
-
-# The driver's correctness scorer is budget-capped: it verifies the first N
-# (observed: 50) entries in registration order and leaves the rest rows-only.
-# Round 2 spent the whole budget on tpch_*/op_* rows, leaving every extension
-# family driver-unscored (VERDICT r2 "What's missing" #1). This head curates
-# the scored set: the full TPC-H corpus, the distinct core-operator paths
-# (one representative each — op_join_right/full exercise the same outer-hash
-# machinery as op_join_left, so they yield their slot), and at least one row
-# per family: fn_*, events_*, text_*, dedup_*, sim_*, multimodal_*.
-# Everything else still registers and is oracle-checked locally
-# (tests/test_queries_oracle.py); this only chooses the driver's sample.
-#
-# ROTATION POLICY (VERDICT r4 next-round #5): each round, ~5-8 non-TPC-H
-# slots whose physical machinery already has driver-green evidence in a
-# prior CORRECTNESS_r*.json rotate out in favor of rows the driver has
-# NEVER scored, so driver-green evidence accumulates across the full
-# registry round over round while every family keeps >= 1 scored row.
-# r5 rotation — out (prior driver-green round in parens) -> in (never
-# scored): op_spatial_bbox_join (r4) -> op_spatial_kdb_join;
-# fn_geo_polygon_measures (r4) -> fn_geo_wkb; fn_json (r1-r4) ->
-# geo_union_agg; fn_string (r1-r4) -> fn_stats_agg; events_tumbling_window
-# (r1-r4) -> events_funnel; text_quality_score (r1-r4) -> text_pii_scrub;
-# dedup_simhash (r4) -> dedup_cluster_canonical; sim_topk_signbucket (r4)
-# -> sim_knn_join.
-# r6 rotation — out (all r5-green) -> in (never scored; 7 existing rows
-# plus 4 from the new TPC-DS-shape corpus): fn_geo_wkb ->
-# fn_geo_polygon_predicates; op_spatial_kdb_join ->
-# op_spatial_polygon_pair_join; geo_union_agg -> geo_union_area_sweep;
-# fn_stats_agg -> fn_kll_quantile; events_funnel ->
-# tpcds_q36_rollup_margin_rank; text_pii_scrub -> text_langid_confusion;
-# dedup_cluster_canonical -> tpcds_q51_cumulative_crossover; sim_knn_join
-# -> tpcds_q01_returns_above_avg; op_window_topn_per_group -> fn_geo_relate;
-# op_lateral -> op_spatial_polygon_join; op_agg_multi_distinct ->
-# tpcds_q95_multi_supplier_returns; fn_geo_bingtile (r1-r5) ->
-# fn_geo_boolean_ops (the r6 geometry-output overlay, never scored);
-# op_intersect_all (r5) -> fn_geo_relate_pairs (never scored; set-op
-# machinery stays scored through tpcds_q14_cross_channel_items, which
-# also rotates in); fn_datetime_patterns (r5) ->
-# tpcds_q14_cross_channel_items (never scored — INTERSECT + semi-join).
-# Families keeping a scored row: window
-# (op_window_frames), events (events_sessionize), text (text_decontaminate),
-# dedup (dedup_exact, dedup_minhash_lsh), sim (sim_topk_bruteforce),
-# subquery (op_subquery_correlated), agg (op_agg_grouping_sets).
-# r7 rotation — ALL 28 non-TPC-H slots were r6-driver-green (VERDICT r6:
-# 50/50 green, 13 first-time), so all 28 yield to rows the driver has
-# NEVER scored (VERDICT r6 next-round #1 asked for >= 10; the r6 geometry
-# builds and long-unscored families are prioritized as listed there).
-# Out (r6-green) -> in (never scored): op_join_semi -> op_pivot;
-# fn_geo_polygon_predicates -> fn_geo_collection; op_spatial_polygon_join
-# -> fn_geo_buffer_line; op_agg_grouping_sets -> fn_geo_buffer_polygon;
-# op_window_frames -> fn_geo_union_array; fn_geo_relate ->
-# fn_geo_relate_mixed; fn_geo_relate_pairs -> fn_geo_relate_lines;
-# op_unnest -> fn_geo_distance_pairs; op_subquery_correlated ->
-# op_subquery_quantified; op_asof_join -> fn_geo_intersection_pieces (NEW
-# r7: mixed-dimension ST_Intersection); op_spatial_polygon_pair_join ->
-# fn_checksum; fn_geo_boolean_ops -> fn_approx_agg; tpcds_q01 ->
-# tpcds_q67_rollup_topn (NEW r7); tpcds_q36 -> tpcds_q27_rollup_multi_avg
-# (NEW r7); tpcds_q51 -> tpcds_q78_channel_ratio_chain (NEW r7);
-# tpcds_q95 -> tpcds_q92_excess_discount (NEW r7); fn_kll_quantile ->
-# fn_theta_setdigest; tpcds_q14 -> tpcds_q10_exists_or_exists (NEW r7);
-# geo_union_area_sweep -> fn_map_agg; fn_array_hof -> events_retention;
-# fn_hll_merge -> events_click_attribution; events_sessionize ->
-# events_tumbling_window_hll (value-checked oracle NEW in r7 — exact
-# columns + tolerance boolean); text_langid_confusion ->
-# text_train_test_split; text_decontaminate -> text_fingerprint;
-# dedup_exact -> dedup_ngram_jaccard; dedup_minhash_lsh ->
-# sim_pairs_blocked; sim_topk_bruteforce -> sim_topk_ivf (value-checked
-# mechanism-boolean oracle NEW in r7); multimodal_features ->
-# multimodal_decode. Family coverage after rotation: geo 9 rows, fn 4,
-# events 3, text 2, tpcds 5, dedup 1, sim 2, multimodal 1, op 2 — every
-# family keeps >= 1 scored row, now through a first-time representative.
-# r8 rotation — ALL 28 non-TPC-H r7 slots were driver-green (VERDICT r7:
-# 50/50 green, 28 first-time), so all 28 yield to rows the driver has
-# NEVER scored (VERDICT r7 next-round #1 asked for >= 20). Exception kept
-# deliberately: fn_approx_agg and sim_pairs_blocked were REWRITTEN this
-# round (the two worst scale curves) — but both were first-time-scored
-# green in r7 and their oracles/plan pins re-verify the rewrites locally,
-# so their slots still rotate; the rewrites stay covered by
-# tests/test_queries_oracle.py at both scales.
-# Out (r7-green) -> in (never scored): fn_geo_collection ->
-# fn_geo_intersection_any (r7 build, VERDICT priority);
-# fn_geo_relate_mixed -> fn_geo_erode_polygon (r7 build, VERDICT
-# priority); fn_geo_relate_lines -> tpcds_q44_best_worst_items;
-# fn_geo_buffer_line -> tpcds_q49_return_ratio_ranks;
-# fn_geo_buffer_polygon -> tpcds_q80_channel_returns_rollup;
-# fn_geo_union_array -> tpcds_q46_cross_nation_orders;
-# fn_geo_distance_pairs -> tpcds_q64_cross_year_items;
-# fn_geo_intersection_pieces -> tpcds_q70_rank_restricted_rollup;
-# op_pivot -> tpcds_q54_revenue_segments; op_subquery_quantified ->
-# tpcds_q45_literal_or_subquery; fn_checksum ->
-# tpcds_q58_equal_share_brands; fn_approx_agg -> tpcds_q61_promo_share;
-# fn_theta_setdigest -> op_unpivot; fn_map_agg -> op_range_join_binned;
-# tpcds_q67 -> tpcds_q25_chained_repurchase_profit (NEW r8);
-# tpcds_q27 -> tpcds_q97_channel_overlap (NEW r8); tpcds_q78 ->
-# tpcds_q69_exclusive_channel_customers (NEW r8); tpcds_q92 -> fn_regex;
-# tpcds_q10 -> fn_histogram; events_retention -> fn_reduce_agg;
-# events_click_attribution -> fn_approx_most_frequent;
-# events_tumbling_window_hll -> events_session_window;
-# text_train_test_split -> events_error_bursts; text_fingerprint ->
-# text_token_stats; dedup_ngram_jaccard -> text_repetition_signals
-# (19x perf fix in r7, never scored); sim_pairs_blocked ->
-# dedup_embedding_cosine; sim_topk_ivf -> sim_label_centroids;
-# multimodal_decode -> multimodal_resize. Family coverage after
-# rotation: tpcds 13 (10 r7-built + 3 NEW r8), geo 2, op 2, fn 4,
-# events 2, text 2, dedup 1, sim 1, multimodal 1 — every family keeps
-# >= 1 scored row, each through a first-time representative.
-# r9 rotation — ALL 28 non-TPC-H r8 slots were driver-green (VERDICT r8:
-# 50/50 green, 28 first-time), so all 28 yield. 26 go to rows the driver
-# has NEVER scored (VERDICT r8 next-round #1 asked for >= 20), prioritized
-# per the verdict: the generator connector (connector_tpchgen_orders, plus
-# the NEW r9 connector_tpchgen_q3 — TPC-H Q3 entirely on the 8-table
-# generator catalog), fn_geo_collection_relate (now with multi-member
-# flattening + verified preconditions), ml_classify/ml_regress (NEWLY
-# value-checked this round — VERDICT ask #4), the ten OLDEST-numbered
-# unscored TPC-DS shapes (q32 swapped in for q12 because q06 and q32 both
-# received the ADVICE r8 decimal-exactification fix and deserve driver
-# validation), the two oldest unscored op rows (op_window_range_interval —
-# the SCALE.md sliding-frame constant's query — and op_skew_salted_join),
-# four long-unscored fn rows, and first-time events/text/multimodal
-# representatives. dedup and sim have NO never-scored rows left (every row
-# driver-green in r1-r8), so each keeps one cheap re-scored keeper
-# (dedup_exact, sim_topk_bruteforce) to satisfy the one-scored-row-per-
-# family invariant.
-# Out (r8-green) -> in: fn_geo_intersection_any -> connector_tpchgen_orders;
-# fn_geo_erode_polygon -> connector_tpchgen_q3; tpcds_q44 -> tpcds_q02;
-# tpcds_q49 -> tpcds_q03; tpcds_q80 -> tpcds_q04; tpcds_q46 -> tpcds_q05;
-# tpcds_q64 -> tpcds_q06; tpcds_q70 -> tpcds_q07; tpcds_q54 -> tpcds_q08;
-# tpcds_q45 -> tpcds_q09; tpcds_q58 -> tpcds_q11; tpcds_q61 -> tpcds_q32;
-# tpcds_q25 -> fn_geo_collection_relate; tpcds_q97 -> ml_classify;
-# tpcds_q69 -> ml_regress; op_unpivot -> op_window_range_interval;
-# op_range_join_binned -> op_skew_salted_join; fn_regex -> fn_math;
-# fn_histogram -> fn_datetime; fn_reduce_agg -> fn_minmax_by;
-# fn_approx_most_frequent -> fn_quantile_rollup; events_session_window ->
-# events_hopping_window; events_error_bursts -> events_top_per_type;
-# text_token_stats -> text_bpe_token_count; text_repetition_signals ->
-# text_sequence_packing; multimodal_resize -> multimodal_video_frames;
-# dedup_embedding_cosine -> dedup_exact (keeper); sim_label_centroids ->
-# sim_topk_bruteforce (keeper). Family coverage after rotation: tpcds 10,
-# connector 2, ml 2, geo 1, op 2, fn 4, events 2, text 2, multimodal 1,
-# dedup 1, sim 1 — every family keeps >= 1 scored row.
-# r10 rotation — ALL 28 non-TPC-H r9 slots were driver-green (VERDICT r9:
-# 50/50 green, 26 first-time), so all 28 yield. 25 go to rows the driver
-# has NEVER scored (VERDICT r9 next-round #1 asked for >= 20), prioritized
-# per the verdict: the four r9-built-never-scored rows
-# (text_bigram_lm_score — now with the r10 posting pre-aggregation,
-# sim_random_projection, text_vocab_coverage, text_zipf_fit), the
-# generator-connector rows (connector_tpchgen_q6 from r9 plus the NEW r10
-# connector_tpchgen_q9 — the widest TPC-H join web on the generator
-# catalog, VERDICT ask #4), the freshly optimized generic-relate
-# dispatcher (fn_geo_relate_any — the r10 prepared-cache + single-parser
-# rework deserves driver validation), the oldest unscored op_*/fn_* rows,
-# the five OLDEST-numbered unscored TPC-DS shapes, and first-time
-# events/geo representatives. dedup, ml, and multimodal have NO
-# never-scored rows left (every row driver-green in r1-r9), so each keeps
-# one cheap re-scored keeper (dedup_exact, ml_classify, multimodal_decode)
-# to satisfy the one-scored-row-per-family invariant.
-# Out (r9-green) -> in: connector_tpchgen_orders -> connector_tpchgen_q6;
-# connector_tpchgen_q3 -> connector_tpchgen_q9 (NEW r10); ml_regress ->
-# text_bigram_lm_score; fn_geo_collection_relate -> fn_geo_relate_any;
-# tpcds_q02 -> tpcds_q12; tpcds_q03 -> tpcds_q13; tpcds_q04 -> tpcds_q15;
-# tpcds_q05 -> tpcds_q16; tpcds_q06 -> tpcds_q17; tpcds_q07 ->
-# sim_random_projection; tpcds_q08 -> text_vocab_coverage; tpcds_q09 ->
-# text_zipf_fit; tpcds_q11 -> events_json_props; tpcds_q32 ->
-# geo_convex_hull_agg; op_window_range_interval -> op_subquery_scalar;
-# op_skew_salted_join -> op_cte_reuse; fn_math -> op_join_using;
-# fn_datetime -> op_join_natural; fn_minmax_by -> op_window_ignore_nulls;
-# fn_quantile_rollup -> fn_bitwise; events_hopping_window ->
-# fn_conditional; events_top_per_type -> fn_url; text_bpe_token_count ->
-# fn_map; text_sequence_packing -> fn_binary_hash; multimodal_video_frames
-# -> fn_geo_accessors; sim_topk_bruteforce -> multimodal_decode (keeper);
-# dedup_exact stays (keeper); ml_classify stays (keeper). Family coverage
-# after rotation: tpcds 5, connector 2, text 3, geo 3, op 5, fn 5,
-# events 1, sim 1, dedup 1, ml 1, multimodal 1 — every family keeps
-# >= 1 scored row.
-# r11 rotation — ALL 28 non-TPC-H r10 slots were driver-green (VERDICT
-# r10: 50/50 green, 25 first-time), so all 28 yield. 26 go to rows the
-# driver has NEVER scored (VERDICT r10 next-round #1 asked for >= 25),
-# prioritized per the verdict: the three r10-built-never-scored rows
-# (text_bm25_retrieval, text_hashed_nb_classifier, sim_int8_quantization),
-# the two NEW r11 generator-catalog shapes (connector_tpchgen_q1 pure-agg
-# pushdown + connector_tpchgen_q18 aggregated-HAVING semi-join — VERDICT
-# ask #2), the oldest never-scored op_*/fn_* rows, two never-scored geo
-# rows, two more never-scored text-pipeline rows, and the five
-# OLDEST-numbered never-scored TPC-DS shapes (q17/q18/q19/q20/q21). To
-# fund 26 first-time slots alongside the 4 family keepers, two TPC-H rows
-# rotate out for one round (tpch_q2, tpch_q11 — both driver-green in all
-# of r1-r10 and still oracle-green locally; TPC-H keeps 20 scored rows).
-# dedup, ml, multimodal, and events have NO never-scored rows left (every
-# row driver-green in r1-r10), so each keeps one cheap re-scored keeper
-# (dedup_exact, ml_classify, multimodal_decode, events_sessionize) to
-# satisfy the one-scored-row-per-family invariant.
-# Out (r10-green) -> in: tpch_q2 -> connector_tpchgen_q1; tpch_q11 ->
-# connector_tpchgen_q18; connector_tpchgen_q6 -> text_bm25_retrieval;
-# connector_tpchgen_q9 -> text_hashed_nb_classifier;
-# connector_filelog_clicks -> sim_int8_quantization; text_bigram_lm_score
-# -> text_boilerplate_strip; sim_random_projection -> text_chunk_overlap;
-# text_vocab_coverage -> fn_geo_from_text; text_zipf_fit ->
-# fn_geo_point_distance; fn_geo_relate_any -> op_values; fn_geo_accessors
-# -> op_row_type; geo_convex_hull_agg -> op_case_conditional;
-# op_subquery_scalar -> op_unnest_map; op_cte_reuse -> op_assign_unique_id;
-# op_join_using -> op_sample_bernoulli (gates strengthened r11);
-# op_join_natural -> fn_array_agg_ordered; op_window_ignore_nulls ->
-# fn_minmax_n; fn_bitwise -> fn_multimap; fn_conditional -> fn_ngrams;
-# fn_url -> fn_time; fn_map -> fn_ipaddress; fn_binary_hash -> tpcds_q17;
-# tpcds_q12 -> tpcds_q18; tpcds_q13 -> tpcds_q19; tpcds_q15 -> tpcds_q20;
-# tpcds_q16 -> tpcds_q21; events_json_props -> events_sessionize (keeper);
-# dedup_exact, ml_classify, multimodal_decode stay (keepers). Family
-# coverage after rotation: tpch 20, tpcds 5, connector 2, text 4, geo 2,
-# op 6, fn 6, sim 1, events 1, dedup 1, ml 1, multimodal 1 — every family
-# keeps >= 1 scored row.
-# Late-r11 amendment: the three operators BUILT this round (BPE merge
-# training, PQ codebook, PQ ADC search) go straight into the head so r11
-# does not recreate the built-but-never-scored debt VERDICT r10 flagged;
-# four more TPC-H rows (q4/q5/q12/q14 — driver-green 10-for-10) fund
-# the slots (ml_auc_rank joins them), leaving TPC-H with 16 scored rows
-# this round. First-time count: 30.
-# r12 rotation — ALL 30 first-time r11 slots were driver-green (VERDICT
-# r11: 50/50 green), so the non-keeper slots yield. 37 go to rows the
-# driver has NEVER scored (VERDICT r11 next-round #1 asked for >= 30),
-# prioritized per the verdict: the three NEW r12 builds (generator q5
-# region-gated six-way join + generator q21 EXISTS/NOT-EXISTS anti-join
-# web — ask #3; sim_ivfpq_search composed IVF-PQ — ask #5), the two
-# never-scored op_* rows, the ENTIRE fn_geo_* never-scored long tail
-# (16 rows, the oldest unscored family), the two never-scored text rows,
-# nine of the twelve never-scored fn rows (fn_beta_endian_hrs,
-# fn_presto_compat, fn_entropy wait for r13), and the five OLDEST-
-# numbered never-scored TPC-DS shapes (q22/q23/q24/q26/q28). TPC-H keeps
-# 9 scored rows, deliberately including q2/q11/q15 — the staged-artifact
-# consumers — so the r12 staging rework (durable mode + sf_dir-scoped
-# views) gets driver-level revalidation the round it shipped. events,
-# dedup, ml, multimodal keep one re-scored keeper each (no never-scored
-# rows left in those families). After r12 the never-scored pool is
-# 89 - 33 = 56 (tpcds 52, fn 3, text 0, op 0, geo 0).
-# r13 rotation — ALL 37 first-time r12 slots were driver-green (VERDICT
-# r12: 50/50 green), so the non-keeper slots yield. 38 go to rows the
-# driver has NEVER scored (VERDICT r12 next-round #2 asked for >= 30,
-# newest debt first): the NEW r13 build (sim_ivf_partition_probe — the
-# cell-partitioned IVF index write path, ask #6, scored the round it
-# ships), dedup_shared_span (built r12, reworked this round with the
-# stop-gram df cap — ask #3), ALL 15 never-scored generator-catalog
-# shapes (the corpus-completeness claim gets its hard signal), the three
-# remaining never-scored fn rows (fn_beta_endian_hrs, fn_presto_compat,
-# fn_entropy), and the 18 OLDEST-numbered never-scored TPC-DS shapes
-# (q29-q47; q48/q50/q52/q53 wait for r14 — their slots fund the four
-# later-r13 builds dedup_incremental_delta, sim_ivf_recall,
-# sim_ivf_index_upsert, and dedup_incremental_minhash, honoring the
-# new-operators-never-wait rule). TPC-H keeps 6 scored rows
-# (q1/q3/q6/q9/q18/q21 — all driver-green 10+ rounds; q3 revalidates the
-# broadcast-join path). events, text, dedup*, sim*, ml, multimodal, op,
-# geo keep one scored row each (dedup and sim through their first-time
-# rows; the others via cheap re-scored keepers). After r13 the
-# never-scored pool is 71 - 33 = 38 (all tpcds; the +5 new registry rows
-# are scored the round they were built).
-# r14 rotation — 49 of 50 r13 slots were driver-green (VERDICT r13: the
-# one red, fn_presto_compat, was a harness-shape break, now fixed by
-# serializing its array column + the registry hashability gate). The
-# non-keeper slots yield to the ENTIRE remaining never-scored backlog
-# (VERDICT r13 next-round #3 asked the backlog be exhausted): all 38
-# never-scored tpcds shapes (q48-q99), the re-shaped fn_presto_compat
-# (ask #1 — scored until green), and the NEW r14 build sim_ivf_compaction
-# (the ANN lifecycle's compaction decision, ask #6 — new operators never
-# wait). Every one of the 39 debt rows was preflighted at sf0.1 with the
-# full-value oracle before entering the head (the q65 tie-break trap —
-# verify skill). TPC-H keeps 2 cheap rows (q1 the flagship, q6 the
-# pushdown pin); connector/events/text/dedup/ml/multimodal/op/geo keep one
-# cheap re-scored keeper each; sim is covered by the first-time
-# compaction row and fn by fn_presto_compat. After r14 the never-scored
-# pool is 0 (registry-growth adjusted: +1 new row, scored this round) —
-# cumulative driver-green would reach 345/346.
-# r15 rotation — STALENESS POLICY (VERDICT r14 next-round #1). The
-# never-scored backlog is exhausted (346/346 cumulative driver-green after
-# r14), so from r15 on the 50 slots are allocated by STALENESS x CHURN:
-# (1) new operators built this round enter the head immediately (the
-# new-operators-never-wait rule, unchanged); (2) remaining slots go to the
-# rows with the OLDEST last-driver-score, tie-broken toward rows whose
-# implementing module changed since that score (churn) — concretely this
-# round: fn_geo_boolean_ops (REWRITTEN r14 on an r6 score — the poster
-# case) and the other r<=6-scored geo rows riding the r14
-# geo_queries/polygon_overlay work, the dedup closure rows riding the
-# r13/r14 cc.py rework (dedup_cluster_canonical r5, dedup_minhash_lsh r6),
-# then strictly oldest-first; (3) every family keeps >= 1 scored row —
-# when a family has no stale row, its keeper is its stalest row (tpcds ->
-# tpcds_q01 r6, multimodal -> multimodal_features r6, ml -> ml_regress r9,
-# connector -> connector_tpchgen_orders r9), so keepers also retire
-# staleness instead of re-scoring fresh rows. tpch keeps only the q1
-# flagship this round (every tpch row is r10+-green) to fund stale slots.
-# This head: 47 of 50 slots are re-scores of rows last driver-scored
-# r9 or earlier — the entire r1-r4 tail (op_unnest_ordinality r1, all 19
-# r2 rows, the 3 r3 join rows, all 6 r4 rows) plus the r5/r6 verdict-named
-# set; the other 3 are the flagship and the two NEW r15 builds
-# (dedup_semantic, dedup_semantic_incremental, sim_ivf_delete,
-# dedup_canonical_best — funded by the slots of op_agg_multi_distinct,
-# fn_datetime_patterns, and fn_stats_agg, which wait with the other r5
-# rows for r16). Corrected totals: 45 of 50 slots are stale re-scores;
-# after r15 the oldest remaining last-score is r5 (12 rows).
-# r16 rotation — CHURN FIRST (VERDICT r15 next-round #2), then staleness.
-# (1) The 8 queries REWRITTEN in the r15 optimization session shipped on
-# local-suite evidence only (the r15 head spent its slots on the r1-r4
-# staleness tail); the repo's own staleness x churn policy makes them head
-# r16: tpcds_q78/q04/q97/q74/q51, text_hashed_nb_classifier,
-# dedup_incremental_delta (dedup_semantic_incremental was in the r15 head
-# and is already driver-green on the rewritten form). (2) dedup_semantic
-# and dedup_canonical_best re-score because their staging changed
-# post-build (VERDICT r15 what's-wrong #1). (3) Queries churned THIS
-# round: tpcds_q36 (int-keyed pre-aggregate), sim_ivf_compaction (trigger
-# census folded into the consuming jobs), and the cc.py pointer-jumping
-# consumers dedup_cluster_canonical + dedup_minhash_lsh (both r15-green,
-# but the closure operator they exercise changed). (4) Staleness: the
-# ENTIRE remaining r5 pool (9 rows) and r6 pool (13 rows beyond
-# q36/q51 above), then 11 of the 27 r7 rows — the three events rows (the
-# family's stalest), both sim rows, dedup_ngram_jaccard, the four tpcds
-# shapes, fn_approx_agg; the other 16 r7 rows (fn_checksum, the six
-# fn_geo_* builds, fn_map_agg, fn_theta_setdigest, op_pivot,
-# op_subquery_quantified, text_fingerprint, text_train_test_split) wait
-# for r17. (5) Family keepers where no stale row covers the family:
-# ml_auc_rank (r11), multimodal_resize (r8), connector_filelog_clicks
-# (r10) — each the family's stalest row, so keepers retire staleness too.
-# tpch keeps only the q1 flagship (every tpch row is r10+-green).
-DRIVER_SCORED_HEAD: tuple[str, ...] = (
-    # Flagship
-    "tpch_q1",
-    # Churn: the r15 rewrites without an r15 driver score
-    "tpcds_q78_channel_ratio_chain", "tpcds_q04_triple_channel_growth",
-    "tpcds_q97_channel_overlap", "tpcds_q74_min_ratio_growth_gate",
-    "tpcds_q51_cumulative_crossover", "text_hashed_nb_classifier",
-    "dedup_incremental_delta",
-    # Churn: staging changed post-build (r15 what's-wrong #1)
-    "dedup_semantic", "dedup_canonical_best",
-    # Churn: rewritten this round (r16)
-    "tpcds_q36_rollup_margin_rank", "sim_ivf_compaction",
-    # Churn: cc.py pointer jumping (r16) — closure consumers
-    "dedup_cluster_canonical", "dedup_minhash_lsh",
-    # Staleness: the entire remaining r5 pool
-    "fn_datetime_patterns", "fn_geo_bingtile", "fn_geo_wkb",
-    "fn_stats_agg", "op_agg_multi_distinct", "op_intersect_all",
-    "op_lateral", "op_spatial_kdb_join", "op_window_topn_per_group",
-    # Staleness: the remaining r6 pool
-    "fn_array_hof", "fn_hll_merge", "fn_kll_quantile",
-    "op_agg_grouping_sets", "op_asof_join", "op_join_semi",
-    "op_subquery_correlated", "op_unnest", "op_window_frames",
-    "text_decontaminate", "text_langid_confusion",
-    "tpcds_q14_cross_channel_items", "tpcds_q95_multi_supplier_returns",
-    # Staleness: 11 r7 rows (events/sim family-stalest included)
-    "events_click_attribution", "events_retention",
-    "events_tumbling_window_hll", "sim_pairs_blocked", "sim_topk_ivf",
-    "dedup_ngram_jaccard", "tpcds_q10_exists_or_exists",
-    "tpcds_q27_rollup_multi_avg", "tpcds_q67_rollup_topn",
-    "tpcds_q92_excess_discount", "fn_approx_agg",
-    # Family keepers = the family's stalest row (retires staleness too)
-    "ml_auc_rank", "multimodal_resize", "connector_filelog_clicks",
-)
 
 
 def all_queries() -> dict[str, Query]:
@@ -378,12 +28,7 @@ def all_queries() -> dict[str, Query]:
     from . import ml_queries  # noqa: F401
     from . import connector_queries  # noqa: F401
 
-    missing = [n for n in DRIVER_SCORED_HEAD if n not in REGISTRY]
-    if missing:  # a rename must update the head list, loudly
-        raise KeyError(f"DRIVER_SCORED_HEAD names not registered: {missing}")
-    head = {n: REGISTRY[n] for n in DRIVER_SCORED_HEAD}
-    head.update((n, q) for n, q in REGISTRY.items() if n not in head)
-    return head
+    return dict(REGISTRY)
 
 
 __all__ = ["REGISTRY", "Query", "query", "all_queries"]

@@ -103,19 +103,10 @@ def build_session(
         .config("spark.driver.memory", default_driver_memory())
         .config("spark.ui.enabled", "false")
         # Whole-stage-codegen class cache (static conf, default 100
-        # entries). A long-lived query service compiles each distinct plan
-        # once and reuses it; with ~350 registered queries (several codegen
-        # units each) the default cache cycles completely between repeat
-        # executions, so every re-run pays full Janino recompilation — the
-        # r15 packed-codebook revert traced an isolated 1.3x win that
-        # LOST in full-set context to exactly this thrash. Sized for the
-        # registry (not the core count — scale-independent); generated
-        # classes are small, bounded by the entry cap. Parameterized for
-        # deployments with bigger/smaller plan working sets.
-        .config(
-            "spark.sql.codegen.cache.maxEntries",
-            os.environ.get("SPARK_GRAFT_CODEGEN_CACHE", "5000"),
-        )
+        # entries). Sized for the ~350-query registry, several codegen units
+        # each: at 100 the cache cycles between repeat runs of a plan and
+        # every re-run pays full Janino recompilation.
+        .config("spark.sql.codegen.cache.maxEntries", "5000")
         # Moderate static threshold: the planner must never broadcast a
         # pruned *fact* table on size-estimate optimism (at 100 TB that is a
         # driver OOM); AQE upgrades genuinely-small sides to broadcast at

@@ -17,7 +17,7 @@ import sys
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
-from lyft_presto_spark.queries import DRIVER_SCORED_HEAD, all_queries  # noqa: E402
+from lyft_presto_spark.queries import all_queries  # noqa: E402
 
 HEADER = """\
 # QUERIES — the registered operator surface ({n} queries, {n_oracle} oracle-checked)
@@ -27,15 +27,13 @@ Rendered by `tools/render_queries.py` from `lyft_presto_spark.queries`
 ``(spark, sf_dir) -> DataFrame`` exposed through ``__spark_entry__.queries()``;
 **oracle** = has an equivalent DuckDB SQL checked by the driver at sf0.01 and
 by `tests/test_queries_oracle.py` locally (rows-only entries are the
-deliberately nondeterministic tail). **head** = in the driver-scored head-50
-(`DRIVER_SCORED_HEAD` — one representative per family under the driver's
-50-row budget).
+deliberately nondeterministic tail).
 
 Per-family counts (rendered — the registry is the source of truth):
 {family_counts}
 
-| # | Query | Oracle | Head | Tags | What it proves |
-|---|---|---|---|---|---|
+| # | Query | Oracle | Tags | What it proves |
+|---|---|---|---|---|
 """
 
 
@@ -47,7 +45,6 @@ def _family_order(name: str) -> tuple:
 
 def render() -> str:
     qs = all_queries()
-    head = set(DRIVER_SCORED_HEAD)
     rows = []
     for i, name in enumerate(sorted(qs, key=_family_order), 1):
         q = qs[name]
@@ -56,7 +53,7 @@ def render() -> str:
             doc = doc[:177] + "..."
         rows.append(
             f"| {i} | `{name}` | {'yes' if q.oracle else 'rows-only'} | "
-            f"{'yes' if name in head else ''} | {', '.join(q.tags)} | {doc} |\n"
+            f"{', '.join(q.tags)} | {doc} |\n"
         )
     n_oracle = sum(1 for q in qs.values() if q.oracle)
     fam_counts: dict[str, int] = {}
