@@ -11,6 +11,12 @@ assignment is a map-side transform; search reads only the probed cells —
 with the table written partitioned by ``cell`` it is partition-pruned I/O,
 ~nprobe/k of the data.
 
+Build-once/probe-many: sim_topk_ivf publishes the index with
+``staging.publish_once`` at ``staging.artifact_dir(sf_dir, ...)``, so it
+lives under the staging root (``SPARK_GRAFT_STAGING_DIR``) at a path keyed
+by a fingerprint of the input files: a regenerated ``embeddings.parquet``
+misses the old index and rebuilds it.
+
 Iterative training is not SQL-expressible, so queries built on this are
 rows-only entries for the driver's oracle (the recall test in
 tests/test_ivf.py is the correctness check instead).
@@ -60,30 +66,6 @@ def read_ivf_index(spark, path: str) -> tuple[DataFrame, list[list[float]]]:
     with open(os.path.join(path, "_centroids.json")) as f:
         centroids = json.load(f)
     return spark.read.parquet(path), centroids
-
-
-def ensure_ivf_index(
-    spark, embeddings: DataFrame, key: str, k: int = 16, base_dir: str | None = None
-) -> tuple[DataFrame, list[list[float]]]:
-    """Open the persisted index for ``key``, building it on first use.
-
-    The index location is deterministic per (key, k) so repeated query
-    invocations — and repeated bench runs — probe the same artifact instead
-    of re-running KMeans. Deployments own the artifact lifecycle by passing
-    ``base_dir`` or setting ``SPARK_GRAFT_IVF_DIR`` (e.g. a durable object
-    store path); the temp-dir default serves the bench contract only
-    (VERDICT r3 blemish #3).
-    """
-    import hashlib
-    import os
-    import tempfile
-
-    base = base_dir or os.environ.get("SPARK_GRAFT_IVF_DIR") or tempfile.gettempdir()
-    digest = hashlib.md5(f"{key}|{k}".encode()).hexdigest()[:12]
-    path = os.path.join(base, f"ivf_index_{digest}")
-    if not os.path.exists(os.path.join(path, "_centroids.json")):
-        write_ivf_index(embeddings, path, k=k)
-    return read_ivf_index(spark, path)
 
 
 def _cos(a: list[float], b: list[float]) -> float:

@@ -25,20 +25,19 @@ from pyspark.sql import SparkSession
 
 ROUND = 6
 
-_UDFS_REGISTERED: set[str] = set()
-
 
 def register_vector_udfs(spark: SparkSession) -> None:
     """Register ``cosine_sim_v(a, b) -> double`` (Arrow-batched, numpy).
 
-    Idempotent per session (keyed by applicationId so a recycled id() of a
-    stopped session never skips registration); queries call this before
+    Idempotent per session (``session_memo``); queries call this before
     emitting SQL that uses the vectorized cosine.
     """
-    from ..session import session_key
+    from .staging import session_memo
 
-    if session_key(spark) in _UDFS_REGISTERED:
-        return
+    session_memo(spark, ("register_vector_udfs",), lambda: _register_vector_udfs(spark))
+
+
+def _register_vector_udfs(spark: SparkSession) -> bool:
     import numpy as np
     import pandas as pd
     from pyspark.sql.functions import pandas_udf
@@ -59,7 +58,7 @@ def register_vector_udfs(spark: SparkSession) -> None:
         return pd.Series(out)
 
     spark.udf.register("cosine_sim_v", cosine_sim_v)
-    _UDFS_REGISTERED.add(session_key(spark))
+    return True
 
 
 def dot(a: str, b: str, dialect: str) -> str:

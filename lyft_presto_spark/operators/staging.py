@@ -1,17 +1,23 @@
-"""Managed lifetimes for persisted intermediate artifacts.
+"""Build-once artifacts: the one module that knows how an artifact is built
+once, on disk or in a session.
 
-Several queries stage an intermediate once and reuse it within (and across)
+- ``publish_once(final, write)`` at ``artifact_dir(sf_dir, name, version)``
+  for artifacts on disk: ``write(stage)`` fills a hidden sibling directory
+  and one atomic rename commits it (the reference's TableWriterNode/
+  TableFinishNode). Used by table-mode ``staged()``, both IVF indexes
+  (queries/similarity_queries.py), the streaming ANN ingest sink and
+  tools/scale_layout_bench.py's derived layouts.
+- ``session_memo(spark, key, build)`` for values that live in a session:
+  resolved fixture tables (``session.load_table``), fitted ML models,
+  prepared geometry Column trees, learned spatial partitionings, the
+  filelog topic, and once-per-session UDF/data-source registrations.
+
+``staged()`` shares session_memo's get-or-create over its own store,
+``_STAGED``, whose entries own releasable storage. Several queries stage an intermediate once and reuse it within (and across)
 calls — TPC-H q11's supply aggregate feeds the main agg and the HAVING scalar
 subquery; minhash/simhash signatures feed banding plus both sides of the
 candidate self-join. Spark inlines CTEs, so without caching those would
 recompute per consumer.
-
-Round 2 persisted these inline per call: every repeat call re-persisted the
-same logical plan ("Asked to cache already cached data" warnings) and nothing
-ever unpersisted, so a long-lived session (the driver's sweep, a real service)
-leaked cached partitions until executor eviction. This module makes the
-lifetime explicit, the same posture as ``operators/ivf.py``'s build-once /
-probe-many index:
 
 - ``staged(spark, sf_dir, name, build)``: get-or-create a staged DataFrame
   keyed by (session, sf_dir, name). Exactly one staged copy per artifact per
@@ -21,12 +27,13 @@ probe-many index:
   temp view whose name embeds a digest of ``sf_dir`` — two concurrent
   callers at different scale dirs can never bind a query to the wrong
   scale's artifact (ADVICE r11).
-- ``release_staged(spark=None)``: drop all artifacts (or one session's) and
-  free their storage. Benches/tests/services call this at pass or teardown
-  boundaries. For checkpoint-staged artifacts this unpersists the underlying
-  checkpointed RDD (``Dataset.unpersist`` is a cache-manager no-op for a
-  LogicalRDD leaf — ADVICE r11), so blocks are freed immediately, not at
-  eventual ContextCleaner GC.
+- ``release_staged(spark=None)``: drop all staged artifacts (or one
+  session's) and free their storage. Benches/tests/services call this at
+  pass or teardown boundaries. For checkpoint-staged artifacts this
+  unpersists the underlying checkpointed RDD (``Dataset.unpersist`` is a
+  cache-manager no-op for a LogicalRDD leaf — ADVICE r11), so blocks are
+  freed immediately, not at eventual ContextCleaner GC. Memos are not
+  dropped: they hold no storage of their own.
 
 Two staging mechanisms, selected by ``SPARK_GRAFT_STAGING``:
 
@@ -42,13 +49,12 @@ Two staging mechanisms, selected by ``SPARK_GRAFT_STAGING``:
   is single-JVM-safe ONLY: lineage is cut, so on a real cluster an executor
   loss makes the blocks unrecoverable and fails the job.
 - ``table``: the durable mode a multi-node 100 TB deployment uses
-  (SCALE.md). The artifact is written once as parquet under
-  ``SPARK_GRAFT_STAGING_DIR`` (write to a unique stage dir, then one atomic
-  directory rename — the loser of a cross-process race reads the winner's
-  table) and read back as a plain file-relation leaf. Same
-  leaf-not-lineage property, plus durability: blocks are HDFS/S3 files, an
-  executor loss re-reads them, and a NEW session (or process) finds the
-  artifact on disk and skips the build entirely.
+  (SCALE.md). The artifact is published once as parquet under
+  ``SPARK_GRAFT_STAGING_DIR`` (``publish_once`` at ``artifact_dir``) and
+  read back as a plain file-relation leaf. Same leaf-not-lineage property,
+  plus durability: blocks are HDFS/S3 files, an executor loss re-reads
+  them, and a NEW session (or process) finds the artifact on disk and
+  skips the build entirely.
 
 Reference analog: the reference materializes reused subplans via
 CommonSubqueryRewriter/cte materialization rather than re-executing them; the
@@ -65,8 +71,11 @@ import threading
 import uuid
 from collections.abc import Callable
 from dataclasses import dataclass
+from typing import TypeVar
 
 from pyspark.sql import DataFrame, SparkSession
+
+T = TypeVar("T")
 
 
 @dataclass
@@ -80,20 +89,55 @@ class _Entry:
 _StageKey = tuple[str, str, str, str, str]
 
 _STAGED: dict[_StageKey, _Entry] = {}
+# session_memo's store; its 2-tuple keys never equal a 5-tuple _STAGED key.
+_MEMO: dict[tuple[str, tuple], object] = {}
 # _LOCK guards the maps only and is never held across build(): builds of
 # unrelated artifacts (different names/sessions) must not serialize behind
-# one slow plan construction, and a build that re-enters staged() for a
-# *different* artifact must not deadlock (ADVICE r3). Same-key callers block
-# on each other via a per-key lock so a race can't stage twice and leak
-# the losing copy until session end.
+# one slow plan construction, and a build that re-enters for a *different*
+# artifact must not deadlock (ADVICE r3). Same-key callers block on each
+# other via a per-key lock so a race can't build twice and leak the losing
+# copy until session end.
 _LOCK = threading.Lock()
-_KEY_LOCKS: dict[_StageKey, threading.Lock] = {}
+_KEY_LOCKS: dict[tuple, threading.Lock] = {}
 
 
-def _session_key(spark: SparkSession) -> str:
-    from ..session import session_key
+def _get_or_create(store: dict, key: tuple, build: Callable[[], T]) -> T:
+    value = store.get(key)  # hit path: one dict lookup, no lock
+    if value is not None:
+        return value
+    with _LOCK:
+        value = store.get(key)  # double-checked: loser of the race reuses
+        if value is not None:
+            return value
+        key_lock = _KEY_LOCKS.setdefault(key, threading.Lock())
+    with key_lock:  # only same-key callers wait; build() runs outside _LOCK
+        value = store.get(key)
+        if value is None:
+            value = build()
+            with _LOCK:
+                store[key] = value
+    return value
 
-    return session_key(spark)
+
+def session_key(spark: SparkSession) -> str:
+    """Stable identity for a live session (survives id() reuse across stops)."""
+    return spark.sparkContext.applicationId
+
+
+def session_memo(spark: SparkSession, key: tuple, build: Callable[[], T]) -> T:
+    """Get-or-create the value ``build()`` once per (live session, ``key``).
+
+    ``key`` is a tuple that starts with the calling site's name, followed by
+    whatever else the value depends on (e.g. the scale dir). The session
+    part of the key is its applicationId, stable and unique per
+    SparkContext, not ``id(spark)``: a stopped session's id() can be
+    recycled by the allocator, and a new session would then be served the
+    old one's DataFrames, Columns or registrations. ``build`` runs at most
+    once per key (concurrent callers of the same key wait for it; other keys
+    never do) and must not return None. ``release_staged`` does not drop
+    memos.
+    """
+    return _get_or_create(_MEMO, (session_key(spark), key), build)
 
 
 def staging_mode() -> str:
@@ -105,7 +149,7 @@ def staging_mode() -> str:
 
 
 def staging_root() -> str:
-    """Directory holding table-mode artifacts (cross-session, cross-process)."""
+    """Directory holding durable artifacts (cross-session, cross-process)."""
     return os.environ.get(
         "SPARK_GRAFT_STAGING_DIR",
         os.path.join(tempfile.gettempdir(), "lyft_presto_spark_staging"),
@@ -120,7 +164,7 @@ def dir_digest(sf_dir: str) -> str:
 def content_fingerprint(sf_dir: str) -> str:
     """Digest of the scale dir's data files' (relpath, size, mtime).
 
-    Table-mode artifacts persist across processes; keyed on the path alone,
+    Durable artifacts persist across processes; keyed on the path alone,
     a regenerated source dataset at the same path would silently keep
     serving every later session the stale artifact (ADVICE r12). Folding
     the input files' identity into the artifact path makes a changed input
@@ -142,6 +186,48 @@ def content_fingerprint(sf_dir: str) -> str:
     for rel, size, mtime in sorted(entries):
         h.update(f"{rel}\x00{size}\x00{mtime}\x00".encode())
     return h.hexdigest()[:12]
+
+
+def artifact_dir(sf_dir: str, name: str, version: str) -> str:
+    """Durable location of artifact ``name`` built from ``sf_dir``: a
+    regenerated input (content fingerprint) OR a changed build (``version``)
+    misses the stale artifact and rebuilds (ADVICE r12). Stale dirs are
+    reclaimed by purge_staged_tables()."""
+    return os.path.join(
+        staging_root(),
+        f"{dir_digest(sf_dir)}-{content_fingerprint(sf_dir)}",
+        f"{name}@v{version}",
+    )
+
+
+def publish_once(final: str, write: Callable[[str], object]) -> bool:
+    """Publish the directory ``final`` once; True when this call published.
+
+    ``write(stage)`` fills ``stage``, a hidden sibling of ``final``
+    (``.<basename>.stage-<uuid>``, ignored by partition discovery), and must
+    leave a ``_SUCCESS`` marker there, as every Spark file write does. One
+    atomic rename then publishes it: os.rename onto a non-empty directory
+    fails on POSIX, so exactly one process wins a race, and the loser drops
+    its stage. A failed write removes its stage before re-raising.
+    """
+    if os.path.exists(os.path.join(final, "_SUCCESS")):
+        return False
+    parent, base = os.path.split(final)
+    stage = os.path.join(parent, f".{base}.stage-{uuid.uuid4().hex}")
+    os.makedirs(parent, exist_ok=True)
+    try:
+        write(stage)
+    except BaseException:
+        shutil.rmtree(stage, ignore_errors=True)
+        raise
+    try:
+        os.rename(stage, final)
+    except OSError:
+        shutil.rmtree(stage, ignore_errors=True)
+        if not os.path.exists(os.path.join(final, "_SUCCESS")):
+            raise
+        return False  # lost the race: the winner's directory is the artifact
+    return True
 
 
 def _stage_local(build: Callable[[], DataFrame]) -> _Entry:
@@ -176,37 +262,11 @@ def _stage_table(
     build: Callable[[], DataFrame],
     version: str,
 ) -> _Entry:
-    # The artifact path folds in (a) the scale-dir path digest, (b) a
-    # fingerprint of the scale dir's data files, and (c) the caller's
-    # build-version token: a regenerated input OR a changed build misses
-    # the stale on-disk artifact and rebuilds (ADVICE r12). Stale
-    # fingerprint dirs are dead weight, reclaimed by purge_staged_tables().
-    final = os.path.join(
-        staging_root(),
-        f"{dir_digest(sf_dir)}-{content_fingerprint(sf_dir)}",
-        f"{name}@v{version}",
-    )
-    if not os.path.exists(os.path.join(final, "_SUCCESS")):
-        # Build into a unique stage dir, then one atomic directory rename.
-        # os.rename onto an existing directory fails on POSIX, so exactly
-        # one process wins a cross-process race; the loser discards its
-        # stage dir and reads the winner's table. (On HDFS/S3 the same
-        # protocol is a rename/commit. write_path's table rewrites commit
-        # the same way one level up: a new version directory, then one
-        # catalog repoint.)
-        stage = f"{final}.__stage_{uuid.uuid4().hex}"
-        os.makedirs(os.path.dirname(final), exist_ok=True)
-        build().write.mode("errorifexists").parquet(stage)
-        try:
-            os.rename(stage, final)
-        except OSError:
-            if not os.path.exists(os.path.join(final, "_SUCCESS")):
-                raise  # lost the race to a non-table? surface it
-            shutil.rmtree(stage, ignore_errors=True)
-    df = spark.read.parquet(final)
+    final = artifact_dir(sf_dir, name, version)
+    publish_once(final, lambda stage: build().write.mode("errorifexists").parquet(stage))
     # Durable artifacts outlive the session by design: release only drops
     # the in-memory handle. purge_staged_tables() deletes the files.
-    return _Entry(df=df, release=lambda: None)
+    return _Entry(df=spark.read.parquet(final), release=lambda: None)
 
 
 def staged(
@@ -227,25 +287,14 @@ def staged(
     # mid-session must re-stage under the new mechanism, never silently
     # serve artifacts staged under the other one (ADVICE r12).
     mode = staging_mode()
-    key = (_session_key(spark), os.path.abspath(sf_dir), name, mode, version)
-    entry = _STAGED.get(key)
-    if entry is not None:
-        return entry.df
-    with _LOCK:
-        entry = _STAGED.get(key)  # double-checked: loser of the race reuses
-        if entry is not None:
-            return entry.df
-        key_lock = _KEY_LOCKS.setdefault(key, threading.Lock())
-    with key_lock:  # only same-key callers wait; build() runs outside _LOCK
-        entry = _STAGED.get(key)
-        if entry is None:
-            if mode == "table":
-                entry = _stage_table(spark, sf_dir, name, build, version)
-            else:
-                entry = _stage_local(build)
-            with _LOCK:
-                _STAGED[key] = entry
-    return entry.df
+    key = (session_key(spark), os.path.abspath(sf_dir), name, mode, version)
+
+    def stage() -> _Entry:
+        if mode == "table":
+            return _stage_table(spark, sf_dir, name, build, version)
+        return _stage_local(build)
+
+    return _get_or_create(_STAGED, key, stage).df
 
 
 def staged_view(
@@ -275,11 +324,11 @@ def release_staged(spark: SparkSession | None = None) -> int:
     With ``spark`` given, only that session's artifacts are dropped; with
     None, everything. Checkpoint-staged artifacts have their RDD blocks
     unpersisted immediately; table-staged artifacts keep their files (use
-    ``purge_staged_tables`` to delete those).
+    ``purge_staged_tables`` to delete those). ``session_memo`` values stay.
     """
     with _LOCK:
         if spark is not None:
-            sk = _session_key(spark)
+            sk = session_key(spark)
             keys = [k for k in _STAGED if k[0] == sk]
         else:
             keys = list(_STAGED)
@@ -292,5 +341,5 @@ def release_staged(spark: SparkSession | None = None) -> int:
 
 
 def purge_staged_tables() -> None:
-    """Delete all table-mode artifact files under the staging root."""
+    """Delete all durable artifact files under the staging root."""
     shutil.rmtree(staging_root(), ignore_errors=True)

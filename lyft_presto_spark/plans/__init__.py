@@ -14,7 +14,7 @@ from .inspect import (
     assert_no_cartesian,
     assert_pushed_filters,
     assert_read_schema_pruned,
-    construction_seconds,
+    construction_round_trips,
     count_exchanges,
     formatted_plan,
 )
@@ -26,5 +26,5 @@ __all__ = [
     "assert_no_cartesian",
     "assert_broadcast_join",
     "assert_read_schema_pruned",
-    "construction_seconds",
+    "construction_round_trips",
 ]

@@ -98,26 +98,39 @@ def assert_broadcast_join(df: DataFrame, expect: bool = True) -> None:
         raise AssertionError(f"broadcast join expected={expect}, plan has={has}")
 
 
-def construction_seconds(build, attempts: int = 2) -> float:
-    """Min wall-clock seconds to CONSTRUCT (not execute) a DataFrame.
+def construction_round_trips(build, attempts: int = 2) -> int:
+    """Min Py4J round trips to CONSTRUCT (not execute) a DataFrame.
 
     Pins the py4j plan-construction tax (VERDICT r14 #2): every Column
     operator is a Python->JVM round trip, so a large hand-built expression
     tree costs driver seconds before a single task runs —
     fn_geo_boolean_ops spent 1.4 s/run there until r14 re-emitted the same
-    algebra as selectExpr strings (~0.25 s). Construction is deterministic,
-    so the MIN across attempts is the right statistic: it discards ambient
-    load spikes, and for queries that stage artifacts or do bounded driver
-    fetches during construction, the first attempt warms the staging so
-    later attempts measure warm construction — the per-run cost a caller
-    actually pays.
+    algebra as selectExpr strings (~0.25 s). Counting the commands this
+    thread sends to the JVM measures that tax with no clock, so CPU
+    contention cannot move it. The first attempt may stage artifacts or
+    fill session memos, so the MIN over attempts is the warm per-run cost.
     """
-    import time
+    import threading
 
-    best = float("inf")
-    for _ in range(max(attempts, 1)):
-        t0 = time.perf_counter()
-        df = build()
-        best = min(best, time.perf_counter() - t0)
-        assert df is not None
-    return best
+    from py4j.clientserver import ClientServerConnection
+
+    send = ClientServerConnection.send_command
+    me = threading.get_ident()
+    sent = 0
+
+    def counting_send(conn, command):
+        nonlocal sent
+        if threading.get_ident() == me:
+            sent += 1
+        return send(conn, command)
+
+    counts = []
+    ClientServerConnection.send_command = counting_send
+    try:
+        for _ in range(max(attempts, 1)):
+            before = sent
+            assert build() is not None
+            counts.append(sent - before)
+    finally:
+        ClientServerConnection.send_command = send
+    return min(counts)

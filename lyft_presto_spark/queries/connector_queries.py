@@ -1530,8 +1530,6 @@ GROUP BY 1
 ORDER BY etype
 """
 
-_FLOG_TOPICS: dict[tuple[str, str], str] = {}
-
 
 def _flog_topic_dir(spark: SparkSession) -> str:
     """Materialize the synthetic topic once per session: 10k json records
@@ -1540,12 +1538,10 @@ def _flog_topic_dir(spark: SparkSession) -> str:
     import json as _json
     import tempfile
 
-    from ..session import session_key
+    from ..operators.staging import session_memo
     from ..sources.filelog_datasource import write_segments
 
-    key = (session_key(spark), "clicks")
-    path = _FLOG_TOPICS.get(key)
-    if path is None:
+    def build() -> str:
         path = tempfile.mkdtemp(prefix="filelog_clicks_")
         records = [
             (
@@ -1562,8 +1558,9 @@ def _flog_topic_dir(spark: SparkSession) -> str:
             for i in range(_FLOG_ROWS)
         ]
         write_segments(path, records, segment_records=1024)
-        _FLOG_TOPICS[key] = path
-    return path
+        return path
+
+    return session_memo(spark, ("filelog_clicks_topic",), build)
 
 
 @query(

@@ -28,6 +28,15 @@ Scale notes (100 TB):
 - Antimeridian wrap is not handled (a zone straddling lon 180 misses
   neighbors across the wrap) — same clip behavior as the reference's
   bing_tiles_around at the map edge.
+
+Prepared Column trees: the geometry rows build LARGE Column trees
+(unrolled edge-pair scans, the WKT parser, DE-9IM dispatchers), and the
+py4j construction tax for those trees is 0.5-2 s PER CALL, often more than
+the query's own execution at bench scale. Every tree is a pure unresolved
+expression over fixture column names, so each query builds its trees once
+per session with ``session_memo(spark, (<query name>,), build)`` — the
+prepared-statement posture the reference gets for free from its Java
+expression IR.
 """
 
 from __future__ import annotations
@@ -38,6 +47,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..functions import geo as G
+from ..operators.staging import session_memo
 from .registry import query, spread, sql_over, t
 
 ZOOM = 12
@@ -816,15 +826,6 @@ ORDER BY z.zone_id
 """
 
 
-# Learned-partitioning memo: a spatial partitioning is a build-once
-# artifact (the reference computes spatial_partitioning once and feeds the
-# serialized KdbTree to every join); re-learning on every query call would
-# charge the sample collect to each bench rep. Keyed like the view-mount
-# memo — by applicationId + sf_dir, so a new session or a different scale
-# factor relearns. Deterministic sample -> identical tree either way.
-_KDB_MEMO: dict[tuple[str, str], object] = {}
-
-
 @query(
     "op_spatial_kdb_join",
     oracle=_KDB_ORACLE,
@@ -843,7 +844,6 @@ _KDB_MEMO: dict[tuple[str, str], object] = {}
 )
 def op_spatial_kdb_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     from ..operators.spatial_partition import learn_partitioning
-    from ..session import session_key
 
     pts = sql_over(spark, sf_dir, _POINTS, ("customer",))
     zones = sql_over(spark, sf_dir, _ZONES, ("nation",)).select(
@@ -860,9 +860,14 @@ def op_spatial_kdb_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     # smallest fixture (sf0.001, 150 points) — a single-leaf tree would make
     # leaf_id a literal and Catalyst would fold the equi-join into the cross
     # product the no-cartesian pin forbids.
-    memo_key = (session_key(spark), sf_dir)
-    memo = _KDB_MEMO.get(memo_key)
-    if memo is None:
+    #
+    # A spatial partitioning is a build-once artifact (the reference
+    # computes spatial_partitioning once and feeds the serialized KdbTree to
+    # every join); re-learning on every query call would charge the sample
+    # collect to each bench rep. Memoized per (session, sf_dir), so a new
+    # session or a different scale factor relearns. Deterministic sample ->
+    # identical tree either way.
+    def learn() -> tuple:
         part = learn_partitioning(
             pts,
             "lon",
@@ -875,14 +880,14 @@ def op_spatial_kdb_join(spark: SparkSession, sf_dir: str) -> DataFrame:
         # Memoize the COMPILED Column expressions too, not just the tree:
         # building the when-chain + literal leaf array costs hundreds of
         # py4j round trips per call; a Column is a reusable expression tree.
-        memo = (
+        return (
             part.leaf_id_expr(F.col("lon"), F.col("lat")),
             part.covering_leaf_ids_expr(
                 F.col("xmin"), F.col("ymin"), F.col("xmax"), F.col("ymax")
             ),
         )
-        _KDB_MEMO[memo_key] = memo
-    leaf_col, cover_col = memo
+
+    leaf_col, cover_col = session_memo(spark, ("op_spatial_kdb_join", sf_dir), learn)
     p = pts.withColumn("leaf_id", leaf_col)
     z = zones.withColumn("leaf_id", F.explode(cover_col))
     joined = z.join(p, "leaf_id").where(
@@ -1377,8 +1382,8 @@ def fn_geo_simple_ring(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
 
     # the simplicity/ring scans are indexed edge-pair trees — session-prepared
-    simple_c, ring_c, crossings_c, cx, cy, nc = prepared_cols(
-        spark, "fn_geo_simple_ring", build
+    simple_c, ring_c, crossings_c, cx, cy, nc = session_memo(
+        spark, ("fn_geo_simple_ring",), build
     )
     staged = src.select("c_custkey", simple_c, ring_c, crossings_c)
     return staged.select(
@@ -1445,7 +1450,7 @@ def fn_geo_line_touches(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
 
     # the touches predicates are edge-pair scan trees — session-prepared
-    vt, ct, ci = prepared_cols(spark, "fn_geo_line_touches", build)
+    vt, ct, ci = session_memo(spark, ("fn_geo_line_touches",), build)
     return src.select("c_custkey", vt, ct, ci).orderBy("c_custkey")
 
 
@@ -1613,8 +1618,8 @@ def fn_geo_multipolygon(spark: SparkSession, sf_dir: str) -> DataFrame:
     # as a named column keeps ONE copy in the plan instead of ~10
     # (CollapseProject leaves non-cheap multiply-referenced aliases alone,
     # SPARK-36718; same discipline as fn_geo_relate). The trees themselves
-    # are session-prepared (prepared_cols).
-    wkt_c, mp_c, *measures = prepared_cols(spark, "fn_geo_multipolygon", build)
+    # are session-prepared (session_memo).
+    wkt_c, mp_c, *measures = session_memo(spark, ("fn_geo_multipolygon",), build)
     staged = src.select("c_custkey", F.col("s"), F.col("t"), wkt_c, mp_c)
     return staged.select("c_custkey", *measures).orderBy("c_custkey")
 
@@ -1788,9 +1793,9 @@ def fn_geo_validity(spark: SparkSession, sf_dir: str) -> DataFrame:
     # expression, and the is_valid twin is reason-IS-NULL — computing both
     # from one staged column halves the plan (CollapseProject keeps
     # non-cheap multiply-referenced aliases, SPARK-36718). The reason trees
-    # themselves are session-prepared (prepared_cols): their py4j
+    # themselves are session-prepared (session_memo): their py4j
     # construction cost exceeded the query's execution.
-    ring_r, poly_r, line_r = prepared_cols(spark, "fn_geo_validity", build)
+    ring_r, poly_r, line_r = session_memo(spark, ("fn_geo_validity",), build)
     staged = src.select("c_custkey", ring_r, poly_r, line_r)
     return staged.select(
         "c_custkey",
@@ -2030,9 +2035,9 @@ def fn_geo_relate(spark: SparkSession, sf_dir: str) -> DataFrame:
     # interpreted evaluation; staged, every layer codegens, and each
     # st_relate_matches references ONE copy of the matrix (CollapseProject
     # leaves non-cheap multiply-referenced aliases alone, SPARK-36718).
-    # The trees are session-prepared (prepared_cols).
-    n_dims, dim_cols, de9im_c, *measures = prepared_cols(
-        spark, "fn_geo_relate", build
+    # The trees are session-prepared (session_memo).
+    n_dims, dim_cols, de9im_c, *measures = session_memo(
+        spark, ("fn_geo_relate",), build
     )
     dims_staged = src.select("c_custkey", *dim_cols)
     staged = dims_staged.select("c_custkey", de9im_c)
@@ -2245,41 +2250,9 @@ ORDER BY c_custkey
 """
 
 
-# Generic prepared-Column cache (r10, generalizing the r9 witness cache
-# below): the geometry rows build LARGE Column trees — unrolled edge-pair
-# scans, the WKT parser, DE-9IM dispatchers — and the py4j construction tax
-# for those trees is 0.5-2 s PER CALL, often more than the query's own
-# execution at bench scale. Every tree is a pure unresolved expression over
-# fixture column names, so it is reusable across calls within a session —
-# the prepared-statement posture the reference gets for free from its Java
-# expression IR. Keyed by (session, query) so a new session re-prepares.
-_PREPARED_COLS: dict[tuple[str, str], tuple] = {}
-
-
-def prepared_cols(spark: SparkSession, name: str, build) -> tuple:
-    from ..session import session_key
-
-    key = (session_key(spark), name)
-    got = _PREPARED_COLS.get(key)
-    if got is None:
-        got = _PREPARED_COLS[key] = tuple(build())
-    return got
-
-
-# Prepared-expression cache for the polygon-predicate witnesses: building
-# these Column trees costs ~4.6 s of py4j round-trips PER CALL (measured —
-# more than the query's execution), and the trees are pure unresolved
-# expressions over the column names (ra, rb, kind, cab, cba), so they are
-# reusable across calls within a session — the prepared-statement posture.
-_PRED_WITNESSES: dict[str, tuple] = {}
-
-
-def _poly_pred_witnesses(spark: SparkSession) -> tuple:
-    from ..session import session_key
-
-    key = session_key(spark)
-    if key in _PRED_WITNESSES:
-        return _PRED_WITNESSES[key]
+def _poly_pred_witnesses() -> tuple:
+    """The polygon-predicate witness trees (~4.6 s of py4j round trips to
+    build, measured): prepared once per session by the caller."""
 
     def ring_of(*pts: tuple[float, float]) -> F.Column:
         return F.array(
@@ -2300,7 +2273,7 @@ def _poly_pred_witnesses(spark: SparkSession) -> tuple:
         .otherwise(square(0, 0, 4, cw=True))
     )
     ra, rb = F.col("ra"), F.col("rb")
-    witnesses = (
+    return (
         a,
         b,
         G.st_covers_polygon(ra, rb),
@@ -2310,8 +2283,6 @@ def _poly_pred_witnesses(spark: SparkSession) -> tuple:
             ra, rb, covers=(F.col("cab"), F.col("cba"))
         ),
     )
-    _PRED_WITNESSES[key] = witnesses
-    return witnesses
 
 
 @query(
@@ -2331,7 +2302,9 @@ def _poly_pred_witnesses(spark: SparkSession) -> tuple:
 )
 def fn_geo_polygon_predicates(spark: SparkSession, sf_dir: str) -> DataFrame:
     src = sql_over(spark, sf_dir, _POLY_PRED_SRC, ("customer",))
-    a, b, cab, cba, bnd, ii = _poly_pred_witnesses(spark)
+    a, b, cab, cba, bnd, ii = session_memo(
+        spark, ("fn_geo_polygon_predicates",), _poly_pred_witnesses
+    )
     # Two staging layers keep the plan tree small: (1) resolve the 6-branch
     # ring when-chain ONCE into columns, so each witness scans a column
     # reference instead of re-expanding the chain per edge pair; (2) stage
@@ -2500,7 +2473,7 @@ def op_spatial_polygon_pair_join(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     # the unrolled separating-axis predicate is the one large tree here —
     # session-prepared like the other geometry rows
-    (sep_axis,) = prepared_cols(spark, "op_spatial_polygon_pair_join", build)
+    (sep_axis,) = session_memo(spark, ("op_spatial_polygon_pair_join",), build)
     hits = cand.where(sep_axis)
     return (
         hits.groupBy("sq_id")
@@ -2988,8 +2961,8 @@ def fn_geo_intersection_pieces(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     # Operand rings + the collection measures are session-prepared: the
     # coll_* accessor trees dominated this row's build cost.
-    ga, gb, pc_col, *measures = prepared_cols(
-        spark, "fn_geo_intersection_pieces", build
+    ga, gb, pc_col, *measures = session_memo(
+        spark, ("fn_geo_intersection_pieces",), build
     )
     pieces = spread(src.select("c_custkey", "kind", ga, gb)).select(
         "c_custkey", "kind", pc_col
@@ -3126,9 +3099,7 @@ def fn_geo_intersection_any(spark: SparkSession, sf_dir: str) -> DataFrame:
     # The parser tree + the dispatch UDF + the pieces measures are all pure
     # unresolved expressions — session-prepared (the py4j construction tax
     # was ~45% of this row's wall).
-    gab, pc_col, *measures = prepared_cols(
-        spark, "fn_geo_intersection_any", build
-    )
+    gab, pc_col, *measures = session_memo(spark, ("fn_geo_intersection_any",), build)
     staged = spread(src.select("c_custkey", "kind", gab)).select(
         "c_custkey", "kind", pc_col
     )
@@ -3551,7 +3522,7 @@ def fn_geo_relate_any(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
 
     # The parser tree dominates this row's build cost — session-prepared.
-    gab, de9im = prepared_cols(spark, "fn_geo_relate_any", build)
+    gab, de9im = session_memo(spark, ("fn_geo_relate_any",), build)
     staged = src.select("c_custkey", "kind", gab)
     return staged.select("c_custkey", "kind", de9im).orderBy("c_custkey")
 
@@ -3787,7 +3758,7 @@ def fn_geo_erode_polygon(spark: SparkSession, sf_dir: str) -> DataFrame:
             .alias("area_ok"),
         )
 
-    er_col, *measures = prepared_cols(spark, "fn_geo_erode_polygon", build)
+    er_col, *measures = session_memo(spark, ("fn_geo_erode_polygon",), build)
     staged = src.repartition(32).select("c_custkey", "kind", er_col)
     return staged.select("c_custkey", "kind", *measures).orderBy("c_custkey")
 
@@ -3928,7 +3899,7 @@ def fn_geo_distance_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     # The three distance trees are unrolled edge-pair min-scans whose py4j
     # construction (~2 s) dominated this row's wall — session-prepared.
-    pd_, ld, pld = prepared_cols(spark, "fn_geo_distance_pairs", build)
+    pd_, ld, pld = session_memo(spark, ("fn_geo_distance_pairs",), build)
     return src.select("c_custkey", pd_, ld, pld).orderBy("c_custkey")
 
 
@@ -4051,8 +4022,8 @@ def fn_geo_collection_relate(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.size(F.col("pc")["points"]).cast("int").alias("n_points"),
         )
 
-    ca, cb, de9im, pc_col, *measures = prepared_cols(
-        spark, "fn_geo_collection_relate", build
+    ca, cb, de9im, pc_col, *measures = session_memo(
+        spark, ("fn_geo_collection_relate",), build
     )
     staged_df = spread(src.select("c_custkey", "kind", ca, cb))
     staged2 = staged_df.select("c_custkey", "kind", de9im, pc_col)

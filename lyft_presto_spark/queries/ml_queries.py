@@ -22,7 +22,7 @@ deterministically. Never raw solver floats, so results stay byte-stable.
 Scale: training is one MLlib job (LBFGS / closed-form WLS over
 treeAggregate partials); scoring is ``model.transform`` — a map-side JVM
 projection with zero shuffle, so the scoring path scales to any corpus the
-scan scales to. Train-once/score-many via operators/ml.cached_model.
+scan scales to. Train-once/score-many via operators/staging.session_memo.
 """
 
 from __future__ import annotations
@@ -31,6 +31,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..operators import ml as M
+from ..operators.staging import session_memo
 from .registry import query, t
 
 # Binary target: sign of the sum of the first 8 embedding dims — linear in
@@ -86,8 +87,8 @@ ORDER BY actual
 )
 def ml_classify(spark: SparkSession, sf_dir: str) -> DataFrame:
     train, test = _cls_split(spark, sf_dir)
-    model = M.cached_model(
-        spark, f"{sf_dir}:ml_classify", lambda: M.learn_classifier(train, "target", "embedding")
+    model = session_memo(
+        spark, ("ml_classify", sf_dir), lambda: M.learn_classifier(train, "target", "embedding")
     )
     scored = M.classify(test, model, "embedding")
     return (
@@ -107,8 +108,8 @@ def ml_confusion_matrix(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The evaluate_classifier_predictions shape "
     (EvaluateClassifierPredictionsAggregation.java) — used by tests."""
     train, test = _cls_split(spark, sf_dir)
-    model = M.cached_model(
-        spark, f"{sf_dir}:ml_classify", lambda: M.learn_classifier(train, "target", "embedding")
+    model = session_memo(
+        spark, ("ml_classify", sf_dir), lambda: M.learn_classifier(train, "target", "embedding")
     )
     scored = M.classify(test, model, "embedding")
     return (
@@ -144,8 +145,8 @@ def ml_regress(spark: SparkSession, sf_dir: str) -> DataFrame:
     base = t(spark, sf_dir, "embeddings").withColumn("target", F.expr(_REG_TARGET))
     train = base.filter("vec_id % 5 != 0")
     test = base.filter("vec_id % 5 = 0")
-    model = M.cached_model(
-        spark, f"{sf_dir}:ml_regress", lambda: M.learn_regressor(train, "target", "embedding")
+    model = session_memo(
+        spark, ("ml_regress", sf_dir), lambda: M.learn_regressor(train, "target", "embedding")
     )
     coefs = model.coefficients.toArray()
     recovered = all(

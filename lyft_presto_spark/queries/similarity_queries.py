@@ -211,6 +211,7 @@ def sim_label_centroids(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 _IVF_CELLS = 16
 _IVF_NPROBE = 4
+_IVF_KMEANS_VERSION = "1"  # bump when the KMeans index layout / training changes
 
 _IVF_ORACLE = f"""
 SELECT CAST({TOP_K} AS INT) AS k,
@@ -237,18 +238,19 @@ SELECT CAST({TOP_K} AS INT) AS k,
     tags=("similarity",),
 )
 def sim_topk_ivf(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from ..operators.ivf import ensure_ivf_index, ivf_topk
+    from ..operators.ivf import ivf_topk, read_ivf_index, write_ivf_index
+    from ..operators.staging import artifact_dir, publish_once
     from .registry import t
 
     S.register_vector_udfs(spark)
     emb = t(spark, sf_dir, "embeddings")
     query_vec = list(emb.filter(f"vec_id = {QUERY_VEC_ID}").collect()[0]["embedding"])
     # Build-once/probe-many: the index is a persisted cell-partitioned table
-    # (rebuilt only when missing); each query is a partition-pruned probe.
-    assigned, centroids = ensure_ivf_index(
-        spark, emb.filter(f"vec_id <> {QUERY_VEC_ID}"), key=f"{sf_dir}:no_query_vec",
-        k=_IVF_CELLS,
-    )
+    # (rebuilt when the input files change); each query is a pruned probe.
+    index = artifact_dir(sf_dir, f"ivf_kmeans_k{_IVF_CELLS}", _IVF_KMEANS_VERSION)
+    train = emb.filter(f"vec_id <> {QUERY_VEC_ID}")
+    publish_once(index, lambda stage: write_ivf_index(train, stage, k=_IVF_CELLS))
+    assigned, centroids = read_ivf_index(spark, index)
     w = Window.orderBy(F.desc("cosine_sim"), "vec_id")
 
     def ranked(df: DataFrame, pre: str) -> DataFrame:
@@ -946,7 +948,7 @@ def sim_ivfpq_search(spark: SparkSession, sf_dir: str) -> DataFrame:
 # write_ivf_index partitionBy("cell") is the MLlib twin). This query pins
 # the whole path with a full-value oracle: build the exact-Lloyd coarse
 # index (the same deterministic training as sim_ivfpq_search), WRITE it as
-# cell-partitioned parquet (write-once: unique stage dir + atomic rename,
+# cell-partitioned parquet (staging.publish_once at staging.artifact_dir:
 # path keyed on the scale dir's content fingerprint), READ it back with a
 # probed-cell predicate that must reach the scan as PartitionFilters
 # (pinned in tests/test_plan_shapes.py), and rank the surviving candidates
@@ -959,38 +961,23 @@ _IVF_IDX_VERSION = "1"  # bump when the index row layout / training changes
 def _ivf_index_write_path(spark: SparkSession, sf_dir: str) -> str:
     """Write-once cell-partitioned parquet IVF index; returns its path.
 
-    Rows are (vec_id, dim, xq) under partition directories c=<cell>. The
-    same unique-stage-dir + atomic-rename protocol as table staging
-    (operators/staging.py:_stage_table) — the loser of a cross-process
+    Rows are (vec_id, dim, xq) under partition directories c=<cell>,
+    published with ``staging.publish_once`` — the loser of a cross-process
     race reads the winner's index; a regenerated scale dir or bumped
     version misses the stale artifact via the path fingerprint.
     """
-    import os
-    import shutil
-    import uuid
+    from ..operators.staging import artifact_dir, publish_once
 
-    from ..operators.staging import content_fingerprint, dir_digest, staging_root
-
-    final = os.path.join(
-        staging_root(),
-        f"{dir_digest(sf_dir)}-{content_fingerprint(sf_dir)}",
-        f"ivf_flat_index@v{_IVF_IDX_VERSION}",
-    )
-    if not os.path.exists(os.path.join(final, "_SUCCESS")):
+    def write(stage: str) -> None:
         v = _ivfpq_staged(spark, sf_dir)
         idx = spark.sql(
             f"SELECT f.vec_id, f.dim, f.xq, cl.c FROM {v['flat']} f "
             f"JOIN {v['cells']} cl ON cl.vec_id = f.vec_id"
         )
-        stage = f"{final}.__stage_{uuid.uuid4().hex}"
-        os.makedirs(os.path.dirname(final), exist_ok=True)
         idx.write.mode("errorifexists").partitionBy("c").parquet(stage)
-        try:
-            os.rename(stage, final)
-        except OSError:
-            if not os.path.exists(os.path.join(final, "_SUCCESS")):
-                raise
-            shutil.rmtree(stage, ignore_errors=True)
+
+    final = artifact_dir(sf_dir, "ivf_flat_index", _IVF_IDX_VERSION)
+    publish_once(final, write)
     return final
 
 
@@ -1380,8 +1367,8 @@ def sim_ivf_index_upsert(spark: SparkSession, sf_dir: str) -> DataFrame:
 #     exact integer sums — no division, no floats).
 #  3. SWAP-READY CENSUS — emit the new (cell, subcell) layout with counts
 #     and vec_id checksums; untouched cells pass through as subcell -1.
-#     The physical swap is the existing atomic-rename publish
-#     (operators/staging.py / _ivf_index_write_path) — what this query
+#     The physical swap is staging.publish_once, the same atomic-rename
+#     publish _ivf_index_write_path uses — what this query
 #     pins is the decision + re-assignment algebra, bit-replayable in the
 #     oracle. At 100 TB: census is one tiny agg over the cell column,
 #     re-clustering reads only overgrown partitions (the same

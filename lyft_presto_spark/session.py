@@ -22,6 +22,8 @@ import os
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql.functions import col, expr
 
+from .operators.staging import session_key, session_memo  # noqa: F401 (re-exported)
+
 TABLES = (
     "region",
     "nation",
@@ -130,27 +132,19 @@ def table_path(sf_dir: str, name: str) -> str:
     return os.path.join(sf_dir, f"{name}.parquet")
 
 
-# Resolved-table cache: a catalog resolves a table's schema once per session,
-# not once per query (MetadataManager caches table handles the same way).
-# spark.read.parquet costs ~100 ms of driver-side footer/schema work per call;
-# without this cache every query charges that per referenced table. Keyed by
-# the session's applicationId (stable, unique per SparkContext) so a fresh
-# session re-resolves — id(spark) of a stopped session can be recycled by the
-# allocator and would silently serve stale DataFrames. Fixture parquet is
-# immutable for a session's lifetime, so no invalidation path.
-_TABLE_CACHE: dict[tuple[str, str, str], DataFrame] = {}
-
-
-def session_key(spark: SparkSession) -> str:
-    """Stable identity for a live session (survives id() reuse across stops)."""
-    return spark.sparkContext.applicationId
-
-
 def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
-    key = (session_key(spark), os.path.abspath(sf_dir), name)
-    cached = _TABLE_CACHE.get(key)
-    if cached is not None:
-        return cached
+    """Resolve a fixture table once per session, as a catalog caches table
+    handles (MetadataManager): spark.read.parquet costs ~100 ms of driver
+    footer/schema work per call. Fixture parquet is immutable for a
+    session's lifetime, so there is no invalidation path."""
+    return session_memo(
+        spark,
+        ("load_table", os.path.abspath(sf_dir), name),
+        lambda: _read_table(spark, sf_dir, name),
+    )
+
+
+def _read_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     # Defensive: a caller-provided session (e.g. the driver's) may not carry
     # build_session's configs. These are runtime SQL confs — set them here so
     # any session reads fixtures identically: nanosAsLong makes a
@@ -176,7 +170,6 @@ def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
             df = df.withColumn("ts", expr("timestamp_micros(ts div 1000)"))
         elif kind == "timestamp_ntz":
             df = df.withColumn(field.name, col(field.name).cast("timestamp"))
-    _TABLE_CACHE[key] = df
     return df
 
 

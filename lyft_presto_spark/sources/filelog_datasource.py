@@ -274,14 +274,12 @@ class FileLogDataSource(DataSource):
         )
 
 
-_REGISTERED: set[str] = set()
-
-
 def register_filelog(spark) -> None:
-    """Idempotent per session (the tpchgen registration pattern)."""
-    from ..session import session_key
+    """Idempotent per session (``session_memo``)."""
+    from ..operators.staging import session_memo
 
-    if session_key(spark) in _REGISTERED:
-        return
-    spark.dataSource.register(FileLogDataSource)
-    _REGISTERED.add(session_key(spark))
+    def register() -> bool:
+        spark.dataSource.register(FileLogDataSource)
+        return True
+
+    session_memo(spark, ("register_filelog",), register)

@@ -476,22 +476,21 @@ class TpchGenDataSource(DataSource):
         )
 
 
-_REGISTERED: set[str] = set()
-
-
 def register_tpchgen(spark) -> None:
-    """Idempotent per session (the functions/presto.py registry pattern)."""
-    from ..session import session_key
+    """Idempotent per session (``session_memo``)."""
+    from ..operators.staging import session_memo
 
-    if session_key(spark) in _REGISTERED:
-        return
-    spark.dataSource.register(TpchGenDataSource)
-    # pushFilters() is an SQLSTATE 38000 error unless Python-source filter
-    # pushdown is on; the repo session sets it at build time (session.py:72)
-    # but the DRIVER hands us its own session — a runtime conf, so set it
-    # here so the connector is self-sufficient in any session.
-    spark.conf.set("spark.sql.python.filterPushdown.enabled", "true")
-    _REGISTERED.add(session_key(spark))
+    def register() -> bool:
+        spark.dataSource.register(TpchGenDataSource)
+        # pushFilters() is an SQLSTATE 38000 error unless Python-source filter
+        # pushdown is on; the repo session sets it at build time
+        # (session.py:72) but the DRIVER hands us its own session — a runtime
+        # conf, so set it here so the connector is self-sufficient in any
+        # session.
+        spark.conf.set("spark.sql.python.filterPushdown.enabled", "true")
+        return True
+
+    session_memo(spark, ("register_tpchgen",), register)
 
 
 # --- streaming read path ------------------------------------------------------

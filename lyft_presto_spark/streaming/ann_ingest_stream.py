@@ -9,14 +9,12 @@ Per micro-batch: quantize (the same fix-point xq = round((x+4)*1e6) as the
 batch PQ/IVF algebra), one distance round against the BROADCAST codebook
 (K*D rows — tiny at any corpus scale), the exact cross-multiplied rational
 argmin (bit-identical to ``_pq_assign_cte``'s fold — no floats, no
-division), then an append published with the staging module's
-atomic-rename protocol: each batch lands as a ``batch=<id>`` partition
-directory, staged under a dot-prefixed dir (invisible to partition
-discovery) and renamed into place. A foreachBatch RETRY of an
-already-published batch id is a no-op — the _SUCCESS check makes the sink
-idempotent, which together with the checkpoint's offset log is the
-exactly-once contract (same mechanics as the write path's atomic publish,
-operators/staging.py).
+division), then an append published with ``staging.publish_once``: each
+batch lands as a ``batch=<id>`` partition directory, staged under a
+dot-prefixed dir (invisible to partition discovery) and renamed into
+place. A foreachBatch RETRY of an already-published batch id is a no-op —
+the _SUCCESS check makes the sink idempotent, which together with the
+checkpoint's offset log is the exactly-once contract.
 
 Scale notes (100 TB): the codebook broadcast is K*D rows regardless of
 corpus size; coding work is batch-proportional (the upsert invariant); the
@@ -29,11 +27,11 @@ compaction decision (sim_ivf_compaction) — streaming never retrains.
 from __future__ import annotations
 
 import os
-import shutil
-import uuid
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
+
+from ..operators.staging import publish_once
 
 # The same exact-integer algebra as the batch side (similarity_queries):
 # fix-point quantization and the cross-multiplied rational argmin.
@@ -99,21 +97,10 @@ def publish_batch(coded: DataFrame, index_root: str, batch_id: int) -> bool:
     and the rename is within one parent, so readers never observe a
     half-written batch. Returns True when this call published.
     """
-    final = os.path.join(index_root, f"batch={batch_id}")
-    if os.path.exists(os.path.join(final, "_SUCCESS")):
-        return False
-    stage = os.path.join(index_root, f".stage_{batch_id}_{uuid.uuid4().hex}")
-    os.makedirs(index_root, exist_ok=True)
-    coded.write.mode("errorifexists").partitionBy("c").parquet(stage)
-    try:
-        os.rename(stage, final)
-    except OSError:
-        # lost a concurrent-publish race: the winner's batch is the batch
-        if not os.path.exists(os.path.join(final, "_SUCCESS")):
-            raise
-        shutil.rmtree(stage, ignore_errors=True)
-        return False
-    return True
+    return publish_once(
+        os.path.join(index_root, f"batch={batch_id}"),
+        lambda stage: coded.write.mode("errorifexists").partitionBy("c").parquet(stage),
+    )
 
 
 def ann_ingest_query(stream: DataFrame, codebook: DataFrame, index_root: str,

@@ -84,15 +84,19 @@ def test_load_table_pins_utc_on_foreign_sessions(spark, sf_dir):
     every events_* oracle row would silently disagree. load_table must pin
     UTC before normalizing.
     """
-    from lyft_presto_spark.session import _TABLE_CACHE, session_key
+    from lyft_presto_spark.operators.staging import _MEMO
+    from lyft_presto_spark.session import session_key
 
     original = spark.conf.get("spark.sql.session.timeZone")
-    key_prefix = session_key(spark)
+    sk = session_key(spark)
+
+    def forget_tables():
+        for k in [k for k in _MEMO if k[0] == sk and k[1][0] == "load_table"]:
+            del _MEMO[k]
+
     try:
         spark.conf.set("spark.sql.session.timeZone", "America/New_York")
-        # bust the cache so load_table re-reads under the foreign zone
-        for k in [k for k in _TABLE_CACHE if k[0] == key_prefix]:
-            del _TABLE_CACHE[k]
+        forget_tables()  # so load_table re-reads under the foreign zone
         lo = (
             load_table(spark, sf_dir, "events")
             .selectExpr("min(unix_micros(ts)) AS lo")
@@ -108,5 +112,4 @@ def test_load_table_pins_utc_on_foreign_sessions(spark, sf_dir):
         assert spark.conf.get("spark.sql.session.timeZone") == "UTC"  # pinned
     finally:
         spark.conf.set("spark.sql.session.timeZone", original)
-        for k in [k for k in _TABLE_CACHE if k[0] == key_prefix]:
-            del _TABLE_CACHE[k]
+        forget_tables()

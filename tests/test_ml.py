@@ -63,12 +63,13 @@ def test_scoring_path_has_no_python_udf(spark, sf_dir):
     in the scoring plan (the reference scores inside the JVM too; a per-row
     Python UDF would be the 100x-slower wrong shape at scale)."""
     from lyft_presto_spark.operators import ml as M
+    from lyft_presto_spark.operators.staging import session_memo
     from lyft_presto_spark.plans.inspect import formatted_plan
     from lyft_presto_spark.queries.ml_queries import _cls_split
 
     train, test = _cls_split(spark, sf_dir)
-    model = M.cached_model(
-        spark, f"{sf_dir}:ml_classify", lambda: M.learn_classifier(train, "target", "embedding")
+    model = session_memo(
+        spark, ("ml_classify", sf_dir), lambda: M.learn_classifier(train, "target", "embedding")
     )
     plan = formatted_plan(M.classify(test, model, "embedding"))
     assert "BatchEvalPython" not in plan and "ArrowEvalPython" not in plan

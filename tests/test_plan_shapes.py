@@ -793,20 +793,15 @@ def test_dedup_semantic_cell_bucketed_and_canonical(spark, sf_dir):
 
 # --- py4j plan-construction budget (VERDICT r14 #2) ---------------------------
 # Driver-side DataFrame CONSTRUCTION is a real per-run cost: every Column
-# operator is a Python->JVM round trip, so a hand-built expression tree can
-# cost driver seconds before a single task runs (fn_geo_boolean_ops spent
-# 1.4 s/run there until r14 re-emitted the algebra as selectExpr strings,
-# ~0.25 s). This gate pins the contract the same way no-cartesian /
-# exchange budgets / hashability are pinned: every bench headline query
-# must construct within the budget, and a synthetic deep-Column-tree build
-# must trip it. The budget is calibrated against the r15 audit (max warm
-# construction 0.89 s — dedup_semantic, whose closure legitimately runs
-# bounded per-round actions during build; headline median 0.08 s) with
-# ~1.4x headroom, below the 1.4 s offender class it exists to catch.
-# construction_seconds takes the MIN of two attempts, so cold staging on
-# the first attempt and transient load spikes don't false-trip.
+# operator is a Py4J round trip (fn_geo_boolean_ops spent 1.4 s/run there
+# until r14). Every bench headline query must construct within a budget of
+# round trips, and a synthetic deep Column tree must trip it. Counts, unlike
+# timings, do not move under CPU contention. At sf0.001 the headline max is
+# 1457 (op_spatial_polygon_pair_join; median 72) and the control sends
+# 10265; the budget sits near their geometric middle. A session memo that
+# stopped hitting would rebuild its Column trees every call and blow it.
 
-_CONSTRUCTION_BUDGET_S = 1.25
+_CONSTRUCTION_BUDGET = 4000
 
 
 def _headline_names():
@@ -820,18 +815,13 @@ def _headline_names():
 
 @pytest.mark.parametrize("name", _headline_names())
 def test_headline_construction_within_budget(spark, sf_dir, name):
-    from lyft_presto_spark.plans import construction_seconds
+    from lyft_presto_spark.plans import construction_round_trips
 
     q = all_queries()[name]
-    # attempts=3: attempt 1 warms staging, and late in the suite the JVM
-    # carries GC pressure from dozens of prior builds — one extra attempt
-    # keeps a genuine offender caught while a transient pause is discarded
-    # (text_bpe_merge_train false-tripped min-of-2 in the r15 batch run;
-    # its warm steady-state is 0.4 s).
-    secs = construction_seconds(lambda: q.spark(spark, sf_dir), attempts=3)
-    assert secs <= _CONSTRUCTION_BUDGET_S, (
-        f"{name} spends {secs:.2f}s of driver-side plan construction per run "
-        f"(budget {_CONSTRUCTION_BUDGET_S}s) — the py4j Column-tree tax; emit "
+    sent = construction_round_trips(lambda: q.spark(spark, sf_dir), attempts=3)
+    assert sent <= _CONSTRUCTION_BUDGET, (
+        f"{name} sends {sent} Py4J commands to construct its plan per run "
+        f"(budget {_CONSTRUCTION_BUDGET}) — the py4j Column-tree tax; emit "
         f"the algebra as selectExpr/SQL strings instead (BENCHNOTES r14)"
     )
 
@@ -842,7 +832,7 @@ def test_construction_gate_trips_on_deep_column_tree(spark):
     would catch a regrown fn_geo_boolean_ops-class tree."""
     from pyspark.sql import functions as F
 
-    from lyft_presto_spark.plans import construction_seconds
+    from lyft_presto_spark.plans import construction_round_trips
 
     def build():
         df = spark.range(1).selectExpr("id AS x")
@@ -850,10 +840,10 @@ def test_construction_gate_trips_on_deep_column_tree(spark):
             df = df.select((F.col("x") + i).alias("x"))
         return df
 
-    secs = construction_seconds(build, attempts=1)
-    assert secs > _CONSTRUCTION_BUDGET_S, (
-        f"synthetic deep tree built in {secs:.2f}s — the budget no longer "
-        f"discriminates; tighten it or deepen the control"
+    sent = construction_round_trips(build, attempts=1)
+    assert sent > _CONSTRUCTION_BUDGET, (
+        f"synthetic deep tree sent only {sent} Py4J commands — the budget no "
+        f"longer discriminates; tighten it or deepen the control"
     )
 
 

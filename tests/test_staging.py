@@ -396,3 +396,33 @@ def test_table_staged_consumers_stay_oracle_green(spark, sf_dir, tmp_path, monke
             compare_with_oracle(q.spark(spark, sf_dir), q.oracle, sf_dir, name=name)
     finally:
         release_staged()
+
+
+def test_publish_once_leaves_no_stage_after_failure_or_lost_race(spark, tmp_path):
+    """A write whose Spark job fails leaves its stage directory behind
+    (Spark creates it before the job runs): publish_once must remove it and
+    re-raise. The loser of a publish race drops its stage and keeps the
+    winner's rows."""
+    import os
+
+    import pytest
+
+    from lyft_presto_spark.operators.staging import publish_once
+
+    final = str(tmp_path / "artifact")
+
+    def failing(stage):
+        spark.range(10).selectExpr("assert_true(id < 5)").write.parquet(stage)
+
+    with pytest.raises(Exception, match="id < 5"):
+        publish_once(final, failing)
+    assert os.listdir(tmp_path) == []
+
+    def losing(stage):  # another publisher wins while this one writes
+        assert publish_once(final, lambda s: spark.range(2).write.parquet(s)) is True
+        spark.range(5).write.parquet(stage)
+
+    assert publish_once(final, losing) is False
+    assert publish_once(final, failing) is False  # published: write never runs
+    assert os.listdir(tmp_path) == ["artifact"]
+    assert spark.read.parquet(final).count() == 2

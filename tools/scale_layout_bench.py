@@ -37,11 +37,7 @@ import time
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
-from lyft_presto_spark.operators.staging import (  # noqa: E402
-    content_fingerprint,
-    dir_digest,
-    staging_root,
-)
+from lyft_presto_spark.operators.staging import artifact_dir, publish_once  # noqa: E402
 
 SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
 REP = 16  # replication factor: ~9.6M derived lineitem rows at sf0.1
@@ -54,26 +50,18 @@ OUT = os.path.join(
 )
 
 
-def derived_root() -> str:
-    return os.path.join(
-        staging_root(),
-        f"scaledemo-{dir_digest(SF_DIR)}-{content_fingerprint(SF_DIR)}-r{REP}",
-    )
-
-
 def ensure_derived(spark) -> dict[str, str]:
     """Write the two derived lineitem layouts once; return their paths."""
-    root = derived_root()
-    paths = {"rg1": os.path.join(root, "li_rg1"), "rgN": os.path.join(root, "li_rgN")}
     li = spark.read.parquet(os.path.join(SF_DIR, "lineitem.parquet"))
     big = li.selectExpr("*", f"explode(sequence(1, {REP})) AS rep_idx")
-    for layout, path in paths.items():
-        if os.path.exists(os.path.join(path, "_SUCCESS")):
-            continue
-        n = 1 if layout == "rg1" else NPARTS
+    paths = {}
+    for layout, n in (("rg1", 1), ("rgN", NPARTS)):
+        paths[layout] = artifact_dir(SF_DIR, f"scaledemo_li_{layout}_r{REP}", "1")
         # deterministic split key (guide §2.5: never rand()-derived)
-        (big.repartition(n, "l_orderkey", "rep_idx")
-            .write.mode("overwrite").parquet(path))
+        publish_once(
+            paths[layout],
+            lambda stage, n=n: big.repartition(n, "l_orderkey", "rep_idx").write.parquet(stage),
+        )
     return paths
 
 
