@@ -1,13 +1,21 @@
-"""Per-row geometry scalars that need real loops: ST_ConvexHull,
-simplify_geometry.
+"""Per-row geometry scalars: every ``st_*`` here whose published
+algorithm needs a Python loop per row (a hull stack, Douglas-Peucker's
+split, Sutherland-Hodgman, the exact-rational overlay kernels of
+``operators/polygon_overlay.py``). The pure-codegen scalars, which use no
+UDF, live in ``functions/geo.py``.
 
-GeoFunctions.java stConvexHull (:411) and simplifyGeometry (:856) are the
-only planar ``ST_*`` scalars whose published algorithms are inherently
-iterative per row (a hull stack; Douglas-Peucker's recursive split), so
-they live outside ``functions/geo.py`` (pure codegen, zero UDFs) as
-Arrow-batched pandas UDFs — one Python invocation per ~10k-row batch over
-numpy arrays, never row-at-a-time Python in the hot path. The hull math is
-shared with the ``convex_hull_agg`` two-level aggregate
+Each public function is one call to ``_per_row(kernel, return_type,
+*cols)``, the only place where a per-row Python kernel becomes a Spark
+column:
+- one Arrow-batched pandas UDF, so there is one Python call per batch and
+  the kernel loops over the rows of that batch;
+- a struct-typed input reaches the kernel as a dict per row;
+- a kernel exception makes that row NULL and never fails the job (the
+  reference's TryFunction policy, applied once for every kernel);
+- a struct return type is filled from the kernel's dict by the struct's
+  field names.
+
+The hull math is shared with the ``convex_hull_agg`` two-level aggregate
 (``operators/hull.py`` monotone_chain), so the scalar and the aggregate
 agree vertex-for-vertex on exact-integer coordinates.
 
@@ -21,33 +29,92 @@ Semantics vs the reference (DELTAS):
   this twin returns NULL (ANSI-on pipelines degrade per-row). The
   reference delegates to Esri's generalize (Douglas-Peucker); this is the
   published Douglas-Peucker directly, endpoints always kept.
+- Members that are NULL or have a NULL coordinate (producible by the
+  try_cast WKT parsers) are dropped by the hull, simplify and convex-clip
+  kernels instead of raising.
 """
 
 from __future__ import annotations
 
 import math
+from functools import partial
+from typing import Callable
 
 import numpy as np
 import pandas as pd
 from pyspark.sql import Column
 from pyspark.sql import functions as F
 from pyspark.sql.functions import pandas_udf
+from pyspark.sql.types import StructType, _parse_datatype_string
 
 from .hull import monotone_chain
 
-_GEOM_TYPE = "array<struct<x:double,y:double>>"
+_PT_TYPE = "struct<x:double,y:double>"
+_GEOM_TYPE = f"array<{_PT_TYPE}>"
+_POLY_TYPE = f"array<{_GEOM_TYPE}>"
+_MPOLY_TYPE = f"array<{_POLY_TYPE}>"
+_PIECES_TYPE = (
+    f"struct<polys:{_MPOLY_TYPE},lines:array<{_GEOM_TYPE}>,points:{_GEOM_TYPE}>"
+)
+
+
+def _per_row(kernel: Callable, return_type: str, *cols: Column) -> Column:
+    """``kernel(*row_values)`` applied to each row of ``cols`` through one
+    Arrow-batched pandas UDF. A struct-typed input arrives from Arrow as a
+    pandas DataFrame and reaches the kernel as one dict per row. A kernel
+    exception makes that row None. For a struct ``return_type`` the kernel
+    returns a dict, read by the struct's field names.
+
+    NULL-ness note: a struct-returning pandas UDF carries no row-level
+    Arrow validity, so a None row arrives Spark-side as a non-NULL struct
+    with all-NULL fields. Callers that need ``isNull()`` on NULL operands
+    wrap the call in ``F.when(a.isNotNull() & b.isNotNull(), ...)``;
+    consumers detect kernel-exception rows by a NULL field (e.g.
+    ``pieces['polys'].isNull()``).
+
+    The UDF is built at call time: pandas_udf parses its DDL return type
+    against the active session, so a module-level decorator would fail
+    before any session exists."""
+    rtype = _parse_datatype_string(return_type)
+    names = rtype.names if isinstance(rtype, StructType) else None
+
+    @pandas_udf(rtype)
+    def _udf(*s: pd.Series) -> pd.Series:
+        rows = [x.to_dict("records") if isinstance(x, pd.DataFrame) else x for x in s]
+        out = []
+        for args in zip(*rows):
+            try:
+                out.append(kernel(*args))
+            except Exception:
+                out.append(None)  # degrade per-row, never fail the job
+        if names is None:
+            return pd.Series(out, index=s[0].index)
+        return pd.DataFrame(
+            {n: [None if r is None else r[n] for r in out] for n in names},
+            index=s[0].index,
+        )
+
+    return _udf(*cols)
+
+
+def _num(x: Column | float) -> Column:
+    return x if isinstance(x, Column) else F.lit(float(x))
+
+
+def _xy(pts: list) -> list[tuple[float, float]]:
+    """(x, y) of each member, dropping NULL members and members with a
+    NULL coordinate (try_cast parser residue) instead of raising."""
+    return [
+        (p["x"], p["y"])
+        for p in pts
+        if p is not None and p["x"] is not None and p["y"] is not None
+    ]
 
 
 def _hull_one(pts: list) -> list | None:
     if pts is None:
         return None
-    # Drop members with NULL coordinates (producible by the try_cast WKT
-    # parsers) instead of raising: degrade per-row like the nan path.
-    xy = [
-        (p["x"], p["y"])
-        for p in pts
-        if p is not None and p["x"] is not None and p["y"] is not None
-    ]
+    xy = _xy(pts)
     if len(xy) <= 1:
         return [{"x": x, "y": y} for x, y in xy]
     hull = monotone_chain([p[0] for p in xy], [p[1] for p in xy])
@@ -58,15 +125,8 @@ def _hull_one(pts: list) -> list | None:
 def st_convex_hull(points: Column) -> Column:
     """stConvexHull (GeoFunctions.java:411) over ``array<struct<x,y>>``:
     the closed hull cycle (counter-clockwise, collinear boundary points
-    kept — same chain as convex_hull_agg). The UDF is built at call time:
-    pandas_udf parses its DDL return type against the active session, so a
-    module-level decorator would fail before any session exists."""
-
-    @pandas_udf(_GEOM_TYPE)
-    def _hull_udf(col: pd.Series) -> pd.Series:
-        return col.map(_hull_one)
-
-    return _hull_udf(points)
+    kept — same chain as convex_hull_agg)."""
+    return _per_row(_hull_one, _GEOM_TYPE, points)
 
 
 def _dp_keep(xs: np.ndarray, ys: np.ndarray, tol: float) -> np.ndarray:
@@ -99,12 +159,13 @@ def _dp_keep(xs: np.ndarray, ys: np.ndarray, tol: float) -> np.ndarray:
 def _simplify_one(pts: list, tol: float) -> list | None:
     if pts is None or tol is None or math.isnan(tol) or tol < 0:
         return None
-    if tol == 0 or len(pts) <= 2:
+    if tol == 0:
         return pts
-    xs = np.asarray([p["x"] for p in pts], dtype=np.float64)
-    ys = np.asarray([p["y"] for p in pts], dtype=np.float64)
-    keep = _dp_keep(xs, ys, tol)
-    return [p for p, k in zip(pts, keep) if k]
+    xy = _xy(pts)
+    if len(xy) > 2:
+        keep = _dp_keep(*np.asarray(xy, dtype=np.float64).T, tol)
+        xy = [p for p, k in zip(xy, keep) if k]
+    return [{"x": x, "y": y} for x, y in xy]
 
 
 def simplify_geometry(line: Column, tolerance: Column | float) -> Column:
@@ -112,15 +173,8 @@ def simplify_geometry(line: Column, tolerance: Column | float) -> Column:
     given distance tolerance; endpoints always kept, tolerance 0 is the
     identity, negative/NaN tolerance yields NULL (reference throws —
     DELTAS)."""
-
-    @pandas_udf(_GEOM_TYPE)
-    def _simplify_udf(col: pd.Series, tol: pd.Series) -> pd.Series:
-        return pd.Series(
-            [_simplify_one(p, t) for p, t in zip(col, tol)], index=col.index
-        )
-
-    tol = tolerance if isinstance(tolerance, Column) else F.lit(float(tolerance))
-    return _simplify_udf(line, tol.cast("double"))
+    tol = _num(tolerance).cast("double")
+    return _per_row(_simplify_one, _GEOM_TYPE, line, tol)
 
 
 # --- Convex polygon intersection (Sutherland-Hodgman) ----------------------
@@ -142,11 +196,7 @@ def _close(ring: list[tuple[float, float]]) -> list[tuple[float, float]]:
 def _open_ccw(ring: list) -> list[tuple[float, float]]:
     """Struct ring -> open vertex list, counter-clockwise. Members with
     NULL coordinates (try_cast parser residue) are dropped, not raised."""
-    xy = [
-        (p["x"], p["y"])
-        for p in ring
-        if p is not None and p["x"] is not None and p["y"] is not None
-    ]
+    xy = _xy(ring)
     if len(xy) >= 2 and xy[0] == xy[-1]:
         xy = xy[:-1]
     area2 = sum(
@@ -212,14 +262,7 @@ def st_intersection_convex(subject: Column, clip: Column) -> Column:
     """stIntersection (:1019), polygon case with a convex clip ring:
     Sutherland-Hodgman, returning the closed CCW intersection ring (empty
     array when disjoint, NULL on NULL input)."""
-
-    @pandas_udf(_GEOM_TYPE)
-    def _clip_udf(s: pd.Series, c: pd.Series) -> pd.Series:
-        return pd.Series(
-            [_clip_one(a, b) for a, b in zip(s, c)], index=s.index
-        )
-
-    return _clip_udf(subject, clip)
+    return _per_row(_clip_one, _GEOM_TYPE, subject, clip)
 
 
 def st_intersection_area_convex(a: Column, b: Column) -> Column:
@@ -260,23 +303,11 @@ def st_difference_area_convex(a: Column, b: Column) -> Column:
 # polygons (array<array<struct<x,y>>>), output is the MULTIPOLYGON
 # representation (array of holed polygons) — [] when empty, NULL on NULL.
 
-_MPOLY_TYPE = "array<array<array<struct<x:double,y:double>>>>"
-
 
 def _overlay_col(a: Column, b: Column, op: str) -> Column:
     from .polygon_overlay import overlay
 
-    @pandas_udf(_MPOLY_TYPE)
-    def _ov_udf(s: pd.Series, c: pd.Series) -> pd.Series:
-        out = []
-        for x, y in zip(s, c):
-            try:
-                out.append(overlay(x, y, op))
-            except Exception:
-                out.append(None)  # degrade per-row, never fail the job
-        return pd.Series(out, index=s.index)
-
-    return _ov_udf(a, b)
+    return _per_row(partial(overlay, op=op), _MPOLY_TYPE, a, b)
 
 
 def st_intersection_geom(a: Column, b: Column) -> Column:
@@ -286,9 +317,6 @@ def st_intersection_geom(a: Column, b: Column) -> Column:
     return _overlay_col(a, b, "intersection")
 
 
-_LINE_TYPE = "array<struct<x:double,y:double>>"
-
-
 def st_intersection_pieces(a: Column, b: Column) -> Column:
     """stIntersection (:1019) with the Esri-complete mixed-dimension
     semantics: the 2D faces PLUS shared boundary segments of edge-adjacent
@@ -296,36 +324,12 @@ def st_intersection_pieces(a: Column, b: Column) -> Column:
     reference returns as a lower-dimensional geometry or a
     GEOMETRYCOLLECTION. One struct column: ``polys`` (MULTIPOLYGON repr),
     ``lines`` (array of linestrings), ``points`` (array of points); all
-    empty arrays when the operands are disjoint, NULL on NULL input.
-
-    NULL-ness note: a struct-returning pandas UDF carries no row-level
-    Arrow validity, so a None row from the kernel arrives Spark-side as a
-    non-NULL struct with all-NULL fields. The F.when wrap below restores a
-    genuinely NULL struct for NULL operands (so ``pieces.isNull()`` works
-    for consumers); kernel-exception rows remain all-NULL-field structs,
-    which st_pieces_geometry_type / st_collection_of_pieces detect via
-    ``pieces['polys'].isNull()``."""
+    empty arrays when the operands are disjoint, NULL on NULL input (the
+    F.when wrap; see the NULL-ness note on ``_per_row``)."""
     from .polygon_overlay import intersection_pieces
 
-    ret = (
-        f"struct<polys:{_MPOLY_TYPE},lines:array<{_LINE_TYPE}>,"
-        f"points:array<struct<x:double,y:double>>>"
-    )
-
-    @pandas_udf(ret)
-    def _pieces_udf(s: pd.Series, c: pd.Series) -> pd.DataFrame:
-        cols: dict[str, list] = {"polys": [], "lines": [], "points": []}
-        for x, y in zip(s, c):
-            try:
-                r = intersection_pieces(x, y)
-            except Exception:
-                r = None
-            cols["polys"].append(None if r is None else r["polys"])
-            cols["lines"].append(None if r is None else r["lines"])
-            cols["points"].append(None if r is None else r["points"])
-        return pd.DataFrame(cols, index=s.index)
-
-    return F.when(a.isNotNull() & b.isNotNull(), _pieces_udf(a, b))
+    pieces = _per_row(intersection_pieces, _PIECES_TYPE, a, b)
+    return F.when(a.isNotNull() & b.isNotNull(), pieces)
 
 
 def st_union_geom(a: Column, b: Column) -> Column:
@@ -350,26 +354,15 @@ def st_boolean_ops_geom(a: Column, b: Column) -> Column:
     calls would redo the exact-arithmetic edge split 4x."""
     from .polygon_overlay import overlay_all
 
-    ret = (
-        "struct<inter:{m},uni:{m},diff:{m},sym:{m}>".format(m=_MPOLY_TYPE)
+    ret = "struct<inter:{m},uni:{m},diff:{m},sym:{m}>".format(m=_MPOLY_TYPE)
+    ops = {
+        "inter": "intersection", "uni": "union",
+        "diff": "difference", "sym": "symdifference",
+    }
+    return _per_row(
+        lambda x, y: (r := overlay_all(x, y)) and {k: r[op] for k, op in ops.items()},
+        ret, a, b,
     )
-
-    @pandas_udf(ret)
-    def _all_udf(s: pd.Series, c: pd.Series) -> pd.DataFrame:
-        # StructType pandas_udfs return a DataFrame, one column per field
-        cols = {"inter": [], "uni": [], "diff": [], "sym": []}
-        for x, y in zip(s, c):
-            try:
-                r = overlay_all(x, y)
-            except Exception:
-                r = None
-            cols["inter"].append(None if r is None else r["intersection"])
-            cols["uni"].append(None if r is None else r["union"])
-            cols["diff"].append(None if r is None else r["difference"])
-            cols["sym"].append(None if r is None else r["symdifference"])
-        return pd.DataFrame(cols, index=s.index)
-
-    return _all_udf(a, b)
 
 
 def st_relate_polygons(a: Column, b: Column) -> Column:
@@ -379,17 +372,7 @@ def st_relate_polygons(a: Column, b: Column) -> Column:
     codegen st_relate_envelopes (axis-aligned envelope pairs)."""
     from .polygon_overlay import relate_polygons
 
-    @pandas_udf("string")
-    def _rel_udf(s: pd.Series, c: pd.Series) -> pd.Series:
-        out = []
-        for x, y in zip(s, c):
-            try:
-                out.append(relate_polygons(x, y))
-            except Exception:
-                out.append(None)
-        return pd.Series(out, index=s.index)
-
-    return _rel_udf(a, b)
+    return _per_row(relate_polygons, "string", a, b)
 
 
 def st_relate_line_polygon(line: Column, poly: Column) -> Column:
@@ -398,17 +381,7 @@ def st_relate_line_polygon(line: Column, poly: Column) -> Column:
     (polygon_overlay.relate_line_polygon)."""
     from .polygon_overlay import relate_line_polygon
 
-    @pandas_udf("string")
-    def _rel_udf(s: pd.Series, c: pd.Series) -> pd.Series:
-        out = []
-        for x, y in zip(s, c):
-            try:
-                out.append(relate_line_polygon(x, y))
-            except Exception:
-                out.append(None)
-        return pd.Series(out, index=s.index)
-
-    return _rel_udf(line, poly)
+    return _per_row(relate_line_polygon, "string", line, poly)
 
 
 def st_relate_lines(a: Column, b: Column) -> Column:
@@ -416,17 +389,7 @@ def st_relate_lines(a: Column, b: Column) -> Column:
     (polygon_overlay.relate_lines)."""
     from .polygon_overlay import relate_lines
 
-    @pandas_udf("string")
-    def _rel_udf(s: pd.Series, c: pd.Series) -> pd.Series:
-        out = []
-        for x, y in zip(s, c):
-            try:
-                out.append(relate_lines(x, y))
-            except Exception:
-                out.append(None)
-        return pd.Series(out, index=s.index)
-
-    return _rel_udf(a, b)
+    return _per_row(relate_lines, "string", a, b)
 
 
 def st_line_intersection_polygon(line: Column, poly: Column) -> Column:
@@ -435,17 +398,7 @@ def st_line_intersection_polygon(line: Column, poly: Column) -> Column:
     polygon_overlay.clip_line_to_polygon)."""
     from .polygon_overlay import clip_line_to_polygon
 
-    @pandas_udf("array<array<struct<x:double,y:double>>>")
-    def _clip_udf(s: pd.Series, c: pd.Series) -> pd.Series:
-        out = []
-        for x, y in zip(s, c):
-            try:
-                out.append(clip_line_to_polygon(x, y))
-            except Exception:
-                out.append(None)
-        return pd.Series(out, index=s.index)
-
-    return _clip_udf(line, poly)
+    return _per_row(clip_line_to_polygon, _POLY_TYPE, line, poly)
 
 
 def st_relate_any(ga: Column, gb: Column) -> Column:
@@ -462,31 +415,7 @@ def st_relate_any(ga: Column, gb: Column) -> Column:
     still reach it (as the tag string) to return NULL."""
     from .polygon_overlay import relate_any
 
-    def slim(g: Column) -> Column:
-        return F.struct(
-            g["tag"].alias("tag"),
-            g["point"].alias("point"),
-            g["line"].alias("line"),
-            g["polygon"].alias("polygon"),
-        )
-
-    ga, gb = slim(ga), slim(gb)
-
-    @pandas_udf("string")
-    def _rel_udf(s: pd.DataFrame, c: pd.DataFrame) -> pd.Series:
-        # struct-typed INPUTS arrive as pandas DataFrames (one column per
-        # field), not Series of dicts — normalize to row dicts
-        rs = s.to_dict("records") if isinstance(s, pd.DataFrame) else list(s)
-        rc = c.to_dict("records") if isinstance(c, pd.DataFrame) else list(c)
-        out = []
-        for x, y in zip(rs, rc):
-            try:
-                out.append(relate_any(x, y))
-            except Exception:
-                out.append(None)
-        return pd.Series(out)
-
-    return _rel_udf(ga, gb)
+    return _per_row(relate_any, "string", _slim(ga), _slim(gb))
 
 
 def st_erode_polygon(poly: Column, d: Column | float, m: int = 8) -> Column:
@@ -498,18 +427,7 @@ def st_erode_polygon(poly: Column, d: Column | float, m: int = 8) -> Column:
     fully eroded, NULL on NULL input or non-positive distance."""
     from .polygon_overlay import erode_polygon
 
-    @pandas_udf(_MPOLY_TYPE)
-    def _erode_udf(s: pd.Series, dist: pd.Series) -> pd.Series:
-        out = []
-        for x, dv in zip(s, dist):
-            try:
-                out.append(erode_polygon(x, dv, m))
-            except Exception:
-                out.append(None)
-        return pd.Series(out, index=s.index)
-
-    dcol = d if isinstance(d, Column) else F.lit(float(d))
-    return _erode_udf(poly, dcol)
+    return _per_row(partial(erode_polygon, m=m), _MPOLY_TYPE, poly, _num(d))
 
 
 def st_intersection_any(ga: Column, gb: Column) -> Column:
@@ -524,39 +442,12 @@ def st_intersection_any(ga: Column, gb: Column) -> Column:
     NULL (COVERAGE 'Out of scope'). Input structs are slimmed to
     (tag, point, line, polygon) before Arrow (st_relate_any discipline).
     NULL operands yield a genuinely NULL struct via the F.when wrap (see
-    st_intersection_pieces' NULL-ness note)."""
+    the NULL-ness note on ``_per_row``)."""
     from .polygon_overlay import intersection_any
 
-    def slim(g: Column) -> Column:
-        return F.struct(
-            g["tag"].alias("tag"),
-            g["point"].alias("point"),
-            g["line"].alias("line"),
-            g["polygon"].alias("polygon"),
-        )
-
-    ga, gb = slim(ga), slim(gb)
-    ret = (
-        f"struct<polys:{_MPOLY_TYPE},lines:array<{_LINE_TYPE}>,"
-        f"points:array<struct<x:double,y:double>>>"
-    )
-
-    @pandas_udf(ret)
-    def _ia_udf(s: pd.DataFrame, c: pd.DataFrame) -> pd.DataFrame:
-        rs = s.to_dict("records") if isinstance(s, pd.DataFrame) else list(s)
-        rc = c.to_dict("records") if isinstance(c, pd.DataFrame) else list(c)
-        cols: dict[str, list] = {"polys": [], "lines": [], "points": []}
-        for x, y in zip(rs, rc):
-            try:
-                r = intersection_any(x, y)
-            except Exception:
-                r = None
-            cols["polys"].append(None if r is None else r["polys"])
-            cols["lines"].append(None if r is None else r["lines"])
-            cols["points"].append(None if r is None else r["points"])
-        return pd.DataFrame(cols, index=s.index)
-
-    return F.when(ga.isNotNull() & gb.isNotNull(), _ia_udf(ga, gb))
+    ga, gb = _slim(ga), _slim(gb)
+    pieces = _per_row(intersection_any, _PIECES_TYPE, ga, gb)
+    return F.when(ga.isNotNull() & gb.isNotNull(), pieces)
 
 
 def st_buffer_line(line: Column, r: Column | float, m: int = 8) -> Column:
@@ -568,18 +459,8 @@ def st_buffer_line(line: Column, r: Column | float, m: int = 8) -> Column:
     or non-positive radius."""
     from .polygon_overlay import buffer_line
 
-    @pandas_udf("array<array<struct<x:double,y:double>>>")
-    def _buf_udf(s: pd.Series, rad: pd.Series) -> pd.Series:
-        out = []
-        for x, rv in zip(s, rad):
-            try:
-                out.append(buffer_line(x, rv, m))
-            except Exception:
-                out.append(None)
-        return pd.Series(out, index=s.index)
-
-    rc = r if isinstance(r, Column) else F.lit(float(r))
-    return _buf_udf(line, rc.cast("double"))
+    rad = _num(r).cast("double")
+    return _per_row(partial(buffer_line, m=m), _POLY_TYPE, line, rad)
 
 
 def st_buffer_polygon(poly: Column, r: Column | float, m: int = 8) -> Column:
@@ -590,18 +471,8 @@ def st_buffer_polygon(poly: Column, r: Column | float, m: int = 8) -> Column:
     distances use st_erode_polygon (polygon_overlay.erode_polygon)."""
     from .polygon_overlay import buffer_polygon
 
-    @pandas_udf("array<array<struct<x:double,y:double>>>")
-    def _buf_udf(s: pd.Series, rad: pd.Series) -> pd.Series:
-        out = []
-        for x, rv in zip(s, rad):
-            try:
-                out.append(buffer_polygon(x, rv, m))
-            except Exception:
-                out.append(None)
-        return pd.Series(out, index=s.index)
-
-    rc = r if isinstance(r, Column) else F.lit(float(r))
-    return _buf_udf(poly, rc.cast("double"))
+    rad = _num(r).cast("double")
+    return _per_row(partial(buffer_polygon, m=m), _POLY_TYPE, poly, rad)
 
 
 def st_geometry_union_array(geoms: Column) -> Column:
@@ -612,22 +483,13 @@ def st_geometry_union_array(geoms: Column) -> Column:
     contract)."""
     from .polygon_overlay import union_many
 
-    @pandas_udf(_MPOLY_TYPE)
-    def _union_udf(s: pd.Series) -> pd.Series:
-        out = []
-        for x in s:
-            try:
-                out.append(union_many(x))
-            except Exception:
-                out.append(None)
-        return pd.Series(out, index=s.index)
-
-    return _union_udf(geoms)
+    return _per_row(union_many, _MPOLY_TYPE, geoms)
 
 
-_SLIM_PT = "struct<x:double,y:double>"
-_SLIM_LN = f"array<{_SLIM_PT}>"
-_SLIM_PG = f"array<array<{_SLIM_PT}>>"
+def _slim(g) -> Column:
+    """The (tag, point, line, polygon) struct of a tagged geometry union
+    (a struct Column, or a dict of member Columns)."""
+    return F.struct(*(g[f].alias(f) for f in ("tag", "point", "line", "polygon")))
 
 
 def _slim_members(coll: Column) -> Column:
@@ -642,28 +504,19 @@ def _slim_members(coll: Column) -> Column:
     null-propagation — the kernel's NULL-for-unsupported convention."""
 
     def mk(tag, point, line, polygon):
-        return F.struct(
-            tag.alias("tag"),
-            point.alias("point"),
-            line.alias("line"),
-            polygon.alias("polygon"),
+        return _slim(
+            {"tag": F.lit(tag), "point": point, "line": line, "polygon": polygon}
         )
 
-    npt = F.lit(None).cast(_SLIM_PT)
-    nln = F.lit(None).cast(_SLIM_LN)
-    npg = F.lit(None).cast(_SLIM_PG)
+    npt = F.lit(None).cast(_PT_TYPE)
+    nln = F.lit(None).cast(_GEOM_TYPE)
+    npg = F.lit(None).cast(_POLY_TYPE)
 
     def expand(g):
-        simple = F.array(mk(g["tag"], g["point"], g["line"], g["polygon"]))
-        mpts = F.transform(
-            g["multipoint"], lambda p: mk(F.lit("ST_Point"), p, nln, npg)
-        )
-        mlns = F.transform(
-            g["multiline"], lambda ln: mk(F.lit("ST_LineString"), npt, ln, npg)
-        )
-        mpgs = F.transform(
-            g["multipolygon"], lambda pg: mk(F.lit("ST_Polygon"), npt, nln, pg)
-        )
+        simple = F.array(_slim(g))
+        mpts = F.transform(g["multipoint"], lambda p: mk("ST_Point", p, nln, npg))
+        mlns = F.transform(g["multiline"], lambda ln: mk("ST_LineString", npt, ln, npg))
+        mpgs = F.transform(g["multipolygon"], lambda pg: mk("ST_Polygon", npt, nln, pg))
         return (
             F.when(g["tag"] == "ST_MultiPoint", mpts)
             .when(g["tag"] == "ST_MultiLineString", mlns)
@@ -683,19 +536,8 @@ def st_relate_collections(ca: Column, cb: Column) -> Column:
     docstring for the separated-members precondition."""
     from .polygon_overlay import relate_collections
 
-    ca, cb = _slim_members(ca), _slim_members(cb)
-
-    @pandas_udf("string")
-    def _relc_udf(s: pd.Series, c: pd.Series) -> pd.Series:
-        out = []
-        for x, y in zip(s, c):
-            try:
-                out.append(relate_collections(x, y))
-            except Exception:
-                out.append(None)
-        return pd.Series(out, index=s.index)
-
-    return _relc_udf(ca, cb)
+    sa, sb = _slim_members(ca), _slim_members(cb)
+    return _per_row(relate_collections, "string", sa, sb)
 
 
 def st_intersection_collections(ca: Column, cb: Column) -> Column:
@@ -704,27 +546,9 @@ def st_intersection_collections(ca: Column, cb: Column) -> Column:
     parity (the reference throws). Same pieces struct as
     st_intersection_pieces, so st_pieces_geometry_type /
     st_collection_of_pieces compose; NULL operands yield a genuinely NULL
-    struct via the F.when wrap (the st_intersection_pieces NULL-ness
-    note)."""
+    struct via the F.when wrap (the NULL-ness note on ``_per_row``)."""
     from .polygon_overlay import intersection_collections
 
     sa, sb = _slim_members(ca), _slim_members(cb)
-    ret = (
-        f"struct<polys:{_MPOLY_TYPE},lines:array<{_LINE_TYPE}>,"
-        f"points:array<struct<x:double,y:double>>>"
-    )
-
-    @pandas_udf(ret)
-    def _ic_udf(s: pd.Series, c: pd.Series) -> pd.DataFrame:
-        cols: dict[str, list] = {"polys": [], "lines": [], "points": []}
-        for x, y in zip(s, c):
-            try:
-                r = intersection_collections(x, y)
-            except Exception:
-                r = None
-            cols["polys"].append(None if r is None else r["polys"])
-            cols["lines"].append(None if r is None else r["lines"])
-            cols["points"].append(None if r is None else r["points"])
-        return pd.DataFrame(cols, index=s.index)
-
-    return F.when(ca.isNotNull() & cb.isNotNull(), _ic_udf(sa, sb))
+    pieces = _per_row(intersection_collections, _PIECES_TYPE, sa, sb)
+    return F.when(ca.isNotNull() & cb.isNotNull(), pieces)

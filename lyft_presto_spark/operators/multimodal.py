@@ -22,7 +22,7 @@ is the final per-source aggregation of small feature rows).
 
 from __future__ import annotations
 
-from collections.abc import Iterator
+from collections.abc import Callable, Iterator
 
 import pandas as pd
 from pyspark.sql import DataFrame
@@ -272,36 +272,41 @@ def decode_y4m(blob: bytes, frame_stride: int = 1) -> dict:
     }
 
 
+def _map_rows(df: DataFrame, schema: StructType, fn: Callable) -> DataFrame:
+    """``fn(row) -> dict`` over every row of ``df`` (a namedtuple of its
+    columns) as one Arrow-batched mapInPandas stage with output ``schema``."""
+    names = [f.name for f in schema.fields]
+
+    def batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+        for pdf in it:
+            rows = [fn(r) for r in pdf.itertuples(index=False)]
+            yield pd.DataFrame(rows, columns=names)
+
+    return df.mapInPandas(batches, schema=schema)
+
+
 def documents_as_video(documents: DataFrame) -> DataFrame:
     """Synthesize y4m blobs from document columns (Arrow-batched): 8x4 C444,
     least(n_chars, 32) frames, frame f filled with (doc_id%128)+f — every
     decoded property is predictable from (doc_id, n_chars)."""
 
-    def batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in it:
-            rows = []
-            for mid, n_chars in zip(pdf["doc_id"], pdf["n_chars"]):
-                mid, n_chars = int(mid), int(n_chars)
-                n_frames = max(min(n_chars, 32), 1)
-                blob = encode_y4m(8, 4, [(mid % 128) + f for f in range(n_frames)])
-                rows.append({"media_id": mid, "kind": "video", "blob": blob, "source": "synth"})
-            yield pd.DataFrame(rows, columns=[f.name for f in MEDIA_SCHEMA.fields])
+    def video(r) -> dict:
+        mid, n_chars = int(r.doc_id), int(r.n_chars)
+        n_frames = max(min(n_chars, 32), 1)
+        blob = encode_y4m(8, 4, [(mid % 128) + f for f in range(n_frames)])
+        return {"media_id": mid, "kind": "video", "blob": blob, "source": "synth"}
 
-    return documents.select("doc_id", "n_chars").mapInPandas(batches, schema=MEDIA_SCHEMA)
+    return _map_rows(documents.select("doc_id", "n_chars"), MEDIA_SCHEMA, video)
 
 
 def sample_video_frames(media: DataFrame, frame_stride: int = 4) -> DataFrame:
     """Arrow-batched y4m decode + frame sampling."""
 
-    def batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in it:
-            rows = []
-            for mid, blob in zip(pdf["media_id"], pdf["blob"]):
-                d = decode_y4m(bytes(blob), frame_stride=frame_stride)
-                rows.append({"media_id": int(mid), **d})
-            yield pd.DataFrame(rows, columns=[f.name for f in VIDEO_SCHEMA.fields])
+    def sample(r) -> dict:
+        d = decode_y4m(bytes(r.blob), frame_stride=frame_stride)
+        return {"media_id": int(r.media_id), **d}
 
-    return media.mapInPandas(batches, schema=VIDEO_SCHEMA)
+    return _map_rows(media, VIDEO_SCHEMA, sample)
 
 
 def documents_as_real_media(documents: DataFrame) -> DataFrame:
@@ -313,35 +318,26 @@ def documents_as_real_media(documents: DataFrame) -> DataFrame:
     PPM/BMP of width min(n_chars,64) x 8 filled with doc_id%256.
     """
 
-    def batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in it:
-            rows = []
-            for mid, n_chars in zip(pdf["doc_id"], pdf["n_chars"]):
-                mid, n_chars = int(mid), int(n_chars)
-                if mid % 3 == 0:
-                    blob, kind = encode_wav_pcm16([mid % 128] * n_chars), "audio"
-                elif mid % 3 == 1:
-                    blob, kind = encode_ppm(min(n_chars, 64), 8, mid % 256), "image"
-                else:
-                    blob, kind = encode_bmp(min(n_chars, 64), 8, mid % 256), "image"
-                rows.append({"media_id": mid, "kind": kind, "blob": blob, "source": "synth"})
-            yield pd.DataFrame(rows, columns=[f.name for f in MEDIA_SCHEMA.fields])
+    def media(r) -> dict:
+        mid, n_chars = int(r.doc_id), int(r.n_chars)
+        if mid % 3 == 0:
+            blob, kind = encode_wav_pcm16([mid % 128] * n_chars), "audio"
+        elif mid % 3 == 1:
+            blob, kind = encode_ppm(min(n_chars, 64), 8, mid % 256), "image"
+        else:
+            blob, kind = encode_bmp(min(n_chars, 64), 8, mid % 256), "image"
+        return {"media_id": mid, "kind": kind, "blob": blob, "source": "synth"}
 
-    return documents.select("doc_id", "n_chars").mapInPandas(batches, schema=MEDIA_SCHEMA)
+    return _map_rows(documents.select("doc_id", "n_chars"), MEDIA_SCHEMA, media)
 
 
 def decode_real_media(media: DataFrame) -> DataFrame:
     """Arrow-batched real decode: blobs -> typed media properties."""
 
-    def batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in it:
-            rows = []
-            for mid, blob in zip(pdf["media_id"], pdf["blob"]):
-                d = decode_media(bytes(blob))
-                rows.append({"media_id": int(mid), **d})
-            yield pd.DataFrame(rows, columns=[f.name for f in DECODED_SCHEMA.fields])
+    def decode(r) -> dict:
+        return {"media_id": int(r.media_id), **decode_media(bytes(r.blob))}
 
-    return media.mapInPandas(batches, schema=DECODED_SCHEMA)
+    return _map_rows(media, DECODED_SCHEMA, decode)
 
 
 def _fake_decode(blob: bytes) -> dict:
@@ -370,20 +366,13 @@ def extract_features(media: DataFrame, codec: str = "fake") -> DataFrame:
     output batches; Spark handles partition parallelism and Arrow transfer.
     """
 
-    def batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        decoders = {"image": decode_image, "audio": decode_audio, "video": decode_audio}
-        for pdf in it:
-            feats = []
-            for mid, kind, blob, source in zip(
-                pdf["media_id"], pdf["kind"], pdf["blob"], pdf["source"]
-            ):
-                d = decoders.get(kind, decode_image)(bytes(blob or b""), codec=codec)
-                feats.append(
-                    {"media_id": mid, "kind": kind, "source": source, **d}
-                )
-            yield pd.DataFrame(feats, columns=[f.name for f in FEATURE_SCHEMA.fields])
+    decoders = {"image": decode_image, "audio": decode_audio, "video": decode_audio}
 
-    return media.mapInPandas(batches, schema=FEATURE_SCHEMA)
+    def features(r) -> dict:
+        d = decoders.get(r.kind, decode_image)(bytes(r.blob or b""), codec=codec)
+        return {"media_id": r.media_id, "kind": r.kind, "source": r.source, **d}
+
+    return _map_rows(media, FEATURE_SCHEMA, features)
 
 
 def documents_as_media(documents: DataFrame) -> DataFrame:
@@ -445,25 +434,18 @@ def resize_table(documents: DataFrame, new_w: int = 3, new_h: int = 2) -> DataFr
     any of the three stages surfaces as a value mismatch.
     """
 
-    def batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in it:
-            rows = []
-            for mid in pdf["doc_id"]:
-                mid = int(mid)
-                w = 4 + mid % 5
-                blob = encode_ppm_gradient(w, 4)
-                orig = decode_media(blob)
-                resized = decode_media(resize_ppm(blob, new_w, new_h))
-                rows.append(
-                    {
-                        "media_id": mid,
-                        "orig_width": orig["width"],
-                        "orig_height": orig["height"],
-                        "new_width": resized["width"],
-                        "new_height": resized["height"],
-                        "mean_after": round(resized["mean_value"], 6),
-                    }
-                )
-            yield pd.DataFrame(rows, columns=[f.name for f in RESIZE_SCHEMA.fields])
+    def resize(r) -> dict:
+        mid = int(r.doc_id)
+        blob = encode_ppm_gradient(4 + mid % 5, 4)
+        orig = decode_media(blob)
+        resized = decode_media(resize_ppm(blob, new_w, new_h))
+        return {
+            "media_id": mid,
+            "orig_width": orig["width"],
+            "orig_height": orig["height"],
+            "new_width": resized["width"],
+            "new_height": resized["height"],
+            "mean_after": round(resized["mean_value"], 6),
+        }
 
-    return documents.select("doc_id").mapInPandas(batches, schema=RESIZE_SCHEMA)
+    return _map_rows(documents.select("doc_id"), RESIZE_SCHEMA, resize)

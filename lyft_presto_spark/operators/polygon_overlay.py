@@ -47,6 +47,7 @@ Semantics notes (DELTAS.md "polygon boolean ops"):
 
 from __future__ import annotations
 
+import math
 from functools import cmp_to_key
 from math import gcd
 
@@ -239,6 +240,16 @@ def _on_segment(p: Pt, a: Pt, b: Pt) -> bool:
         min(a[0], b[0]) <= p[0] <= max(a[0], b[0])
         and min(a[1], b[1]) <= p[1] <= max(a[1], b[1])
     )
+
+
+def _on_line(p: Pt, edges) -> bool:
+    """p on any of the closed segments ``edges``."""
+    return any(_on_segment(p, a, b) for a, b in edges)
+
+
+def _canon(s: tuple[Pt, Pt]) -> tuple[Pt, Pt]:
+    """The undirected segment ``s`` with its endpoints in sorted order."""
+    return s if s <= (s[1], s[0]) else (s[1], s[0])
 
 
 def _seg_split_points(a: Pt, b: Pt, c: Pt, d: Pt) -> list[Pt]:
@@ -832,19 +843,13 @@ def _line_line_pieces(a_raw, b_raw) -> dict | None:
     asub = _split_edges_at(aedges, bedges)
     bsub = _split_edges_at(bedges, aedges)
 
-    def canon(s):
-        return s if s <= (s[1], s[0]) else (s[1], s[0])
-
-    shared = {canon(s) for s in asub} & {canon(s) for s in bsub}
+    shared = {_canon(s) for s in asub} & {_canon(s) for s in bsub}
     covered = {v for s in shared for v in s}
-
-    def on_line(p: Pt, edges) -> bool:
-        return any(_on_segment(p, a, b) for a, b in edges)
 
     nodes = {v for s in asub for v in s} | {v for s in bsub for v in s}
     pts = sorted(
         v for v in nodes
-        if v not in covered and on_line(v, aedges) and on_line(v, bedges)
+        if v not in covered and _on_line(v, aedges) and _on_line(v, bedges)
     )
     lines = _chain_segments(sorted(shared))
     return {
@@ -1081,17 +1086,11 @@ def relate_line_polygon(line_raw, poly_rings_raw) -> str | None:
     lsub = [s for e in ledges for s in split_at(e, pedges)]
     psub = [s for e in pedges for s in split_at(e, ledges)]
 
-    def canon(s):
-        return s if s <= (s[1], s[0]) else (s[1], s[0])
-
-    shared = {canon(s) for s in lsub} & {canon(s) for s in psub}
-
-    def on_boundary_pt(p: Pt) -> bool:
-        return any(_on_segment(p, a, b) for a, b in pedges)
+    shared = {_canon(s) for s in lsub} & {_canon(s) for s in psub}
 
     ii = ib = ie = "F"
     for p, q in lsub:
-        if canon((p, q)) in shared:
+        if _canon((p, q)) in shared:
             ib = "1"
             continue
         mid: Pt = ((p[0] + q[0]) / 2, (p[1] + q[1]) / 2)
@@ -1105,7 +1104,7 @@ def relate_line_polygon(line_raw, poly_rings_raw) -> str | None:
         ends = set() if closed else {line_pts[0], line_pts[-1]}
         for p, q in lsub:
             for v in (p, q):
-                if v not in ends and on_boundary_pt(v):
+                if v not in ends and _on_line(v, pedges):
                     ib = "0"
                     break
             if ib == "0":
@@ -1114,14 +1113,14 @@ def relate_line_polygon(line_raw, poly_rings_raw) -> str | None:
     bi = bb = be = "F"
     if not closed:
         for v in (line_pts[0], line_pts[-1]):
-            if on_boundary_pt(v):
+            if _on_line(v, pedges):
                 bb = "0"
             elif _point_in_region(v, poly):
                 bi = "0"
             else:
                 be = "0"
 
-    eb = "1" if any(canon(s) not in shared for s in psub) else "F"
+    eb = "1" if any(_canon(s) not in shared for s in psub) else "F"
     return ii + ib + ie + bi + bb + be + "2" + eb + "2"
 
 
@@ -1189,17 +1188,11 @@ def relate_lines(a_raw, b_raw) -> str | None:
     asub = split_all(aedges, bedges)
     bsub = split_all(bedges, aedges)
 
-    def canon(s):
-        return s if s <= (s[1], s[0]) else (s[1], s[0])
-
-    aset = {canon(s) for s in asub}
-    bset = {canon(s) for s in bsub}
+    aset = {_canon(s) for s in asub}
+    bset = {_canon(s) for s in bsub}
     shared = aset & bset
     anodes = {v for s in asub for v in s}
     bnodes = {v for s in bsub for v in s}
-
-    def on_line(p: Pt, edges) -> bool:
-        return any(_on_segment(p, a, b) for a, b in edges)
 
     # interior/interior: shared sub-segment -> 1; else a node on both
     # lines that is interior to both -> 0; else F
@@ -1210,19 +1203,19 @@ def relate_lines(a_raw, b_raw) -> str | None:
         for v in (anodes | bnodes):
             if v in abnd or v in bbnd:
                 continue
-            if on_line(v, aedges) and on_line(v, bedges):
+            if _on_line(v, aedges) and _on_line(v, bedges):
                 ii = "0"
                 break
     # interior(A) vs boundary(B): a B endpoint on A that is not an A
     # endpoint (dim 0); symmetric for BI
-    ib = "0" if any(v not in abnd and on_line(v, aedges) for v in bbnd) else "F"
-    bi = "0" if any(v not in bbnd and on_line(v, bedges) for v in abnd) else "F"
+    ib = "0" if any(v not in abnd and _on_line(v, aedges) for v in bbnd) else "F"
+    bi = "0" if any(v not in bbnd and _on_line(v, bedges) for v in abnd) else "F"
     # interior(A) vs exterior(B): any A sub-segment not shared -> 1
-    ie = "1" if any(canon(s) not in shared for s in asub) else "F"
-    ei = "1" if any(canon(s) not in shared for s in bsub) else "F"
+    ie = "1" if any(_canon(s) not in shared for s in asub) else "F"
+    ei = "1" if any(_canon(s) not in shared for s in bsub) else "F"
     bb = "0" if abnd & bbnd else "F"
-    be = "0" if any(not on_line(v, bedges) for v in abnd) else "F"
-    eb = "0" if any(not on_line(v, aedges) for v in bbnd) else "F"
+    be = "0" if any(not _on_line(v, bedges) for v in abnd) else "F"
+    eb = "0" if any(not _on_line(v, aedges) for v in bbnd) else "F"
     return ii + ib + ie + bi + bb + be + ei + eb + "2"
 
 
@@ -1412,6 +1405,25 @@ def _snap_rings(rings: list[list[dict]], bits: int = 40) -> list[list[dict]]:
     ]
 
 
+def _stadium(a, b, r: float, m: int) -> list[list[dict]]:
+    """The open ring of segment a->b buffered by ``r``: a rectangle of
+    half-width ``r`` with ``m``-step polygonal half-disc caps at both
+    ends, the two caps together a regular inscribed 2m-gon."""
+    ax, ay = float(a[0]), float(a[1])
+    bx, by = float(b[0]), float(b[1])
+    th = math.atan2(by - ay, bx - ax)
+    ring = []
+    # cap at b: angles th-90 .. th+90, m steps (m+1 points)
+    for k in range(m + 1):
+        ang = th - math.pi / 2 + math.pi * k / m
+        ring.append({"x": bx + r * math.cos(ang), "y": by + r * math.sin(ang)})
+    # cap at a: angles th+90 .. th+270
+    for k in range(m + 1):
+        ang = th + math.pi / 2 + math.pi * k / m
+        ring.append({"x": ax + r * math.cos(ang), "y": ay + r * math.sin(ang)})
+    return [ring]
+
+
 def buffer_line(line_raw, r: float, m: int = 8) -> list[list[dict]] | None:
     """stBuffer for a LINESTRING (the reference buffers any geometry via
     Esri; st_buffer_point covers points): the union of per-segment
@@ -1426,8 +1438,6 @@ def buffer_line(line_raw, r: float, m: int = 8) -> list[list[dict]] | None:
 
     Returns a single holed polygon (list of rings of {"x","y"} dicts) or
     None for NULL/degenerate input / radius <= 0."""
-    import math as _math
-
     if line_raw is None or r is None or not r > 0:
         return None
     pts = [
@@ -1442,24 +1452,9 @@ def buffer_line(line_raw, r: float, m: int = 8) -> list[list[dict]] | None:
     if len(dedup) < 2:
         return None
 
-    def stadium(a, b):
-        ax, ay = a
-        bx, by = b
-        th = _math.atan2(by - ay, bx - ax)
-        ring = []
-        # cap at b: angles th-90 .. th+90, m steps (m+1 points)
-        for k in range(m + 1):
-            ang = th - _math.pi / 2 + _math.pi * k / m
-            ring.append({"x": bx + r * _math.cos(ang), "y": by + r * _math.sin(ang)})
-        # cap at a: angles th+90 .. th+270
-        for k in range(m + 1):
-            ang = th + _math.pi / 2 + _math.pi * k / m
-            ring.append({"x": ax + r * _math.cos(ang), "y": ay + r * _math.sin(ang)})
-        return [ring]
-
-    acc = stadium(dedup[0], dedup[1])
+    acc = _stadium(dedup[0], dedup[1], r, m)
     for i in range(1, len(dedup) - 1):
-        nxt = stadium(dedup[i], dedup[i + 1])
+        nxt = _stadium(dedup[i], dedup[i + 1], r, m)
         u = overlay(acc, nxt, "union")
         if u is None or len(u) != 1:
             return None  # disconnected fold: degenerate input geometry
@@ -1480,8 +1475,6 @@ def buffer_polygon(poly_rings_raw, r: float, m: int = 8) -> list[list[dict]] | N
     Holes shrink (their boundary stadiums eat inward) and disappear when
     narrower than 2r. Negative distances (erosion) are ``erode_polygon``.
     Returns a holed polygon; NULL on NULL/degenerate input or r <= 0."""
-    import math as _math
-
     if r is None or not r > 0:
         return None
     poly = _norm_rings(poly_rings_raw)
@@ -1490,19 +1483,6 @@ def buffer_polygon(poly_rings_raw, r: float, m: int = 8) -> list[list[dict]] | N
     if not poly:
         return []
 
-    def stadium(a, b):
-        ax, ay = float(a[0]), float(a[1])
-        bx, by = float(b[0]), float(b[1])
-        th = _math.atan2(by - ay, bx - ax)
-        ring = []
-        for k in range(m + 1):
-            ang = th - _math.pi / 2 + _math.pi * k / m
-            ring.append({"x": bx + r * _math.cos(ang), "y": by + r * _math.sin(ang)})
-        for k in range(m + 1):
-            ang = th + _math.pi / 2 + _math.pi * k / m
-            ring.append({"x": ax + r * _math.cos(ang), "y": ay + r * _math.sin(ang)})
-        return [ring]
-
     acc = [
         [{"x": float(x), "y": float(y)} for x, y in ring + [ring[0]]]
         for ring in poly
@@ -1510,7 +1490,7 @@ def buffer_polygon(poly_rings_raw, r: float, m: int = 8) -> list[list[dict]] | N
     for ring in poly:
         n = len(ring)
         for i in range(n):
-            u = overlay(acc, stadium(ring[i], ring[(i + 1) % n]), "union")
+            u = overlay(acc, _stadium(ring[i], ring[(i + 1) % n], r, m), "union")
             if u is None or len(u) != 1:
                 return None  # dilation of a connected polygon stays connected
             acc = _snap_rings(u[0])
@@ -1529,8 +1509,6 @@ def erode_polygon(poly_rings_raw, d: float, m: int = 8) -> list[list[list[dict]]
     pinch the polygon into multiple parts, so the result is the
     MULTIPOLYGON representation — [] when fully eroded, NULL on
     NULL/degenerate input or d <= 0."""
-    import math as _math
-
     if d is None or not d > 0:
         return None
     poly = _norm_rings(poly_rings_raw)
@@ -1538,19 +1516,6 @@ def erode_polygon(poly_rings_raw, d: float, m: int = 8) -> list[list[list[dict]]
         return None
     if not poly:
         return []
-
-    def stadium(a, b):
-        ax, ay = float(a[0]), float(a[1])
-        bx, by = float(b[0]), float(b[1])
-        th = _math.atan2(by - ay, bx - ax)
-        ring = []
-        for k in range(m + 1):
-            ang = th - _math.pi / 2 + _math.pi * k / m
-            ring.append({"x": bx + d * _math.cos(ang), "y": by + d * _math.sin(ang)})
-        for k in range(m + 1):
-            ang = th + _math.pi / 2 + _math.pi * k / m
-            ring.append({"x": ax + d * _math.cos(ang), "y": ay + d * _math.sin(ang)})
-        return [ring]
 
     comps: list[list[list[dict]]] = [
         [
@@ -1561,7 +1526,7 @@ def erode_polygon(poly_rings_raw, d: float, m: int = 8) -> list[list[list[dict]]
     for ring in poly:
         n = len(ring)
         for i in range(n):
-            st = stadium(ring[i], ring[(i + 1) % n])
+            st = _stadium(ring[i], ring[(i + 1) % n], d, m)
             nxt: list[list[list[dict]]] = []
             for comp in comps:
                 diff = overlay(comp, st, "difference")

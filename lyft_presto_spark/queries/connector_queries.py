@@ -1531,18 +1531,18 @@ ORDER BY etype
 """
 
 
-def _flog_topic_dir(spark: SparkSession) -> str:
-    """Materialize the synthetic topic once per session: 10k json records
-    in Kafka's segment layout (bounded — an ingest fixture, not data
-    motion; the analytics below never touch the driver)."""
+def _flog_topic_dir() -> str:
+    """The synthetic topic, published once per host under the staging root:
+    10k json records in Kafka's segment layout (bounded — an ingest
+    fixture, not data motion; the analytics below never touch the driver).
+    It depends on no input, so its path is fixed."""
     import json as _json
-    import tempfile
+    import os
 
-    from ..operators.staging import session_memo
+    from ..operators.staging import publish_once, staging_root
     from ..sources.filelog_datasource import write_segments
 
-    def build() -> str:
-        path = tempfile.mkdtemp(prefix="filelog_clicks_")
+    def write(stage: str) -> None:
         records = [
             (
                 i % _FLOG_PARTS,
@@ -1557,10 +1557,12 @@ def _flog_topic_dir(spark: SparkSession) -> str:
             )
             for i in range(_FLOG_ROWS)
         ]
-        write_segments(path, records, segment_records=1024)
-        return path
+        write_segments(stage, records, segment_records=1024)
+        open(os.path.join(stage, "_SUCCESS"), "w").close()
 
-    return session_memo(spark, ("filelog_clicks_topic",), build)
+    final = os.path.join(staging_root(), "filelog_clicks@v1")
+    publish_once(final, write)
+    return final
 
 
 @query(
@@ -1581,7 +1583,7 @@ def connector_filelog_clicks(spark: SparkSession, sf_dir: str) -> DataFrame:
     from ..sources.kafka_decoders import decode_json
 
     register_filelog(spark)
-    path = _flog_topic_dir(spark)
+    path = _flog_topic_dir()
     batch = (
         spark.read.format("filelog")
         .option("path", path)

@@ -52,6 +52,23 @@ from .registry import query, spread, sql_over, t
 
 ZOOM = 12
 CELL_DEG = 10
+
+
+def _pts(*xy: tuple) -> F.Column:
+    """Literal ``array<struct<x,y>>`` of (x, y) pairs; each coordinate is a
+    number (made a double literal) or a Column (used as is)."""
+
+    def lit(c) -> F.Column:
+        return c if isinstance(c, F.Column) else F.lit(float(c))
+
+    return F.array(*[G.st_point(lit(x), lit(y)) for x, y in xy])
+
+
+def _square(x0, y0, s, cw: bool = False) -> F.Column:
+    """Closed axis-aligned square ring with corner (x0, y0) and side s,
+    counter-clockwise unless ``cw``."""
+    c = [(x0, y0), (x0 + s, y0), (x0 + s, y0 + s), (x0, y0 + s), (x0, y0)]
+    return _pts(*(c[::-1] if cw else c))
 CITY_RADIUS_KM = 500.0
 
 # Deterministic synthetic coordinates from integer keys (exact in DOUBLE).
@@ -1764,25 +1781,20 @@ def fn_geo_validity(spark: SparkSession, sf_dir: str) -> DataFrame:
     src = sql_over(spark, sf_dir, _VALIDITY_SRC, ("customer",))
 
     def build() -> tuple:
-        def ring_of(*pts: tuple[float, float]) -> F.Column:
-            return F.array(
-                *[G.st_point(F.lit(float(x)), F.lit(float(y))) for x, y in pts]
-            )
-
-        good = ring_of((0, 0), (4, 0), (4, 4), (0, 4), (0, 0))
-        bowtie = ring_of((0, 0), (4, 4), (4, 0), (0, 4), (0, 0))
-        repeated = ring_of((0, 0), (4, 0), (4, 0), (4, 4), (0, 4), (0, 0))
+        good = _pts((0, 0), (4, 0), (4, 4), (0, 4), (0, 0))
+        bowtie = _pts((0, 0), (4, 4), (4, 0), (0, 4), (0, 0))
+        repeated = _pts((0, 0), (4, 0), (4, 0), (4, 4), (0, 4), (0, 0))
         ring = (
             F.when(F.col("rep"), repeated)
             .when(F.col("bowtie"), bowtie)
             .otherwise(good)
         )
-        hole_in = ring_of((1, 1), (2, 1), (2, 2), (1, 2), (1, 1))
-        hole_out = ring_of((10, 10), (11, 10), (11, 11), (10, 11), (10, 10))
+        hole_in = _pts((1, 1), (2, 1), (2, 2), (1, 2), (1, 1))
+        hole_out = _pts((10, 10), (11, 10), (11, 11), (10, 11), (10, 10))
         poly = F.array(good, F.when(F.col("esc"), hole_out).otherwise(hole_in))
         line = F.when(
-            F.col("dup"), ring_of((0, 0), (0, 0), (2, 0))
-        ).otherwise(ring_of((0, 0), (1, 1), (2, 0)))
+            F.col("dup"), _pts((0, 0), (0, 0), (2, 0))
+        ).otherwise(_pts((0, 0), (1, 1), (2, 0)))
         return (
             G.geometry_invalid_reason_ring(ring).alias("ring_reason"),
             G.geometry_invalid_reason_polygon(poly).alias("poly_reason"),
@@ -1928,23 +1940,9 @@ def fn_geo_clip(spark: SparkSession, sf_dir: str) -> DataFrame:
     src = sql_over(spark, sf_dir, _CLIP_SRC, ("customer",))
     b = F.col("b")
 
-    def square(x0: F.Column, y0: F.Column) -> F.Column:
-        return F.array(
-            G.st_point(x0, y0),
-            G.st_point(x0 + 4.0, y0),
-            G.st_point(x0 + 4.0, y0 + 4.0),
-            G.st_point(x0, y0 + 4.0),
-            G.st_point(x0, y0),
-        )
-
-    a_ring = square(F.lit(0.0), F.lit(0.0))
-    b_ring = square(b, b)
-    tri = F.array(
-        G.st_point(F.lit(0.0), F.lit(0.0)),
-        G.st_point(F.lit(4.0), F.lit(0.0)),
-        G.st_point(F.lit(0.0), F.lit(4.0)),
-        G.st_point(F.lit(0.0), F.lit(0.0)),
-    )
+    a_ring = _square(F.lit(0.0), F.lit(0.0), 4.0)
+    b_ring = _square(b, b, 4.0)
+    tri = _pts((0, 0), (4, 0), (0, 4), (0, 0))
     inter = GS.st_intersection_convex(a_ring, b_ring)
     return src.select(
         "c_custkey",
@@ -2254,23 +2252,14 @@ def _poly_pred_witnesses() -> tuple:
     """The polygon-predicate witness trees (~4.6 s of py4j round trips to
     build, measured): prepared once per session by the caller."""
 
-    def ring_of(*pts: tuple[float, float]) -> F.Column:
-        return F.array(
-            *[G.st_point(F.lit(float(x)), F.lit(float(y))) for x, y in pts]
-        )
-
-    def square(x0: float, y0: float, s: float, cw: bool = False) -> F.Column:
-        c = [(x0, y0), (x0 + s, y0), (x0 + s, y0 + s), (x0, y0 + s), (x0, y0)]
-        return ring_of(*(c[::-1] if cw else c))
-
-    a = square(0, 0, 4)
+    a = _square(0, 0, 4)
     b = (
-        F.when(F.col("kind") == 0, square(1, 1, 2))
-        .when(F.col("kind") == 1, square(3, 3, 2))
-        .when(F.col("kind") == 2, square(4, 4, 2))
-        .when(F.col("kind") == 3, square(4, 0, 2))
-        .when(F.col("kind") == 4, square(5, 5, 2))
-        .otherwise(square(0, 0, 4, cw=True))
+        F.when(F.col("kind") == 0, _square(1, 1, 2))
+        .when(F.col("kind") == 1, _square(3, 3, 2))
+        .when(F.col("kind") == 2, _square(4, 4, 2))
+        .when(F.col("kind") == 3, _square(4, 0, 2))
+        .when(F.col("kind") == 4, _square(5, 5, 2))
+        .otherwise(_square(0, 0, 4, cw=True))
     )
     ra, rb = F.col("ra"), F.col("rb")
     return (
@@ -2774,16 +2763,16 @@ def fn_geo_boolean_ops(spark: SparkSession, sf_dir: str) -> DataFrame:
     def pt(x, y) -> str:
         return f"struct(CAST({x} AS DOUBLE) AS x, CAST({y} AS DOUBLE) AS y)"
 
-    def ring_of(*pts) -> str:
+    def ring_sql(*pts) -> str:
         return "array(" + ", ".join(pt(x, y) for x, y in pts) + ")"
 
-    l_shape = "array(" + ring_of((0, 0), (4, 0), (4, 2), (2, 2), (2, 4), (0, 4), (0, 0)) + ")"
-    u_shape = "array(" + ring_of(
+    l_shape = "array(" + ring_sql((0, 0), (4, 0), (4, 2), (2, 2), (2, 4), (0, 4), (0, 0)) + ")"
+    u_shape = "array(" + ring_sql(
         (0, 0), (3, 0), (3, 3), (2, 3), (2, 1), (1, 1), (1, 3), (0, 3), (0, 0)
     ) + ")"
 
     def rect(x1, y1, x2, y2) -> str:
-        return "array(" + ring_of((x1, y1), (x2, y1), (x2, y2), (x1, y2), (x1, y1)) + ")"
+        return "array(" + ring_sql((x1, y1), (x2, y1), (x2, y2), (x1, y2), (x1, y1)) + ")"
 
     ga = f"IF(kind = 0, {l_shape}, {u_shape})"
     gb = (
@@ -2907,20 +2896,14 @@ def fn_geo_intersection_pieces(spark: SparkSession, sf_dir: str) -> DataFrame:
                 )
             )
 
-        def ring_of(*pts: tuple[float, float]) -> F.Column:
-            closed = [*pts, pts[0]]
-            return F.array(
-                *[G.st_point(F.lit(float(x)), F.lit(float(y))) for x, y in closed]
-            )
-
         zero = F.lit(0.0)
         # kind 3 operands (fixed): A = [0,4]x[0,2]; B dips a 1x2 tab into A
         # over x in [0,1], rests a foot on A's top edge over x in [2,3], and
         # stays clear elsewhere -> intersection = 1x1 polygon + length-1 line.
         tab_foot = F.array(
-            ring_of(
+            _pts(
                 (0, 1), (1, 1), (1, 2.5), (2, 2.5), (2, 2), (3, 2),
-                (3, 2.5), (4, 2.5), (4, 4), (0, 4),
+                (3, 2.5), (4, 2.5), (4, 4), (0, 4), (0, 1),
             )
         )
         a = F.when(
@@ -3156,29 +3139,20 @@ def fn_geo_relate_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     src = sql_over(spark, sf_dir, _RELATE_PAIRS_SRC, ("customer",))
 
-    def ring_of(*pts: tuple[float, float]) -> F.Column:
-        return F.array(
-            *[G.st_point(F.lit(float(x)), F.lit(float(y))) for x, y in pts]
-        )
-
-    def square(x0: float, y0: float, s: float, cw: bool = False) -> F.Column:
-        c = [(x0, y0), (x0 + s, y0), (x0 + s, y0 + s), (x0, y0 + s), (x0, y0)]
-        return ring_of(*(c[::-1] if cw else c))
-
-    outer = square(0, 0, 4)
-    hole = square(1, 1, 2)
+    outer = _square(0, 0, 4)
+    hole = _square(1, 1, 2)
     a = F.when(F.col("kind") <= 5, F.array(outer)).otherwise(
         F.array(outer, hole)
     )
     b_ring = (
-        F.when(F.col("kind") == 0, square(1, 1, 2))
-        .when(F.col("kind") == 1, square(3, 3, 2))
-        .when(F.col("kind") == 2, square(4, 4, 2))
-        .when(F.col("kind") == 3, square(4, 0, 2))
-        .when(F.col("kind") == 4, square(5, 5, 2))
-        .when(F.col("kind") == 5, square(0, 0, 4, cw=True))
-        .when(F.col("kind") == 6, square(1.5, 1.5, 1))
-        .otherwise(square(1, 1, 2))
+        F.when(F.col("kind") == 0, _square(1, 1, 2))
+        .when(F.col("kind") == 1, _square(3, 3, 2))
+        .when(F.col("kind") == 2, _square(4, 4, 2))
+        .when(F.col("kind") == 3, _square(4, 0, 2))
+        .when(F.col("kind") == 4, _square(5, 5, 2))
+        .when(F.col("kind") == 5, _square(0, 0, 4, cw=True))
+        .when(F.col("kind") == 6, _square(1.5, 1.5, 1))
+        .otherwise(_square(1, 1, 2))
     )
     staged = spread(src.select(
         "c_custkey", "kind", a.alias("ga"), F.array(b_ring).alias("gb")
@@ -3241,20 +3215,15 @@ def fn_geo_relate_mixed(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     src = sql_over(spark, sf_dir, _RELATE_MIXED_SRC, ("customer",))
 
-    def line_of(*pts: tuple[float, float]) -> F.Column:
-        return F.array(
-            *[G.st_point(F.lit(float(x)), F.lit(float(y))) for x, y in pts]
-        )
-
-    square = line_of((0, 0), (4, 0), (4, 4), (0, 4), (0, 0))
+    square = _square(0, 0, 4)
     line = (
-        F.when(F.col("kind") == 0, line_of((-1, 2), (5, 2)))
-        .when(F.col("kind") == 1, line_of((1, 1), (3, 3)))
-        .when(F.col("kind") == 2, line_of((0, 0), (4, 0)))
-        .when(F.col("kind") == 3, line_of((4, 4), (6, 6)))
-        .when(F.col("kind") == 4, line_of((5, 5), (7, 7)))
-        .when(F.col("kind") == 5, line_of((2, 2), (4, 2)))
-        .otherwise(line_of((-1, -1), (5, -1), (5, 5), (-1, 5), (-1, -1)))
+        F.when(F.col("kind") == 0, _pts((-1, 2), (5, 2)))
+        .when(F.col("kind") == 1, _pts((1, 1), (3, 3)))
+        .when(F.col("kind") == 2, _pts((0, 0), (4, 0)))
+        .when(F.col("kind") == 3, _pts((4, 4), (6, 6)))
+        .when(F.col("kind") == 4, _pts((5, 5), (7, 7)))
+        .when(F.col("kind") == 5, _pts((2, 2), (4, 2)))
+        .otherwise(_pts((-1, -1), (5, -1), (5, 5), (-1, 5), (-1, -1)))
     )
     pt = (
         F.when(F.col("kind") % 3 == 0, G.st_point(F.lit(2.0), F.lit(2.0)))
@@ -3325,19 +3294,14 @@ def fn_geo_relate_lines(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     src = sql_over(spark, sf_dir, _RELATE_LINES_SRC, ("customer",))
 
-    def line_of(*pts: tuple[float, float]) -> F.Column:
-        return F.array(
-            *[G.st_point(F.lit(float(x)), F.lit(float(y))) for x, y in pts]
-        )
-
-    a_line = line_of((0, 0), (4, 0))
+    a_line = _pts((0, 0), (4, 0))
     b_line = (
-        F.when(F.col("kind") == 0, line_of((2, -2), (2, 2)))
-        .when(F.col("kind") == 1, line_of((1, 0), (3, 0)))
-        .when(F.col("kind") == 2, line_of((0, 0), (4, 0)))
-        .when(F.col("kind") == 3, line_of((4, 0), (6, 0)))
-        .when(F.col("kind") == 4, line_of((6, 0), (8, 0)))
-        .otherwise(line_of((2, 0), (2, 3)))
+        F.when(F.col("kind") == 0, _pts((2, -2), (2, 2)))
+        .when(F.col("kind") == 1, _pts((1, 0), (3, 0)))
+        .when(F.col("kind") == 2, _pts((0, 0), (4, 0)))
+        .when(F.col("kind") == 3, _pts((4, 0), (6, 0)))
+        .when(F.col("kind") == 4, _pts((6, 0), (8, 0)))
+        .otherwise(_pts((2, 0), (2, 3)))
     )
     pt = (
         F.when(F.col("kind") % 3 == 0, G.st_point(F.lit(2.0), F.lit(0.0)))
@@ -3415,26 +3379,16 @@ def fn_geo_line_clip(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     src = sql_over(spark, sf_dir, _LINE_CLIP_SRC, ("customer",))
 
-    def line_of(*pts) -> F.Column:
-        return F.array(*[G.st_point(x, y) for x, y in pts])
-
-    lit = F.lit
     a, slope, h = F.col("a"), F.col("slope"), F.col("h")
     line = (
-        F.when(F.col("kind") == 0, line_of((a, lit(-1.0)), (a + slope, lit(5.0))))
-        .when(F.col("kind") == 1, line_of((lit(1.0), h), (lit(3.0), h)))
-        .when(F.col("kind") == 2, line_of((lit(7.0), lit(7.0)), (lit(9.0), lit(9.0))))
-        .otherwise(
-            line_of((lit(1.0), lit(-1.0)), (lit(1.0), lit(5.0)), (lit(3.0), lit(-1.0)))
-        )
-    )
-    square = line_of(
-        (lit(0.0), lit(0.0)), (lit(4.0), lit(0.0)),
-        (lit(4.0), lit(4.0)), (lit(0.0), lit(4.0)), (lit(0.0), lit(0.0)),
+        F.when(F.col("kind") == 0, _pts((a, -1), (a + slope, 5)))
+        .when(F.col("kind") == 1, _pts((1, h), (3, h)))
+        .when(F.col("kind") == 2, _pts((7, 7), (9, 9)))
+        .otherwise(_pts((1, -1), (1, 5), (3, -1)))
     )
     staged = src.select(
         "c_custkey", "kind",
-        GS.st_line_intersection_polygon(line, F.array(square)).alias("ml"),
+        GS.st_line_intersection_polygon(line, F.array(_square(0, 0, 4))).alias("ml"),
     )
     total_len = F.aggregate(
         F.col("ml"), F.lit(0.0), lambda acc, seg: acc + G.st_length(seg)
@@ -3708,29 +3662,16 @@ def fn_geo_erode_polygon(spark: SparkSession, sf_dir: str) -> DataFrame:
         w, h = F.col("w"), F.col("h")
         lit = F.lit
 
-        def ring_of(*pts) -> F.Column:
-            closed = [*pts, pts[0]]
-            return F.array(*[G.st_point(x, y) for x, y in closed])
-
-        rect = F.array(
-            ring_of((lit(0.0), lit(0.0)), (w, lit(0.0)), (w, h), (lit(0.0), h))
-        )
+        rect = F.array(_pts((0, 0), (w, 0), (w, h), (0, h), (0, 0)))
         holed = F.array(
-            ring_of((lit(0.0), lit(0.0)), (lit(10.0), lit(0.0)),
-                    (lit(10.0), lit(10.0)), (lit(0.0), lit(10.0))),
-            ring_of((lit(4.0), lit(4.0)), (lit(4.0), lit(6.0)),
-                    (lit(6.0), lit(6.0)), (lit(6.0), lit(4.0))),
+            _pts((0, 0), (10, 0), (10, 10), (0, 10), (0, 0)),
+            _pts((4, 4), (4, 6), (6, 6), (6, 4), (4, 4)),
         )
-        small = F.array(
-            ring_of((lit(0.0), lit(0.0)), (lit(2.0), lit(0.0)),
-                    (lit(2.0), lit(2.0)), (lit(0.0), lit(2.0)))
-        )
+        small = F.array(_pts((0, 0), (2, 0), (2, 2), (0, 2), (0, 0)))
         dumbbell = F.array(
-            ring_of(
-                (lit(0.0), lit(0.0)), (lit(6.0), lit(0.0)), (lit(6.0), lit(2.0)),
-                (lit(10.0), lit(2.0)), (lit(10.0), lit(0.0)), (lit(16.0), lit(0.0)),
-                (lit(16.0), lit(6.0)), (lit(10.0), lit(6.0)), (lit(10.0), lit(4.0)),
-                (lit(6.0), lit(4.0)), (lit(6.0), lit(6.0)), (lit(0.0), lit(6.0)),
+            _pts(
+                (0, 0), (6, 0), (6, 2), (10, 2), (10, 0), (16, 0),
+                (16, 6), (10, 6), (10, 4), (6, 4), (6, 6), (0, 6), (0, 0),
             )
         )
         poly = (

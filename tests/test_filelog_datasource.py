@@ -135,3 +135,34 @@ def test_stream_drains_and_replays_deterministically(spark, tmp_path):
     second = run()
     got2 = sorted((r.partition, r.offset) for r in second)
     assert got2 == sorted((p, o) for p in range(3) for o in range(58))
+
+
+def test_click_topic_is_published_once_under_staging_root(monkeypatch, tmp_path):
+    # The connector_filelog_clicks topic depends on no input: one durable
+    # copy under the staging root, never a fresh temp dir per session.
+    import tempfile
+
+    from lyft_presto_spark.operators.staging import staging_root
+    from lyft_presto_spark.queries import connector_queries as CQ
+    from lyft_presto_spark.sources import filelog_datasource as FD
+
+    monkeypatch.setenv("SPARK_GRAFT_STAGING_DIR", str(tmp_path / "staging"))
+    writes = []
+    real_write = FD.write_segments
+
+    def counting_write(*args, **kwargs):
+        writes.append(args[0])
+        return real_write(*args, **kwargs)
+
+    monkeypatch.setattr(FD, "write_segments", counting_write)
+
+    def temp_topics() -> set:
+        return {e for e in os.listdir(tempfile.gettempdir()) if e.startswith("filelog_clicks_")}
+
+    before = temp_topics()
+    path = CQ._flog_topic_dir()
+    assert path.startswith(staging_root() + os.sep)
+    assert os.path.exists(os.path.join(path, "_SUCCESS"))
+    assert CQ._flog_topic_dir() == path
+    assert len(writes) == 1
+    assert temp_topics() == before

@@ -976,6 +976,45 @@ class TestScalarHullAndSimplify:
         s = _one(spark, GS.simplify_geometry(zig, 2.5))
         assert [(p.x, p.y) for p in s] == [(0.0, 0.0), (4.0, 0.0)]
 
+    def test_simplify_drops_null_members(self, spark):
+        # A NULL member is dropped, as st_convex_hull does, instead of
+        # failing the job.
+        from lyft_presto_spark.operators import geo_scalar as GS
+        nul = F.lit(None).cast("struct<x:double,y:double>")
+        line = F.array(G.st_point(F.lit(0.0), F.lit(0.0)), nul,
+                       G.st_point(F.lit(2.0), F.lit(0.0)), G.st_point(F.lit(3.0), F.lit(1.0)))
+        clean = self._pts((0, 0), (2, 0), (3, 1))
+        got = _one(spark, GS.simplify_geometry(line, 0.5))
+        assert got == _one(spark, GS.simplify_geometry(clean, 0.5))
+        assert [(p.x, p.y) for p in got] == [(0.0, 0.0), (2.0, 0.0), (3.0, 1.0)]
+
+    def test_per_row_adapter_contract(self, spark):
+        # The one per-row policy: a raising kernel NULLs only its row, a
+        # struct input reaches the kernel as a dict, and a None result for
+        # a struct return type is an all-NULL-field struct.
+        from lyft_presto_spark.operators.geo_scalar import _per_row
+
+        def total(p, k):
+            if k == 1:
+                raise ValueError("bad row")
+            return p["x"] + p["y"]
+
+        def fields(p, k):
+            return None if k == 2 else {"x": p["x"], "k": int(k)}
+
+        df = spark.range(3).select(
+            "id", G.st_point(F.col("id").cast("double"), F.lit(10.0)).alias("p")
+        )
+        out = df.select(
+            "id",
+            _per_row(total, "double", "p", "id").alias("t"),
+            _per_row(fields, "struct<x:double,k:bigint>", "p", "id").alias("f"),
+        )
+        rows = {r.id: r for r in out.collect()}
+        assert [rows[i].t for i in range(3)] == [10.0, None, 12.0]
+        assert (rows[1].f.x, rows[1].f.k) == (1.0, 1)
+        assert rows[2].f is not None and (rows[2].f.x, rows[2].f.k) == (None, None)
+
     def test_simplify_guards(self, spark):
         from lyft_presto_spark.operators import geo_scalar as GS
         zig = self._pts((0, 0), (1, 2), (2, 0))
