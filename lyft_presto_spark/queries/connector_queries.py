@@ -15,7 +15,105 @@ from pyspark.sql import functions as F
 
 from .registry import query
 
-_ROWS = 10_000
+# The exact integer row hash of sources/tpch_datasource.py._batches; the
+# mod-2^32 product stays within int64 in either engine.
+_H = "((i * 2654435761 + 40503) % 4294967296)"
+
+# The one DuckDB regeneration of the generator catalog at its default
+# cardinalities: every tpchgen oracle is this prelude plus a tail. Each CTE
+# carries every connector column under its connector name
+# (tests/test_tpch_datasource.py compares them all with the connector), plus
+# the exact-integer forms the tails sum: cents, disc_pct, qty, o_cents,
+# acct_cents, supp_cents, s_acct_cents. DuckDB does not execute CTEs a tail
+# does not reference.
+_GEN_DEFS = f"""
+WITH ord AS (
+    SELECT i AS o_orderkey, {_H} % 1500 AS o_custkey,
+           CASE {_H} % 3 WHEN 0 THEN 'F' WHEN 1 THEN 'O' ELSE 'P' END AS o_orderstatus,
+           ({_H} % 10000000) / 100.0 AS o_totalprice,
+           CAST(round((({_H} % 10000000) / 100.0) * 100, 0) AS BIGINT) AS o_cents,
+           TIMESTAMP '1995-01-01' + ({_H} % 2400) * INTERVAL 1 DAY AS o_orderdate,
+           CASE {_H} % 5 WHEN 0 THEN '1-URGENT' WHEN 1 THEN '2-HIGH' WHEN 2 THEN '3-MEDIUM'
+                WHEN 3 THEN '4-NOT SPECIFIED' ELSE '5-LOW' END AS o_orderpriority
+    FROM generate_series(0, 9999) AS t(i)
+),
+li AS (
+    SELECT i // 4 AS l_orderkey, CAST(i % 4 + 1 AS INTEGER) AS l_linenumber,
+           CAST({_H} % 50 + 1 AS DOUBLE) AS l_quantity, {_H} % 50 + 1 AS qty,
+           ({_H} % 9000000) / 100.0 + 900.0 AS l_extendedprice,
+           CAST(round((({_H} % 9000000) / 100.0 + 900.0) * 100, 0) AS BIGINT) AS cents,
+           ({_H} % 11) / 100.0 AS l_discount, {_H} % 11 AS disc_pct,
+           CASE WHEN {_H} % 10 = 0 THEN 'R' WHEN {_H} % 2 = 0 THEN 'A' ELSE 'N' END AS l_returnflag,
+           {_H} % 2000 AS l_partkey, {_H} % 200 AS l_suppkey,
+           TIMESTAMP '1995-01-01' + ({_H} % 2500) * INTERVAL 1 DAY AS l_shipdate
+    FROM generate_series(0, 39999) AS t(i)
+),
+cust AS (
+    SELECT i AS c_custkey, 'Customer#' || lpad(CAST(i AS VARCHAR), 9, '0') AS c_name,
+           {_H} % 25 AS c_nationkey,
+           ({_H} % 1100000 - 100000) / 100.0 AS c_acctbal,
+           CAST({_H} % 1100000 - 100000 AS BIGINT) AS acct_cents,
+           CASE {_H} % 5 WHEN 0 THEN 'AUTOMOBILE' WHEN 1 THEN 'BUILDING' WHEN 2 THEN 'FURNITURE'
+                WHEN 3 THEN 'HOUSEHOLD' ELSE 'MACHINERY' END AS c_mktsegment
+    FROM generate_series(0, 1499) AS t(i)
+),
+prt AS (
+    SELECT i AS p_partkey, 'part#' || CAST(i AS VARCHAR) AS p_name,
+           'Brand#' || CAST({_H} % 25 + 10 AS VARCHAR) AS p_brand,
+           CASE {_H} % 6 WHEN 0 THEN 'ECONOMY ANODIZED STEEL' WHEN 1 THEN 'LARGE BRUSHED BRASS'
+                WHEN 2 THEN 'MEDIUM POLISHED COPPER' WHEN 3 THEN 'PROMO BURNISHED NICKEL'
+                WHEN 4 THEN 'SMALL PLATED TIN' ELSE 'STANDARD POLISHED STEEL' END AS p_type,
+           CAST({_H} % 50 + 1 AS INTEGER) AS p_size,
+           CASE {_H} % 4 WHEN 0 THEN 'JUMBO PKG' WHEN 1 THEN 'LG CASE' WHEN 2 THEN 'MED BOX' ELSE 'SM DRUM' END AS p_container,
+           ({_H} % 200000) / 100.0 + 900.0 AS p_retailprice
+    FROM generate_series(0, 1999) AS t(i)
+),
+ps AS (
+    SELECT i // 4 AS ps_partkey, {_H} % 200 AS ps_suppkey,
+           CAST({_H} % 10000 + 1 AS INTEGER) AS ps_availqty,
+           ({_H} % 100000) / 100.0 + 1.0 AS ps_supplycost,
+           CAST(round((({_H} % 100000) / 100.0 + 1.0) * 100, 0) AS BIGINT) AS supp_cents
+    FROM generate_series(0, 7999) AS t(i)
+),
+sup AS (
+    SELECT i AS s_suppkey, 'Supplier#' || lpad(CAST(i AS VARCHAR), 9, '0') AS s_name,
+           {_H} % 25 AS s_nationkey,
+           ({_H} % 1100000 - 100000) / 100.0 AS s_acctbal,
+           CAST({_H} % 1100000 - 100000 AS BIGINT) AS s_acct_cents
+    FROM generate_series(0, 199) AS t(i)
+),
+nat AS (
+    SELECT i AS n_nationkey, 'NATION#' || CAST(i AS VARCHAR) AS n_name, i % 5 AS n_regionkey
+    FROM generate_series(0, 24) AS t(i)
+),
+reg AS (
+    SELECT i AS r_regionkey,
+           CASE i WHEN 0 THEN 'AFRICA' WHEN 1 THEN 'AMERICA' WHEN 2 THEN 'ASIA'
+                  WHEN 3 THEN 'EUROPE' ELSE 'MIDDLE EAST' END AS r_name
+    FROM generate_series(0, 4) AS t(i)
+)
+"""
+
+# dims are tiny (5..2000 rows): one split avoids per-split Python worker
+# rounds; facts keep 8 splits for parallel synthesis
+_FACTS = ("orders", "lineitem", "partsupp")
+
+
+def _gen_scan(spark: SparkSession, table: str, **options) -> DataFrame:
+    """A live ``format("tpchgen")`` scan of ``table`` with reader options."""
+    from ..sources.tpch_datasource import register_tpchgen
+
+    register_tpchgen(spark)
+    reader = spark.read.format("tpchgen").option("table", table)
+    for key, value in options.items():
+        reader = reader.option(key, str(value))
+    return reader.load()
+
+
+def _gen_build(spark: SparkSession, table: str):
+    """The staged build of one catalog table, for ``staged``/``staged_view``
+    under the name ``tpchgen_<table>``."""
+    return lambda: _gen_scan(spark, table, partitions=8 if table in _FACTS else 1)
 
 
 def _gen_catalog(spark: SparkSession, sf_dir: str, table: str) -> DataFrame:
@@ -35,57 +133,36 @@ def _gen_catalog(spark: SparkSession, sf_dir: str, table: str) -> DataFrame:
     single-table rows (connector_tpchgen_q1/q6/orders) keep LIVE scans so
     per-query connector evidence — consumed key-range pushdown, residual
     screens — stays in the driver head; reader-level pushdown stays pinned
-    for every shape in tests/test_tpch_datasource.py."""
+    for every shape in tests/test_tpch_datasource.py. SQL-form queries
+    mount the same artifacts as temp views with ``_gen_views``."""
     from ..operators.staging import staged
-    from ..sources.tpch_datasource import register_tpchgen
 
-    register_tpchgen(spark)
+    return staged(spark, sf_dir, f"tpchgen_{table}", _gen_build(spark, table))
 
-    def build() -> DataFrame:
-        # dims are tiny (5..2000 rows): one split avoids per-split Python
-        # worker rounds; facts keep 8 splits for parallel synthesis
-        parts = "8" if table in ("orders", "lineitem", "partsupp") else "1"
-        return (
-            spark.read.format("tpchgen")
-            .option("table", table)
-            .option("partitions", parts)
-            .load()
-        )
 
-    return staged(spark, sf_dir, f"tpchgen_{table}", build)
+def _gen_views(spark: SparkSession, sf_dir: str, *tables: str) -> dict[str, str]:
+    """The named catalog tables as sf_dir-scoped temp views, by table."""
+    from ..operators.staging import staged_view
 
-# The exact integer row hash shared with sources/tpch_datasource.py._h —
-# both mod-2^32 products stay within int64/int128 in either engine.
-_ORACLE = f"""
-WITH g AS (
-    SELECT i, (i * 2654435761 + 40503) % 4294967296 AS h
-    FROM generate_series(0, {_ROWS - 1}) AS t(i)
-),
-o AS (
-    SELECT i AS o_orderkey,
-           h % 1500 AS o_custkey,
-           CASE h % 3 WHEN 0 THEN 'F' WHEN 1 THEN 'O' ELSE 'P' END AS status,
-           (h % 10000000) / 100.0 AS price,
-           CASE h % 5 WHEN 0 THEN '1-URGENT' WHEN 1 THEN '2-HIGH'
-                WHEN 2 THEN '3-MEDIUM' WHEN 3 THEN '4-NOT SPECIFIED'
-                ELSE '5-LOW' END AS priority
-    FROM g
-)
-SELECT status,
-       COUNT(*) AS n_orders,
-       CAST(SUM(CAST(round(price * 100, 0) AS BIGINT)) AS BIGINT) AS total_cents,
-       CAST(MIN(o_custkey) AS BIGINT) AS min_cust,
-       CAST(MAX(o_custkey) AS BIGINT) AS max_cust,
-       COUNT(DISTINCT priority) AS n_priorities
-FROM o
-GROUP BY status
-ORDER BY status
-"""
+    return {
+        t: staged_view(spark, sf_dir, f"tpchgen_{t}", _gen_build(spark, t))
+        for t in tables
+    }
 
 
 @query(
     "connector_tpchgen_orders",
-    oracle=_ORACLE,
+    oracle=_GEN_DEFS + """
+SELECT o_orderstatus AS status,
+       COUNT(*) AS n_orders,
+       CAST(SUM(o_cents) AS BIGINT) AS total_cents,
+       CAST(MIN(o_custkey) AS BIGINT) AS min_cust,
+       CAST(MAX(o_custkey) AS BIGINT) AS max_cust,
+       COUNT(DISTINCT o_orderpriority) AS n_priorities
+FROM ord
+GROUP BY o_orderstatus
+ORDER BY status
+""",
     doc="Generator connector end-to-end (presto-tpch analog, "
     "TpchConnectorFactory.java:35): spark.read.format('tpchgen') plans "
     "row-range input partitions and synthesizes orders rows on executors "
@@ -96,16 +173,7 @@ ORDER BY status
     tags=("connector",),
 )
 def connector_tpchgen_orders(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from ..sources.tpch_datasource import register_tpchgen
-
-    register_tpchgen(spark)
-    df = (
-        spark.read.format("tpchgen")
-        .option("table", "orders")
-        .option("rows", str(_ROWS))
-        .option("partitions", "8")
-        .load()
-    )
+    df = _gen_scan(spark, "orders", partitions=8)
     cents = F.round(F.col("o_totalprice") * 100, 0).cast("bigint")
     return (
         df.groupBy(F.col("o_orderstatus").alias("status"))
@@ -130,32 +198,7 @@ def connector_tpchgen_orders(spark: SparkSession, sf_dir: str) -> DataFrame:
 # integer hash. Revenue is exactified to integer "milli-cents"
 # (cents * (100 - discount_pct)) before summation so both engines sum exactly.
 
-_Q3_ORACLE = """
-WITH cust AS (
-    SELECT i AS c_custkey,
-           CASE ((i * 2654435761 + 40503) % 4294967296) % 5
-                WHEN 0 THEN 'AUTOMOBILE' WHEN 1 THEN 'BUILDING'
-                WHEN 2 THEN 'FURNITURE' WHEN 3 THEN 'HOUSEHOLD'
-                ELSE 'MACHINERY' END AS c_mktsegment
-    FROM generate_series(0, 1499) AS t(i)
-),
-ord AS (
-    SELECT i AS o_orderkey,
-           ((i * 2654435761 + 40503) % 4294967296) % 1500 AS o_custkey,
-           TIMESTAMP '1995-01-01'
-             + (((i * 2654435761 + 40503) % 4294967296) % 2400) * INTERVAL 1 DAY
-             AS o_orderdate
-    FROM generate_series(0, 9999) AS t(i)
-),
-li AS (
-    SELECT i // 4 AS l_orderkey,
-           CAST(round(((((i * 2654435761 + 40503) % 4294967296) % 9000000) / 100.0 + 900.0) * 100, 0) AS BIGINT) AS cents,
-           ((i * 2654435761 + 40503) % 4294967296) % 11 AS disc_pct,
-           TIMESTAMP '1995-01-01'
-             + (((i * 2654435761 + 40503) % 4294967296) % 2500) * INTERVAL 1 DAY
-             AS l_shipdate
-    FROM generate_series(0, 39999) AS t(i)
-)
+_Q3_ORACLE = _GEN_DEFS + """
 SELECT CAST(l_orderkey AS BIGINT) AS l_orderkey,
        CAST(SUM(cents * (100 - disc_pct)) AS BIGINT) AS revenue_mcents,
        o_orderdate
@@ -215,17 +258,7 @@ def connector_tpchgen_q3(spark: SparkSession, sf_dir: str) -> DataFrame:
 # and evaluated by Spark post-scan — both halves of the reference's
 # applyFilter contract in one query.
 
-_Q6_ORACLE = """
-WITH li AS (
-    SELECT i // 4 AS l_orderkey,
-           ((i * 2654435761 + 40503) % 4294967296) % 50 + 1 AS qty,
-           CAST(round(((((i * 2654435761 + 40503) % 4294967296) % 9000000) / 100.0 + 900.0) * 100, 0) AS BIGINT) AS cents,
-           ((i * 2654435761 + 40503) % 4294967296) % 11 AS disc_pct,
-           TIMESTAMP '1995-01-01'
-             + (((i * 2654435761 + 40503) % 4294967296) % 2500) * INTERVAL 1 DAY
-             AS l_shipdate
-    FROM generate_series(0, 39999) AS t(i)
-)
+_Q6_ORACLE = _GEN_DEFS + """
 SELECT CAST(count(*) AS BIGINT) AS n_lines,
        CAST(SUM(cents * disc_pct) AS BIGINT) AS revenue_mcents
 FROM li
@@ -248,21 +281,12 @@ WHERE l_orderkey >= 2000 AND l_orderkey < 8000
     tags=("connector",),
 )
 def connector_tpchgen_q6(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from ..sources.tpch_datasource import register_tpchgen
-
-    register_tpchgen(spark)
-    li = (
-        spark.read.format("tpchgen")
-        .option("table", "lineitem")
-        .option("partitions", "8")
-        .load()
-        .filter(
-            (F.col("l_orderkey") >= 2000) & (F.col("l_orderkey") < 8000)
-            & (F.col("l_shipdate") >= F.lit("1996-01-01").cast("timestamp"))
-            & (F.col("l_shipdate") < F.lit("1997-01-01").cast("timestamp"))
-            & F.round(F.col("l_discount") * 100, 0).cast("bigint").between(5, 7)
-            & (F.col("l_quantity") < 24)
-        )
+    li = _gen_scan(spark, "lineitem", partitions=8).filter(
+        (F.col("l_orderkey") >= 2000) & (F.col("l_orderkey") < 8000)
+        & (F.col("l_shipdate") >= F.lit("1996-01-01").cast("timestamp"))
+        & (F.col("l_shipdate") < F.lit("1997-01-01").cast("timestamp"))
+        & F.round(F.col("l_discount") * 100, 0).cast("bigint").between(5, 7)
+        & (F.col("l_quantity") < 24)
     )
     cents = F.round(F.col("l_extendedprice") * 100, 0).cast("bigint")
     disc_pct = F.round(F.col("l_discount") * 100, 0).cast("bigint")
@@ -287,45 +311,7 @@ def connector_tpchgen_q6(spark: SparkSession, sf_dir: str) -> DataFrame:
 # makes the pair sparse (~2% match), which both engines reproduce
 # identically from the shared row hash.
 
-_Q9_H = "((i * 2654435761 + 40503) % 4294967296)"
-
-_Q9_ORACLE = f"""
-WITH li AS (
-    SELECT i // 4 AS l_orderkey,
-           {_Q9_H} % 2000 AS l_partkey,
-           {_Q9_H} % 200 AS l_suppkey,
-           {_Q9_H} % 50 + 1 AS qty,
-           CAST(round((({_Q9_H} % 9000000) / 100.0 + 900.0) * 100, 0) AS BIGINT) AS cents,
-           {_Q9_H} % 11 AS disc_pct
-    FROM generate_series(0, 31999) AS t(i)
-),
-ord AS (
-    SELECT i AS o_orderkey,
-           TIMESTAMP '1995-01-01' + ({_Q9_H} % 2400) * INTERVAL 1 DAY AS o_orderdate
-    FROM generate_series(0, 9999) AS t(i)
-),
-prt AS (
-    SELECT i AS p_partkey,
-           CASE {_Q9_H} % 6
-                WHEN 0 THEN 'ECONOMY ANODIZED STEEL' WHEN 1 THEN 'LARGE BRUSHED BRASS'
-                WHEN 2 THEN 'MEDIUM POLISHED COPPER' WHEN 3 THEN 'PROMO BURNISHED NICKEL'
-                WHEN 4 THEN 'SMALL PLATED TIN' ELSE 'STANDARD POLISHED STEEL' END AS p_type
-    FROM generate_series(0, 1999) AS t(i)
-),
-ps AS (
-    SELECT i // 4 AS ps_partkey,
-           {_Q9_H} % 200 AS ps_suppkey,
-           {_Q9_H} % 100000 + 100 AS supp_cents
-    FROM generate_series(0, 7999) AS t(i)
-),
-sup AS (
-    SELECT i AS s_suppkey, {_Q9_H} % 25 AS s_nationkey
-    FROM generate_series(0, 199) AS t(i)
-),
-nat AS (
-    SELECT i AS n_nationkey, 'NATION#' || CAST(i AS VARCHAR) AS n_name
-    FROM generate_series(0, 24) AS t(i)
-)
+_Q9_ORACLE = _GEN_DEFS + """
 SELECT n_name AS nation,
        CAST(year(o_orderdate) AS INT) AS o_year,
        CAST(count(*) AS BIGINT) AS n_lines,
@@ -337,7 +323,7 @@ JOIN prt ON l_partkey = p_partkey
 JOIN ps ON ps_partkey = l_partkey AND ps_suppkey = l_suppkey
 JOIN sup ON l_suppkey = s_suppkey
 JOIN nat ON s_nationkey = n_nationkey
-WHERE p_type LIKE '%STEEL'
+WHERE l_orderkey < 8000 AND p_type LIKE '%STEEL'
 GROUP BY n_name, year(o_orderdate)
 ORDER BY nation, o_year DESC
 """
@@ -412,17 +398,7 @@ def connector_tpchgen_q9(spark: SparkSession, sf_dir: str) -> DataFrame:
 # exactified to integer cents before cross-row sums; the average is one
 # double division of two exact integers.
 
-_Q1_ORACLE = f"""
-WITH li AS (
-    SELECT i // 4 AS l_orderkey,
-           {_Q9_H} % 50 + 1 AS qty,
-           CAST(round((({_Q9_H} % 9000000) / 100.0 + 900.0) * 100, 0) AS BIGINT) AS cents,
-           {_Q9_H} % 11 AS disc_pct,
-           CASE WHEN {_Q9_H} % 10 = 0 THEN 'R'
-                WHEN {_Q9_H} % 2 = 0 THEN 'A' ELSE 'N' END AS l_returnflag,
-           TIMESTAMP '1995-01-01' + ({_Q9_H} % 2500) * INTERVAL 1 DAY AS l_shipdate
-    FROM generate_series(0, 23999) AS t(i)
-)
+_Q1_ORACLE = _GEN_DEFS + """
 SELECT l_returnflag,
        CAST(count(*) AS BIGINT) AS n_lines,
        CAST(SUM(qty) AS BIGINT) AS sum_qty,
@@ -430,7 +406,7 @@ SELECT l_returnflag,
        CAST(SUM(cents * (100 - disc_pct)) AS BIGINT) AS sum_disc_mcents,
        CAST(round(CAST(SUM(qty) AS DOUBLE) / count(*), 6) AS DOUBLE) AS avg_qty
 FROM li
-WHERE l_shipdate <= TIMESTAMP '2000-09-02'
+WHERE l_orderkey < 6000 AND l_shipdate <= TIMESTAMP '2000-09-02'
 GROUP BY l_returnflag
 ORDER BY l_returnflag
 """
@@ -450,18 +426,9 @@ ORDER BY l_returnflag
     tags=("connector",),
 )
 def connector_tpchgen_q1(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from ..sources.tpch_datasource import register_tpchgen
-
-    register_tpchgen(spark)
-    li = (
-        spark.read.format("tpchgen")
-        .option("table", "lineitem")
-        .option("partitions", "8")
-        .load()
-        .filter(
-            (F.col("l_orderkey") < 6000)  # consumed by key-range pushdown
-            & (F.col("l_shipdate") <= F.lit("2000-09-02").cast("timestamp"))
-        )
+    li = _gen_scan(spark, "lineitem", partitions=8).filter(
+        (F.col("l_orderkey") < 6000)  # consumed by key-range pushdown
+        & (F.col("l_shipdate") <= F.lit("2000-09-02").cast("timestamp"))
     )
     qty = F.col("l_quantity").cast("bigint")
     cents = F.round(F.col("l_extendedprice") * 100, 0).cast("bigint")
@@ -493,33 +460,17 @@ def connector_tpchgen_q1(spark: SparkSession, sf_dir: str) -> DataFrame:
 # end (the fact is already hashed on l_orderkey by the HAVING aggregate,
 # so the rejoin reuses that exchange).
 
-_Q18_ORACLE = f"""
-WITH li AS (
-    SELECT i // 4 AS l_orderkey, {_Q9_H} % 50 + 1 AS qty
-    FROM generate_series(0, 39999) AS t(i)
-),
+_Q18_ORACLE = _GEN_DEFS + """,
 big AS (
     SELECT l_orderkey FROM li GROUP BY l_orderkey HAVING SUM(qty) > 130
-),
-ord AS (
-    SELECT i AS o_orderkey,
-           {_Q9_H} % 1500 AS o_custkey,
-           CAST(round((({_Q9_H} % 10000000) / 100.0) * 100, 0) AS BIGINT) AS price_cents,
-           TIMESTAMP '1995-01-01' + ({_Q9_H} % 2400) * INTERVAL 1 DAY AS o_orderdate
-    FROM generate_series(0, 9999) AS t(i)
-),
-cust AS (
-    SELECT i AS c_custkey,
-           'Customer#' || lpad(CAST(i AS VARCHAR), 9, '0') AS c_name
-    FROM generate_series(0, 1499) AS t(i)
 )
-SELECT c_name, o_orderkey, o_orderdate, price_cents,
+SELECT c_name, o_orderkey, o_orderdate, o_cents AS price_cents,
        CAST(SUM(qty) AS BIGINT) AS sum_qty
 FROM ord
 JOIN cust ON o_custkey = c_custkey
 JOIN li ON l_orderkey = o_orderkey
 WHERE o_orderkey IN (SELECT l_orderkey FROM big)
-GROUP BY c_name, o_orderkey, o_orderdate, price_cents
+GROUP BY c_name, o_orderkey, o_orderdate, o_cents
 ORDER BY price_cents DESC, o_orderkey
 LIMIT 20
 """
@@ -573,39 +524,10 @@ def connector_tpchgen_q18(spark: SparkSession, sf_dir: str) -> DataFrame:
 # surfaces VERDICT r11 asked for (the reference serves all 22 shapes from
 # its generator, TpchMetadata.java:93). The l_orderkey bound is the
 # key-range-pushdown surface (consumed at the reader — pinned in
-# tests/test_tpch_datasource.py; the oracle encodes the same bound by
-# generating only 32000 lineitem indexes).
+# tests/test_tpch_datasource.py; the oracle states the same bound in its
+# WHERE clause).
 
-_Q5_ORACLE = f"""
-WITH cust AS (
-    SELECT i AS c_custkey, {_Q9_H} % 25 AS c_nationkey
-    FROM generate_series(0, 1499) AS t(i)
-),
-ord AS (
-    SELECT i AS o_orderkey, {_Q9_H} % 1500 AS o_custkey,
-           TIMESTAMP '1995-01-01' + ({_Q9_H} % 2400) * INTERVAL 1 DAY AS o_orderdate
-    FROM generate_series(0, 9999) AS t(i)
-),
-li AS (
-    SELECT i // 4 AS l_orderkey, {_Q9_H} % 200 AS l_suppkey,
-           CAST(round((({_Q9_H} % 9000000) / 100.0 + 900.0) * 100, 0) AS BIGINT) AS cents,
-           {_Q9_H} % 11 AS disc_pct
-    FROM generate_series(0, 31999) AS t(i)
-),
-sup AS (
-    SELECT i AS s_suppkey, {_Q9_H} % 25 AS s_nationkey
-    FROM generate_series(0, 199) AS t(i)
-),
-nat AS (
-    SELECT i AS n_nationkey, 'NATION#' || CAST(i AS VARCHAR) AS n_name, i % 5 AS n_regionkey
-    FROM generate_series(0, 24) AS t(i)
-),
-reg AS (
-    SELECT i AS r_regionkey,
-           CASE i WHEN 0 THEN 'AFRICA' WHEN 1 THEN 'AMERICA' WHEN 2 THEN 'ASIA'
-                  WHEN 3 THEN 'EUROPE' ELSE 'MIDDLE EAST' END AS r_name
-    FROM generate_series(0, 4) AS t(i)
-)
+_Q5_ORACLE = _GEN_DEFS + """
 SELECT n_name, CAST(count(*) AS BIGINT) AS n_lines,
        CAST(SUM(cents * (100 - disc_pct)) AS BIGINT) AS revenue_mcents
 FROM cust
@@ -614,7 +536,7 @@ JOIN li ON l_orderkey = o_orderkey
 JOIN sup ON l_suppkey = s_suppkey AND c_nationkey = s_nationkey
 JOIN nat ON s_nationkey = n_nationkey
 JOIN reg ON n_regionkey = r_regionkey
-WHERE r_name = 'ASIA'
+WHERE r_name = 'ASIA' AND l_orderkey < 8000
   AND o_orderdate >= TIMESTAMP '1996-01-01' AND o_orderdate < TIMESTAMP '1998-01-01'
 GROUP BY n_name
 ORDER BY revenue_mcents DESC, n_name
@@ -632,7 +554,7 @@ ORDER BY revenue_mcents DESC, n_name
     "nation/supplier broadcast; the l_orderkey bound evaluates on the "
     "materialized leaf (reader-level key-range pushdown is pinned "
     "separately in tests/test_tpch_datasource.py and exercised live in "
-    "q1/q6; the oracle generates only the in-bound indexes). Reference: "
+    "q1/q6; the oracle applies the same bound). Reference: "
     "q05.sql via TpchMetadata.java:93.",
     tags=("connector",),
 )
@@ -683,27 +605,7 @@ def connector_tpchgen_q5(spark: SparkSession, sf_dir: str) -> DataFrame:
 # 'late' = shipped > 30 days after order date (the generator has no
 # commit/receipt dates, matching the driver fixture).
 
-_Q21_ORACLE = f"""
-WITH ord AS (
-    SELECT i AS o_orderkey,
-           CASE {_Q9_H} % 3 WHEN 0 THEN 'F' WHEN 1 THEN 'O' ELSE 'P' END AS o_orderstatus,
-           TIMESTAMP '1995-01-01' + ({_Q9_H} % 2400) * INTERVAL 1 DAY AS o_orderdate
-    FROM generate_series(0, 9999) AS t(i)
-),
-li AS (
-    SELECT i // 4 AS l_orderkey, {_Q9_H} % 200 AS l_suppkey,
-           TIMESTAMP '1995-01-01' + ({_Q9_H} % 2500) * INTERVAL 1 DAY AS l_shipdate
-    FROM generate_series(0, 39999) AS t(i)
-),
-sup AS (
-    SELECT i AS s_suppkey, 'Supplier#' || lpad(CAST(i AS VARCHAR), 9, '0') AS s_name,
-           {_Q9_H} % 25 AS s_nationkey
-    FROM generate_series(0, 199) AS t(i)
-),
-nat AS (
-    SELECT i AS n_nationkey, 'NATION#' || CAST(i AS VARCHAR) AS n_name
-    FROM generate_series(0, 24) AS t(i)
-)
+_Q21_ORACLE = _GEN_DEFS + """
 SELECT s_name, CAST(count(*) AS BIGINT) AS numwait
 FROM sup
 JOIN li l1 ON s_suppkey = l1.l_suppkey
@@ -741,10 +643,7 @@ ORDER BY numwait DESC, s_name
     tags=("connector",),
 )
 def connector_tpchgen_q21(spark: SparkSession, sf_dir: str) -> DataFrame:
-    views = {
-        table: _gen_view(spark, sf_dir, table)
-        for table in ("orders", "lineitem", "supplier", "nation")
-    }
+    views = _gen_views(spark, sf_dir, "orders", "lineitem", "supplier", "nation")
     return spark.sql(f"""
 SELECT s_name, count(*) AS numwait
 FROM {views['supplier']}
@@ -776,79 +675,11 @@ ORDER BY numwait DESC, s_name
 # to 14 shapes — q4 (EXISTS), q10 (returned-item top-n), q13 (outer-join
 # order-count distribution), q14 (promo share with CASE-gated sums), q16
 # (distinct-supplier counts on partsupp), q17 (correlated per-part average
-# screen), q19 (disjunctive OR-of-ANDs predicate web). One shared DuckDB
-# CTE prelude regenerates every table from generate_series with the shared
-# row hash (unreferenced CTEs are not executed); the Spark side reads the
+# screen), q19 (disjunctive OR-of-ANDs predicate web). The Spark side reads the
 # session-materialized catalog (_gen_catalog). Generator artifact note:
 # the single row hash couples l_quantity to l_partkey (2000 % 50 == 0, so
 # a part's lines all share one quantity); q17's "small" screen therefore
 # compares extendedprice — which varies within a part — not quantity.
-
-_GEN_DEFS = f"""
-WITH ord AS (
-    SELECT i AS o_orderkey, {_Q9_H} % 1500 AS o_custkey,
-           CASE {_Q9_H} % 3 WHEN 0 THEN 'F' WHEN 1 THEN 'O' ELSE 'P' END AS o_orderstatus,
-           CAST(round((({_Q9_H} % 10000000) / 100.0) * 100, 0) AS BIGINT) AS o_cents,
-           TIMESTAMP '1995-01-01' + ({_Q9_H} % 2400) * INTERVAL 1 DAY AS o_orderdate,
-           CASE {_Q9_H} % 5 WHEN 0 THEN '1-URGENT' WHEN 1 THEN '2-HIGH' WHEN 2 THEN '3-MEDIUM'
-                WHEN 3 THEN '4-NOT SPECIFIED' ELSE '5-LOW' END AS o_orderpriority
-    FROM generate_series(0, 9999) AS t(i)
-),
-li AS (
-    SELECT i // 4 AS l_orderkey, {_Q9_H} % 50 + 1 AS qty,
-           CAST(round((({_Q9_H} % 9000000) / 100.0 + 900.0) * 100, 0) AS BIGINT) AS cents,
-           {_Q9_H} % 11 AS disc_pct,
-           CASE WHEN {_Q9_H} % 10 = 0 THEN 'R' WHEN {_Q9_H} % 2 = 0 THEN 'A' ELSE 'N' END AS l_returnflag,
-           {_Q9_H} % 2000 AS l_partkey, {_Q9_H} % 200 AS l_suppkey,
-           TIMESTAMP '1995-01-01' + ({_Q9_H} % 2500) * INTERVAL 1 DAY AS l_shipdate
-    FROM generate_series(0, 39999) AS t(i)
-),
-cust AS (
-    SELECT i AS c_custkey, 'Customer#' || lpad(CAST(i AS VARCHAR), 9, '0') AS c_name,
-           {_Q9_H} % 25 AS c_nationkey,
-           CAST({_Q9_H} % 1100000 - 100000 AS BIGINT) AS acct_cents
-    FROM generate_series(0, 1499) AS t(i)
-),
-prt AS (
-    SELECT i AS p_partkey, 'Brand#' || CAST({_Q9_H} % 25 + 10 AS VARCHAR) AS p_brand,
-           CASE {_Q9_H} % 6 WHEN 0 THEN 'ECONOMY ANODIZED STEEL' WHEN 1 THEN 'LARGE BRUSHED BRASS'
-                WHEN 2 THEN 'MEDIUM POLISHED COPPER' WHEN 3 THEN 'PROMO BURNISHED NICKEL'
-                WHEN 4 THEN 'SMALL PLATED TIN' ELSE 'STANDARD POLISHED STEEL' END AS p_type,
-           {_Q9_H} % 50 + 1 AS p_size,
-           CASE {_Q9_H} % 4 WHEN 0 THEN 'JUMBO PKG' WHEN 1 THEN 'LG CASE' WHEN 2 THEN 'MED BOX' ELSE 'SM DRUM' END AS p_container
-    FROM generate_series(0, 1999) AS t(i)
-),
-ps AS (
-    SELECT i // 4 AS ps_partkey, {_Q9_H} % 200 AS ps_suppkey, {_Q9_H} % 10000 + 1 AS ps_availqty,
-           CAST(round((({_Q9_H} % 100000) / 100.0 + 1.0) * 100, 0) AS BIGINT) AS supp_cents
-    FROM generate_series(0, 7999) AS t(i)
-),
-sup AS (
-    SELECT i AS s_suppkey, 'Supplier#' || lpad(CAST(i AS VARCHAR), 9, '0') AS s_name,
-           {_Q9_H} % 25 AS s_nationkey,
-           CAST({_Q9_H} % 1100000 - 100000 AS BIGINT) AS s_acct_cents
-    FROM generate_series(0, 199) AS t(i)
-),
-nat AS (
-    SELECT i AS n_nationkey, 'NATION#' || CAST(i AS VARCHAR) AS n_name, i % 5 AS n_regionkey
-    FROM generate_series(0, 24) AS t(i)
-),
-reg AS (
-    SELECT i AS r_regionkey,
-           CASE i WHEN 0 THEN 'AFRICA' WHEN 1 THEN 'AMERICA' WHEN 2 THEN 'ASIA'
-                  WHEN 3 THEN 'EUROPE' ELSE 'MIDDLE EAST' END AS r_name
-    FROM generate_series(0, 4) AS t(i)
-)
-"""
-
-
-def _gen_view(spark: SparkSession, sf_dir: str, table: str) -> str:
-    """Catalog table as an sf_dir-scoped temp view (for SQL-form queries)."""
-    from ..operators.staging import dir_digest
-
-    v = f"tpchgen_{table}_{dir_digest(sf_dir)}"
-    _gen_catalog(spark, sf_dir, table).createOrReplaceTempView(v)
-    return v
 
 
 @query(
@@ -869,12 +700,12 @@ GROUP BY o_orderpriority ORDER BY o_orderpriority
     tags=("connector",),
 )
 def connector_tpchgen_q4(spark: SparkSession, sf_dir: str) -> DataFrame:
-    o, l = _gen_view(spark, sf_dir, "orders"), _gen_view(spark, sf_dir, "lineitem")
+    v = _gen_views(spark, sf_dir, "orders", "lineitem")
     return spark.sql(f"""
 SELECT o_orderpriority, count(*) AS order_count
-FROM {o}
+FROM {v['orders']}
 WHERE o_orderdate >= TIMESTAMP '1996-01-01' AND o_orderdate < TIMESTAMP '1996-07-01'
-  AND EXISTS (SELECT 1 FROM {l} WHERE l_orderkey = o_orderkey
+  AND EXISTS (SELECT 1 FROM {v['lineitem']} WHERE l_orderkey = o_orderkey
               AND l_shipdate > o_orderdate + INTERVAL 60 DAY)
 GROUP BY o_orderpriority ORDER BY o_orderpriority
 """)
@@ -941,7 +772,7 @@ GROUP BY c_count ORDER BY custdist DESC, c_count DESC
     tags=("connector",),
 )
 def connector_tpchgen_q13(spark: SparkSession, sf_dir: str) -> DataFrame:
-    c, o = _gen_view(spark, sf_dir, "customer"), _gen_view(spark, sf_dir, "orders")
+    c, o = _gen_views(spark, sf_dir, "customer", "orders").values()
     return spark.sql(f"""
 SELECT c_count, count(*) AS custdist
 FROM (
@@ -1049,7 +880,7 @@ WHERE p_container = 'MED BOX'
     tags=("connector",),
 )
 def connector_tpchgen_q17(spark: SparkSession, sf_dir: str) -> DataFrame:
-    l, p = _gen_view(spark, sf_dir, "lineitem"), _gen_view(spark, sf_dir, "part")
+    l, p = _gen_views(spark, sf_dir, "lineitem", "part").values()
     return spark.sql(f"""
 SELECT count(*) AS n_small,
        CAST(SUM(CAST(l1.l_quantity AS BIGINT)) AS BIGINT) AS small_qty_sum,
@@ -1140,8 +971,7 @@ ORDER BY s_acct_cents DESC, n_name, s_name, p_partkey LIMIT 10
     tags=("connector",),
 )
 def connector_tpchgen_q2(spark: SparkSession, sf_dir: str) -> DataFrame:
-    v = {t: _gen_view(spark, sf_dir, t)
-         for t in ("part", "partsupp", "supplier", "nation", "region")}
+    v = _gen_views(spark, sf_dir, "part", "partsupp", "supplier", "nation", "region")
     return spark.sql(f"""
 SELECT CAST(round(s_acctbal * 100, 0) AS BIGINT) AS s_acct_cents,
        s_name, n_name, p_partkey, p_brand,
@@ -1322,7 +1152,7 @@ ORDER BY value_cq DESC, partkey
     tags=("connector",),
 )
 def connector_tpchgen_q11(spark: SparkSession, sf_dir: str) -> DataFrame:
-    v = {t: _gen_view(spark, sf_dir, t) for t in ("partsupp", "supplier", "nation")}
+    v = _gen_views(spark, sf_dir, "partsupp", "supplier", "nation")
     return spark.sql(f"""
 WITH value_by_part AS (
   SELECT ps_partkey AS partkey,
@@ -1398,8 +1228,7 @@ ORDER BY s_suppkey
 def connector_tpchgen_q15(spark: SparkSession, sf_dir: str) -> DataFrame:
     from ..operators.staging import staged_view
 
-    li_v = _gen_view(spark, sf_dir, "lineitem")
-    sup_v = _gen_view(spark, sf_dir, "supplier")
+    li_v, sup_v = _gen_views(spark, sf_dir, "lineitem", "supplier").values()
     rev_v = staged_view(
         spark, sf_dir, "tpchgen_q15_revenue",
         lambda: spark.sql(f"""
@@ -1447,8 +1276,7 @@ ORDER BY s_name
     tags=("connector",),
 )
 def connector_tpchgen_q20(spark: SparkSession, sf_dir: str) -> DataFrame:
-    v = {t: _gen_view(spark, sf_dir, t)
-         for t in ("supplier", "nation", "partsupp", "part", "lineitem")}
+    v = _gen_views(spark, sf_dir, "supplier", "nation", "partsupp", "part", "lineitem")
     return spark.sql(f"""
 SELECT s_name, n_name
 FROM {v['supplier']} JOIN {v['nation']} ON s_nationkey = n_nationkey
@@ -1487,7 +1315,7 @@ GROUP BY n_name ORDER BY n_name
     tags=("connector",),
 )
 def connector_tpchgen_q22(spark: SparkSession, sf_dir: str) -> DataFrame:
-    c, o, n = (_gen_view(spark, sf_dir, t) for t in ("customer", "orders", "nation"))
+    c, o, n = _gen_views(spark, sf_dir, "customer", "orders", "nation").values()
     return spark.sql(f"""
 SELECT n_name, count(*) AS numcust,
        CAST(SUM(CAST(round(c_acctbal * 100, 0) AS BIGINT)) AS BIGINT) AS totacct_cents

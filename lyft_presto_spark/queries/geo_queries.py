@@ -69,6 +69,8 @@ def _square(x0, y0, s, cw: bool = False) -> F.Column:
     counter-clockwise unless ``cw``."""
     c = [(x0, y0), (x0 + s, y0), (x0 + s, y0 + s), (x0, y0 + s), (x0, y0)]
     return _pts(*(c[::-1] if cw else c))
+
+
 CITY_RADIUS_KM = 500.0
 
 # Deterministic synthetic coordinates from integer keys (exact in DOUBLE).
@@ -1125,18 +1127,11 @@ ORDER BY c_custkey
 def fn_geo_wkb(spark: SparkSession, sf_dir: str) -> DataFrame:
     src = sql_over(spark, sf_dir, _WKB_SRC, ("customer",))
     # L-path (0,0) -> (a,0) -> (a,b): length is exactly a + b.
-    line = F.array(
-        G.st_point(F.lit(0.0), F.lit(0.0)),
-        G.st_point(F.col("a"), F.lit(0.0)),
-        G.st_point(F.col("a"), F.col("b")),
-    )
+    line = _pts((0.0, 0.0), (F.col("a"), 0.0), (F.col("a"), F.col("b")))
     # Closed square ring of side s: area is exactly s^2.
-    ring = F.array(
-        G.st_point(F.lit(0.0), F.lit(0.0)),
-        G.st_point(F.col("s"), F.lit(0.0)),
-        G.st_point(F.col("s"), F.col("s")),
-        G.st_point(F.lit(0.0), F.col("s")),
-        G.st_point(F.lit(0.0), F.lit(0.0)),
+    ring = _pts(
+        (0.0, 0.0), (F.col("s"), 0.0), (F.col("s"), F.col("s")), (0.0, F.col("s")),
+        (0.0, 0.0),
     )
     # Staged selects, deliberately: the reflect() bit-casts inside the WKB
     # codecs are flagged nondeterministic, so Catalyst will not
@@ -1220,20 +1215,10 @@ ORDER BY c_custkey
 )
 def fn_geo_line_predicates(spark: SparkSession, sf_dir: str) -> DataFrame:
     src = sql_over(spark, sf_dir, _LINE_PRED_SRC, ("customer",))
-    base = F.array(
-        G.st_point(F.lit(0.0), F.lit(0.0)), G.st_point(F.lit(10.0), F.lit(0.0))
-    )
-    vert = F.array(
-        G.st_point(F.col("k1"), F.lit(-1.0)), G.st_point(F.col("k1"), F.col("k2"))
-    )
-    zig = F.array(
-        G.st_point(F.lit(0.0), F.lit(0.0)),
-        G.st_point(F.lit(3.0), F.lit(4.0)),
-        G.st_point(F.lit(6.0), F.lit(0.0)),
-    )
-    horiz = F.array(
-        G.st_point(F.lit(0.0), F.col("h")), G.st_point(F.lit(6.0), F.col("h"))
-    )
+    base = _pts((0.0, 0.0), (10.0, 0.0))
+    vert = _pts((F.col("k1"), -1.0), (F.col("k1"), F.col("k2")))
+    zig = _pts((0.0, 0.0), (3.0, 4.0), (6.0, 0.0))
+    horiz = _pts((0.0, F.col("h")), (6.0, F.col("h")))
     return src.select(
         "c_custkey",
         G.st_intersects_lines(base, vert).alias("vert_intersects"),
@@ -1360,31 +1345,11 @@ def fn_geo_simple_ring(spark: SparkSession, sf_dir: str) -> DataFrame:
     src = sql_over(spark, sf_dir, _SIMPLE_SRC, ("customer",))
 
     def build() -> tuple:
-        polyline = F.array(
-            G.st_point(F.lit(0.0), F.lit(0.0)),
-            G.st_point(F.lit(5.0), F.lit(0.0)),
-            G.st_point(F.col("m"), F.col("b")),
-        )
-        square = [(0.0, 0.0), (4.0, 4.0), (4.0, 0.0), (0.0, 4.0)]
-        ring = F.when(
-            F.col("make_bowtie"),
-            F.array(*[G.st_point(F.lit(x), F.lit(y)) for x, y in square]
-                    + [G.st_point(F.lit(0.0), F.lit(0.0))]),
-        ).otherwise(
-            F.array(
-                G.st_point(F.lit(0.0), F.lit(0.0)),
-                G.st_point(F.lit(4.0), F.lit(0.0)),
-                G.st_point(F.lit(4.0), F.lit(4.0)),
-                G.st_point(F.lit(0.0), F.lit(4.0)),
-                G.st_point(F.lit(0.0), F.lit(0.0)),
-            )
-        )
-        base = F.array(
-            G.st_point(F.lit(0.0), F.lit(0.0)), G.st_point(F.lit(10.0), F.lit(0.0))
-        )
-        vert = F.array(
-            G.st_point(F.col("k1"), F.lit(-1.0)), G.st_point(F.col("k1"), F.col("k2"))
-        )
+        polyline = _pts((0.0, 0.0), (5.0, 0.0), (F.col("m"), F.col("b")))
+        bowtie = _pts((0.0, 0.0), (4.0, 4.0), (4.0, 0.0), (0.0, 4.0), (0.0, 0.0))
+        ring = F.when(F.col("make_bowtie"), bowtie).otherwise(_square(0.0, 0.0, 4))
+        base = _pts((0.0, 0.0), (10.0, 0.0))
+        vert = _pts((F.col("k1"), -1.0), (F.col("k1"), F.col("k2")))
         crossings = G.st_line_crossings(base, vert)
         # F.get, not element_at: ANSI element_at throws on the empty (no
         # crossing) array; get returns NULL out of bounds.
@@ -1451,15 +1416,9 @@ def fn_geo_line_touches(spark: SparkSession, sf_dir: str) -> DataFrame:
     src = sql_over(spark, sf_dir, _TOUCH_SRC, ("customer",))
 
     def build() -> tuple:
-        base = F.array(
-            G.st_point(F.lit(0.0), F.lit(0.0)), G.st_point(F.lit(10.0), F.lit(0.0))
-        )
-        vert = F.array(
-            G.st_point(F.col("k1"), F.lit(-1.0)), G.st_point(F.col("k1"), F.col("k2"))
-        )
-        coll = F.array(
-            G.st_point(F.col("c"), F.lit(0.0)), G.st_point(F.col("c") + 5.0, F.lit(0.0))
-        )
+        base = _pts((0.0, 0.0), (10.0, 0.0))
+        vert = _pts((F.col("k1"), -1.0), (F.col("k1"), F.col("k2")))
+        coll = _pts((F.col("c"), 0.0), (F.col("c") + 5.0, 0.0))
         return (
             G.st_touches_lines(base, vert).alias("vert_touches"),
             G.st_touches_lines(base, coll).alias("coll_touches"),
@@ -1692,23 +1651,9 @@ ORDER BY c_custkey
 def fn_geo_accessors(spark: SparkSession, sf_dir: str) -> DataFrame:
     src = sql_over(spark, sf_dir, _ACCESSOR_SRC, ("customer",))
     a, b = F.col("a"), F.col("b")
-    pts = F.array(
-        G.st_point(F.lit(0.0), F.lit(0.0)),
-        G.st_point(a, F.lit(0.0)),
-        G.st_point(a, b),
-    )
-    line = F.array(
-        G.st_point(F.lit(0.0), F.lit(0.0)),
-        G.st_point(a, F.lit(0.0)),
-        G.st_point(a, F.lit(3.0)),
-    )
-    ring = F.array(
-        G.st_point(F.lit(0.0), F.lit(0.0)),
-        G.st_point(a, F.lit(0.0)),
-        G.st_point(a, a),
-        G.st_point(F.lit(0.0), a),
-        G.st_point(F.lit(0.0), F.lit(0.0)),
-    )
+    pts = _pts((0.0, 0.0), (a, 0.0), (a, b))
+    line = _pts((0.0, 0.0), (a, 0.0), (a, 3.0))
+    ring = _pts((0.0, 0.0), (a, 0.0), (a, a), (0.0, a), (0.0, 0.0))
     wkt = F.when(F.col("alt"), F.lit("LINESTRING (0 0, 1 1)")).otherwise(
         F.lit("MULTIPOINT (0 0, 1 1)")
     )
@@ -1853,9 +1798,9 @@ ORDER BY c_custkey
     "fn_geo_hull_simplify",
     oracle=_HULL_SIMPLIFY_ORACLE,
     doc="Scalar ST_ConvexHull (GeoFunctions.java:411) and simplify_geometry "
-    "(:856, Douglas-Peucker): the two planar scalars that need per-row "
-    "loops, as Arrow-batched pandas UDFs (operators/geo_scalar.py) sharing "
-    "the monotone chain with convex_hull_agg so scalar and aggregate agree "
+    "(:856, Douglas-Peucker): per-row planar kernels run through the one "
+    "Arrow-batched pandas UDF adapter of operators/geo_scalar.py, the hull "
+    "sharing the monotone chain with convex_hull_agg so scalar and aggregate agree "
     "vertex-for-vertex. The hull output feeds the codegen st_area measure "
     "directly (UDF produces the standard geometry type). Closed-form "
     "oracle in s (square side) and amp (zigzag amplitude).",
@@ -1867,20 +1812,8 @@ def fn_geo_hull_simplify(spark: SparkSession, sf_dir: str) -> DataFrame:
     src = sql_over(spark, sf_dir, _HULL_SIMPLIFY_SRC, ("customer",))
     s, amp = F.col("s"), F.col("amp")
     # Interior point listed first: the hull must sort, not trust input order.
-    cloud = F.array(
-        G.st_point(F.lit(0.5), F.lit(0.25)),
-        G.st_point(F.lit(0.0), F.lit(0.0)),
-        G.st_point(s, F.lit(0.0)),
-        G.st_point(s, s),
-        G.st_point(F.lit(0.0), s),
-    )
-    zig = F.array(
-        G.st_point(F.lit(0.0), F.lit(0.0)),
-        G.st_point(F.lit(1.0), amp),
-        G.st_point(F.lit(2.0), F.lit(0.0)),
-        G.st_point(F.lit(3.0), amp),
-        G.st_point(F.lit(4.0), F.lit(0.0)),
-    )
+    cloud = _pts((0.5, 0.25), (0.0, 0.0), (s, 0.0), (s, s), (0.0, s))
+    zig = _pts((0.0, 0.0), (1.0, amp), (2.0, 0.0), (3.0, amp), (4.0, 0.0))
     hull = GS.st_convex_hull(cloud)
     return src.select(
         "c_custkey",
@@ -2544,10 +2477,7 @@ def fn_geo_spherical_pole(spark: SparkSession, sf_dir: str) -> DataFrame:
         ),
     )
     ring = F.concat(open_ring, F.slice(open_ring, 1, 1))
-    meridian = F.array(
-        G.st_point(F.lit(10.0), F.lit(0.0)),
-        G.st_point(F.lit(10.0), F.col("d")),
-    )
+    meridian = _pts((10.0, 0.0), (10.0, F.col("d")))
     # Stage the ring ARRAY as a real column and compute the bearing walk
     # ONCE: st_spherical_excess(pole_correction=True) embeds a second full
     # course-delta tree and the inline ring expression is duplicated into
@@ -2890,10 +2820,7 @@ def fn_geo_intersection_pieces(spark: SparkSession, sf_dir: str) -> DataFrame:
 
         def rect(x1, y1, x2, y2) -> F.Column:
             return F.array(
-                F.array(
-                    G.st_point(x1, y1), G.st_point(x2, y1),
-                    G.st_point(x2, y2), G.st_point(x1, y2), G.st_point(x1, y1),
-                )
+                _pts((x1, y1), (x2, y1), (x2, y2), (x1, y2), (x1, y1))
             )
 
         zero = F.lit(0.0)
@@ -3526,12 +3453,9 @@ def fn_geo_buffer_line(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     src = sql_over(spark, sf_dir, _BUFFER_LINE_SRC, ("customer",))
     rad = F.radians(F.col("deg"))
-    line = F.array(
-        G.st_point(F.lit(1.0), F.lit(1.0)),
-        G.st_point(
-            F.lit(1.0) + F.col("len") * F.cos(rad),
-            F.lit(1.0) + F.col("len") * F.sin(rad),
-        ),
+    line = _pts(
+        (1.0, 1.0),
+        (F.lit(1.0) + F.col("len") * F.cos(rad), F.lit(1.0) + F.col("len") * F.sin(rad)),
     )
     staged = src.repartition(32).select(
         "c_custkey",
@@ -3586,11 +3510,7 @@ def fn_geo_buffer_polygon(spark: SparkSession, sf_dir: str) -> DataFrame:
     src = sql_over(spark, sf_dir, _BUFFER_POLY_SRC, ("customer",))
     w, h = F.col("w"), F.col("h")
     rect = F.array(
-        F.array(
-            G.st_point(F.lit(0.0), F.lit(0.0)), G.st_point(w, F.lit(0.0)),
-            G.st_point(w, h), G.st_point(F.lit(0.0), h),
-            G.st_point(F.lit(0.0), F.lit(0.0)),
-        )
+        _pts((0.0, 0.0), (w, 0.0), (w, h), (0.0, h), (0.0, 0.0))
     )
     # the fold UDF is CPU-heavy per row while the filtered source is a
     # handful of scan partitions — spread rows so every core folds
@@ -3749,12 +3669,9 @@ def fn_geo_union_array(spark: SparkSession, sf_dir: str) -> DataFrame:
     geoms = F.transform(
         idx,
         lambda i: F.array(
-            F.array(
-                G.st_point(i * step, F.lit(0.0)),
-                G.st_point(i * step + 2, F.lit(0.0)),
-                G.st_point(i * step + 2, F.lit(2.0)),
-                G.st_point(i * step, F.lit(2.0)),
-                G.st_point(i * step, F.lit(0.0)),
+            _pts(
+                (i * step, 0.0), (i * step + 2, 0.0), (i * step + 2, 2.0),
+                (i * step, 2.0), (i * step, 0.0),
             )
         ),
     )
@@ -3814,18 +3731,13 @@ def fn_geo_distance_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
         gx, gy = F.col("gx"), F.col("gy")
         lit = F.lit
 
-        def sq_ring(x, y):
-            return F.array(
-                G.st_point(x, y), G.st_point(x + 1, y),
-                G.st_point(x + 1, y + 1), G.st_point(x, y + 1), G.st_point(x, y),
-            )
-        a = sq_ring(lit(0.0), lit(0.0))
-        b = sq_ring(gx, gy)
+        a = _square(lit(0.0), lit(0.0), 1)
+        b = _square(gx, gy, 1)
         # boundary distance of DISJOINT squares equals the polygon distance;
         # when they overlap the polygon distance is 0 while ring boundaries
         # may still be apart — the fixture grid keeps gaps >= 0 so both
         # columns share one closed form (overlap rows have gap 0 via touch)
-        diag = F.array(G.st_point(gx + gy, lit(0.0)), G.st_point(lit(0.0), gx + gy))
+        diag = _pts((gx + gy, 0.0), (0.0, gx + gy))
         pt = G.st_point(lit(1.0), lit(1.0))
         return (
             F.round(G.st_distance_polygons(a, b), 9).alias("poly_dist"),

@@ -72,22 +72,10 @@ def spread(df: DataFrame, parts: int | None = None) -> DataFrame:
     return df.repartition(n)
 
 
-# View-mount memo: (session, view name) -> sf_dir currently mounted. Temp-view
-# registration is a catalog RPC per call; skipping the no-op re-registration
-# keeps repeated query calls (bench reps, the driver's sweep) free of it while
-# still remounting whenever the caller switches scale-factor directories.
-# Keyed by applicationId, not id(spark): a stopped session's id() can be
-# recycled, which would skip the mount for a brand-new session.
-_MOUNTED: dict[tuple[str, str], str] = {}
-
-
 def sql_over(spark: SparkSession, sf_dir: str, sql: str, tables: tuple[str, ...]) -> DataFrame:
-    """Run Spark SQL after registering the named fixture tables as views."""
-    from ..session import session_key
+    """Run Spark SQL after mounting the named fixture tables as views."""
+    from ..session import mount_table
 
     for name in tables:
-        key = (session_key(spark), name)
-        if _MOUNTED.get(key) != sf_dir:
-            t(spark, sf_dir, name).createOrReplaceTempView(name)
-            _MOUNTED[key] = sf_dir
+        mount_table(spark, sf_dir, name)
     return spark.sql(sql)

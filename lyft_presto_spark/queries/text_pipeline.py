@@ -20,15 +20,11 @@ from .registry import query, sql_over
 STOPWORDS = ("the", "a", "an", "and", "or", "of", "to", "in", "is", "it")
 
 
-def _size(expr: str, d: str) -> str:
-    return T.array_size(expr, d)
-
-
 def _token_stats_sql(d: str) -> str:
     toks = T.tokens("text", d)
     return f"""
 WITH per_doc AS (
-    SELECT doc_id, source, {_size(toks, d)} AS n_tokens, n_chars
+    SELECT doc_id, source, {T.array_size(toks, d)} AS n_tokens, n_chars
     FROM documents
 )
 SELECT source,
@@ -106,10 +102,10 @@ def _quality_doc_ctes(d: str, src: str = "documents") -> str:
 ),
 scored AS (
     SELECT doc_id, source,
-           {_size('toks', d)} AS n_tokens,
+           {T.array_size('toks', d)} AS n_tokens,
            round(CAST(n_chars - n_alnum AS DOUBLE) / n_chars, 6) AS punct_ratio,
-           round(CAST({n_stop} AS DOUBLE) / {_size('toks', d)}, 6) AS stopword_ratio,
-           round(CAST(n_alnum AS DOUBLE) / {_size('toks', d)}, 6) AS avg_token_len
+           round(CAST({n_stop} AS DOUBLE) / {T.array_size('toks', d)}, 6) AS stopword_ratio,
+           round(CAST(n_alnum AS DOUBLE) / {T.array_size('toks', d)}, 6) AS avg_token_len
     FROM feat
 ),
 final AS (
@@ -270,7 +266,7 @@ def _packing_sql(d: str) -> str:
     # of greedy bin packing (window cumsum, identical in both engines).
     # Oversized documents occupy their own pack(s).
     toks = T.tokens("text", d)
-    n = _size("toks", d)
+    n = T.array_size("toks", d)
     return f"""
 WITH counted AS (
     SELECT lang, doc_id, {n} AS n_tokens
@@ -338,7 +334,7 @@ def _decontaminate_sql(d: str, sh_view: str | None = None) -> str:
 ),
 sh_t AS (
     SELECT doc_id, lang, split, {sh} AS sh,
-           {_size(sh, d)} AS n_sh
+           {T.array_size(sh, d)} AS n_sh
     FROM split_docs
 ),
 """
@@ -387,7 +383,7 @@ def text_decontaminate(spark: SparkSession, sf_dir: str) -> DataFrame:
     sh = T.shingles("toks", "spark")
     h = T.hash60("CAST(doc_id AS STRING)", "spark")
     build_sql = f"""
-SELECT doc_id, lang, split, {sh} AS sh, {_size(sh, "spark")} AS n_sh
+SELECT doc_id, lang, split, {sh} AS sh, {T.array_size(sh, "spark")} AS n_sh
 FROM (
     SELECT doc_id, lang, {toks} AS toks,
            CASE WHEN {h} % 1000 < 800 THEN 'train'
@@ -530,7 +526,7 @@ def _mixture_sql(d: str) -> str:
     h = T.hash60("CAST(doc_id AS STRING)", d)
     return f"""
 WITH counted AS (
-    SELECT source, doc_id, {_size('toks', d)} AS n_tokens
+    SELECT source, doc_id, {T.array_size('toks', d)} AS n_tokens
     FROM (SELECT source, doc_id, {toks} AS toks FROM documents)
 ),
 totals AS (

@@ -173,6 +173,26 @@ def _read_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     return df
 
 
+# View-mount memo: (session, view name) -> sf_dir currently mounted under
+# that name. Temp-view registration is a catalog RPC per call; skipping the
+# no-op re-registration keeps repeated query calls (bench reps, the driver's
+# sweep) free of it while still remounting whenever the caller switches
+# scale-factor directories. Keyed by applicationId, not id(spark): a stopped
+# session's id() can be recycled, which would skip the mount for a brand-new
+# session.
+_MOUNTED: dict[tuple[str, str], str] = {}
+
+
+def mount_table(spark: SparkSession, sf_dir: str, name: str) -> None:
+    """Register fixture table ``name`` of ``sf_dir`` as the temp view
+    ``name``. Every bare-name fixture view is mounted here, so the memo
+    always names the directory the view reads."""
+    key = (session_key(spark), name)
+    if _MOUNTED.get(key) != sf_dir:
+        load_table(spark, sf_dir, name).createOrReplaceTempView(name)
+        _MOUNTED[key] = sf_dir
+
+
 def register_tables(spark: SparkSession, sf_dir: str) -> None:
     """Register every fixture table as a temp view (the 'catalog mount').
 
@@ -180,9 +200,8 @@ def register_tables(spark: SparkSession, sf_dir: str) -> None:
     (MetadataManager); here a catalog is a directory of parquet tables.
     """
     for name in TABLES:
-        path = table_path(sf_dir, name)
-        if os.path.exists(path):
-            load_table(spark, sf_dir, name).createOrReplaceTempView(name)
+        if os.path.exists(table_path(sf_dir, name)):
+            mount_table(spark, sf_dir, name)
 
 
 def session_with_catalog(sf_dir: str = DEFAULT_SF_DIR, **kwargs) -> SparkSession:

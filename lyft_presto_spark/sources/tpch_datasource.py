@@ -3,23 +3,23 @@
 Reference: the ``presto-tpch`` connector generates table rows lazily per
 split instead of reading files (presto-tpch/.../TpchConnectorFactory.java:35,
 TpchPageSourceProvider.java, LazyRecordPageSource.java; splits are row-range
-partitions in TpchSplitManager). SURVEY §2.3 previously satisfied this row
-with pre-generated parquet fixtures; this module upgrades it to a real
-generator CONNECTOR: ``spark.read.format("tpchgen")`` plans row-range input
-partitions and each executor synthesizes its rows on demand — no files, no
-shuffle, scale set by an option exactly like the reference's ``sf`` schemas.
+partitions in TpchSplitManager). ``spark.read.format("tpchgen")`` plans
+row-range input partitions and each executor synthesizes its rows on demand
+(no files, no shuffle), with the scale set by an option like the
+reference's ``sf`` schemas.
 
 Spark-first mapping: Spark 4's Python DataSource API is the connector SPI
 analog (DataSource ≈ ConnectorFactory, DataSourceReader ≈ SplitManager +
 PageSourceProvider, InputPartition ≈ TpchSplit).
 
-Determinism contract: every field is a pure integer function of the row
-index (a Knuth multiplicative hash mod 2^32 — exact in int64), so the SAME
-rows are reproducible in ANSI SQL via ``generate_series`` — the DuckDB
-oracle for the registered query regenerates the data independently and the
-driver value-checks the connector end-to-end. (The reference pins its
-generator the same way: TestTpchMetadata asserts airlift-tpch's
-deterministic output.)
+Every table of the 8-table catalog is defined once, in ``_batches``: the
+batch reader yields its Arrow RecordBatches and the stream reader turns the
+same batches into tuples. Every field is a pure integer function of the row
+index, so the DuckDB oracles regenerate the same rows with
+``generate_series`` (one prelude, ``connector_queries._GEN_DEFS``) and
+tests/test_tpch_datasource.py compares every column of every table against
+it. (The reference pins its generator the same way: TestTpchMetadata
+asserts airlift-tpch's deterministic output.)
 
 Row-count note: ``rows`` is per-table cardinality; partitions split the
 index range evenly with the remainder on the last split, so partition count
@@ -27,8 +27,6 @@ never changes results (pinned by test).
 """
 
 from __future__ import annotations
-
-from datetime import datetime, timedelta
 
 from pyspark.sql.datasource import DataSource, DataSourceReader, InputPartition
 from pyspark.sql.types import (
@@ -43,7 +41,6 @@ from pyspark.sql.types import (
 
 _M32 = 4_294_967_296  # 2^32
 _KNUTH = 2_654_435_761  # Knuth multiplicative hash constant
-_EPOCH = datetime(1995, 1, 1)
 
 _STATUS = ("F", "O", "P")
 _PRIORITY = ("1-URGENT", "2-HIGH", "3-MEDIUM", "4-NOT SPECIFIED", "5-LOW")
@@ -138,103 +135,15 @@ PARTSUPP_SCHEMA = StructType(
 )
 
 
-def _h(i: int) -> int:
-    """The shared row hash: exact in int64, reproducible in ANSI SQL as
-    ``(i * 2654435761 + 40503) % 4294967296``."""
-    return (i * _KNUTH + 40503) % _M32
-
-
-# FK moduli scale with the catalog scale factor: each row function takes the
-# catalog's scaled cardinalities so o_custkey / l_partkey / l_suppkey /
-# ps_suppkey always land inside the FK target's key range at ANY sf (the
-# reference's generator guarantees resolvable FKs at every scale factor the
-# same way). ``card=None`` means base scale — direct calls and the default
-# sf=1 catalog are unchanged.
-
-
-def orders_row(i: int, card: dict | None = None) -> tuple:
-    c = card or DEFAULT_ROWS
-    h = _h(i)
-    return (
-        i,
-        h % c["customer"],
-        _STATUS[h % 3],
-        (h % 10_000_000) / 100.0,
-        _EPOCH + timedelta(days=h % 2400),
-        _PRIORITY[h % 5],
-    )
-
-
-def lineitem_row(i: int, card: dict | None = None) -> tuple:
-    c = card or DEFAULT_ROWS
-    h = _h(i)
-    return (
-        i // 4,  # ~4 lines per order
-        int(i % 4) + 1,
-        float(h % 50 + 1),
-        (h % 9_000_000) / 100.0 + 900.0,
-        float(h % 11) / 100.0,
-        "R" if h % 10 == 0 else ("A" if h % 2 == 0 else "N"),
-        h % c["part"],  # l_partkey inside the scaled part key range
-        h % c["supplier"],  # l_suppkey inside the scaled supplier key range
-        _EPOCH + timedelta(days=h % 2500),  # l_shipdate
-    )
-
-
-def region_row(i: int, card: dict | None = None) -> tuple:
-    return (i, _REGIONS[i % 5])
-
-
-def nation_row(i: int, card: dict | None = None) -> tuple:
-    # region spread is index-derived (i % 5) so every region key resolves
-    return (i, f"NATION#{i}", i % 5)
-
-
-def customer_row(i: int, card: dict | None = None) -> tuple:
-    h = _h(i)
-    return (
-        i,
-        f"Customer#{i:09d}",
-        h % 25,
-        (h % 1_100_000 - 100_000) / 100.0,  # acctbal in [-1000, 10000)
-        _SEGMENTS[h % 5],
-    )
-
-
-def supplier_row(i: int, card: dict | None = None) -> tuple:
-    h = _h(i)
-    return (i, f"Supplier#{i:09d}", h % 25, (h % 1_100_000 - 100_000) / 100.0)
-
-
-def part_row(i: int, card: dict | None = None) -> tuple:
-    h = _h(i)
-    return (
-        i,
-        f"part#{i}",
-        f"Brand#{h % 25 + 10}",
-        _TYPES[h % 6],
-        int(h % 50 + 1),
-        _CONTAINERS[h % 4],
-        (h % 200_000) / 100.0 + 900.0,
-    )
-
-
-def partsupp_row(i: int, card: dict | None = None) -> tuple:
-    # 4 suppliers per part, like the reference's SUPPLIERS_PER_PART=4
-    c = card or DEFAULT_ROWS
-    h = _h(i)
-    return (i // 4, h % c["supplier"], int(h % 10_000 + 1), (h % 100_000) / 100.0 + 1.0)
-
-
-_TABLES = {
-    "region": (REGION_SCHEMA, region_row),
-    "nation": (NATION_SCHEMA, nation_row),
-    "customer": (CUSTOMER_SCHEMA, customer_row),
-    "supplier": (SUPPLIER_SCHEMA, supplier_row),
-    "part": (PART_SCHEMA, part_row),
-    "partsupp": (PARTSUPP_SCHEMA, partsupp_row),
-    "orders": (ORDERS_SCHEMA, orders_row),
-    "lineitem": (LINEITEM_SCHEMA, lineitem_row),
+_SCHEMAS = {
+    "region": REGION_SCHEMA,
+    "nation": NATION_SCHEMA,
+    "customer": CUSTOMER_SCHEMA,
+    "supplier": SUPPLIER_SCHEMA,
+    "part": PART_SCHEMA,
+    "partsupp": PARTSUPP_SCHEMA,
+    "orders": ORDERS_SCHEMA,
+    "lineitem": LINEITEM_SCHEMA,
 }
 
 # Reference default cardinalities at the connector's base scale: the
@@ -342,87 +251,97 @@ class TpchGenReader(DataSourceReader):
         return splits
 
     def read(self, partition: _RangeSplit):
-        # Vectorized page source for the fact tables (the reference batches
-        # rows through LazyRecordPageSource the same way): yielding Arrow
-        # RecordBatches synthesized with numpy replaces per-row Python
-        # pickling — at 40k rows/split that is the difference between the
-        # scan being generation-bound and being serialization-bound. The
-        # dimension tables stay row-based (string formatting per row,
-        # cardinalities tiny). Value equality between the two paths is
-        # pinned by tests (the batch path must reproduce the row functions
-        # bit-for-bit).
-        if self.table in _VECTOR_TABLES:
-            yield from _vector_batches(
-                self.table, partition.start, partition.end, self.card
-            )
-            return
-        gen = _TABLES[self.table][1]
-        card = self.card
-        for i in range(partition.start, partition.end):
-            yield gen(i, card)
+        # Arrow RecordBatches synthesized with numpy, like the reference's
+        # LazyRecordPageSource batches rows into pages: no per-row Python
+        # objects are built or pickled.
+        yield from _batches(self.table, partition.start, partition.end, self.card)
 
 
-# Tables with a vectorized (numpy -> Arrow RecordBatch) synthesis path.
-_VECTOR_TABLES = ("orders", "lineitem", "partsupp")
 _BATCH_ROWS = 65_536  # rows per Arrow batch
 
 
-def _vector_batches(table: str, start: int, end: int, card: dict):
-    """Arrow RecordBatches reproducing the row functions bit-for-bit.
+def _batches(table: str, start: int, end: int, card: dict):
+    """Rows [start, end) of ``table`` as Arrow RecordBatches: the one
+    synthesis path behind both the batch and the stream reader.
 
-    All arithmetic is exact int64 (i * 2654435761 + 40503 < 2^63 for any
-    realistic row count); money fields divide the SAME integers by 100.0
-    the scalar path divides, so doubles match bit-for-bit; timestamps are
-    whole days from the shared epoch."""
+    Row i's fields are pure integer functions of i and of the shared row
+    hash ``h = (i * 2654435761 + 40503) % 4294967296`` (Knuth multiplicative,
+    exact in int64 for any realistic row count), so ANSI SQL regenerates
+    them with ``generate_series`` (the DuckDB oracles in
+    queries/connector_queries.py). Money divides an exact integer by 100.0,
+    so doubles match the SQL regeneration bit for bit; timestamps are whole
+    days from 1995-01-01. FK moduli are the catalog's scaled cardinalities
+    ``card``, so every foreign key resolves at any sf."""
     import numpy as np
     import pyarrow as pa
 
     epoch = np.datetime64("1995-01-01", "us")
     day = np.timedelta64(1, "D").astype("timedelta64[us]")
+    names = [f.name for f in _SCHEMAS[table].fields]
+
     for lo in range(start, end, _BATCH_ROWS):
-        hi = min(lo + _BATCH_ROWS, end)
-        i = np.arange(lo, hi, dtype=np.int64)
+        i = np.arange(lo, min(lo + _BATCH_ROWS, end), dtype=np.int64)
         h = (i * _KNUTH + 40503) % _M32
-        if table == "orders":
-            status = np.array(_STATUS)[h % 3]
-            prio = np.array(_PRIORITY)[h % 5]
-            yield pa.record_batch(
-                [
-                    pa.array(i),
-                    pa.array(h % card["customer"]),
-                    pa.array(status),
-                    pa.array((h % 10_000_000) / 100.0),
-                    pa.array(epoch + (h % 2400) * day),
-                    pa.array(prio),
-                ],
-                names=[f.name for f in ORDERS_SCHEMA.fields],
-            )
-        elif table == "lineitem":
-            rf = np.where(h % 10 == 0, "R", np.where(h % 2 == 0, "A", "N"))
-            yield pa.record_batch(
-                [
-                    pa.array(i // 4),
-                    pa.array((i % 4 + 1).astype(np.int32)),
-                    pa.array((h % 50 + 1).astype(np.float64)),
-                    pa.array((h % 9_000_000) / 100.0 + 900.0),
-                    pa.array((h % 11).astype(np.float64) / 100.0),
-                    pa.array(rf),
-                    pa.array(h % card["part"]),
-                    pa.array(h % card["supplier"]),
-                    pa.array(epoch + (h % 2500) * day),
-                ],
-                names=[f.name for f in LINEITEM_SCHEMA.fields],
-            )
-        else:  # partsupp
-            yield pa.record_batch(
-                [
-                    pa.array(i // 4),
-                    pa.array(h % card["supplier"]),
-                    pa.array((h % 10_000 + 1).astype(np.int32)),
-                    pa.array((h % 100_000) / 100.0 + 1.0),
-                ],
-                names=[f.name for f in PARTSUPP_SCHEMA.fields],
-            )
+        if table == "region":
+            cols = [i, np.array(_REGIONS)[i % 5]]
+        elif table == "nation":
+            # index-derived region spread, so every region key resolves
+            cols = [i, np.char.mod("NATION#%d", i), i % 5]
+        elif table == "customer":
+            cols = [
+                i,
+                np.char.mod("Customer#%09d", i),
+                h % 25,
+                (h % 1_100_000 - 100_000) / 100.0,  # acctbal in [-1000, 10000)
+                np.array(_SEGMENTS)[h % 5],
+            ]
+        elif table == "supplier":
+            cols = [
+                i,
+                np.char.mod("Supplier#%09d", i),
+                h % 25,
+                (h % 1_100_000 - 100_000) / 100.0,
+            ]
+        elif table == "part":
+            cols = [
+                i,
+                np.char.mod("part#%d", i),
+                np.char.mod("Brand#%d", h % 25 + 10),
+                np.array(_TYPES)[h % 6],
+                (h % 50 + 1).astype(np.int32),
+                np.array(_CONTAINERS)[h % 4],
+                (h % 200_000) / 100.0 + 900.0,
+            ]
+        elif table == "partsupp":
+            # 4 suppliers per part, like the reference's SUPPLIERS_PER_PART=4
+            cols = [
+                i // 4,
+                h % card["supplier"],
+                (h % 10_000 + 1).astype(np.int32),
+                (h % 100_000) / 100.0 + 1.0,
+            ]
+        elif table == "orders":
+            cols = [
+                i,
+                h % card["customer"],
+                np.array(_STATUS)[h % 3],
+                (h % 10_000_000) / 100.0,
+                epoch + (h % 2400) * day,
+                np.array(_PRIORITY)[h % 5],
+            ]
+        else:  # lineitem: ~4 lines per order
+            cols = [
+                i // 4,
+                (i % 4 + 1).astype(np.int32),
+                (h % 50 + 1).astype(np.float64),
+                (h % 9_000_000) / 100.0 + 900.0,
+                (h % 11) / 100.0,
+                np.where(h % 10 == 0, "R", np.where(h % 2 == 0, "A", "N")),
+                h % card["part"],
+                h % card["supplier"],
+                epoch + (h % 2500) * day,
+            ]
+        yield pa.record_batch([pa.array(c) for c in cols], names=names)
 
 
 class TpchGenDataSource(DataSource):
@@ -438,13 +357,13 @@ class TpchGenDataSource(DataSource):
 
     def schema(self) -> StructType:
         table = self.options.get("table", "orders")
-        if table not in _TABLES:
+        if table not in _SCHEMAS:
             raise ValueError(f"tpchgen: unknown table {table!r}")
-        return _TABLES[table][0]
+        return _SCHEMAS[table]
 
     def _cards(self) -> dict[str, int]:
-        """Catalog cardinalities at this sf — the FK moduli every row
-        function uses, so foreign keys resolve at any scale factor (sf<1
+        """Catalog cardinalities at this sf — the FK moduli ``_batches``
+        uses, so foreign keys resolve at any scale factor (sf<1
         shrinks the moduli with the tables; sf>1 widens them)."""
         sf = float(self.options.get("sf", "1"))
         return {
@@ -523,5 +442,10 @@ class TpchGenStreamReader(SimpleDataSourceStreamReader):
         return self.readBetweenOffsets(start, {"i": hi}), {"i": hi}
 
     def readBetweenOffsets(self, start: dict, end: dict):
-        gen = _TABLES[self.table][1]
-        return iter([gen(i, self.card) for i in range(start["i"], end["i"])])
+        # a list iterator, not a generator: Spark copies the prefetched
+        # iterator (copy.copy) when it plans the cached batch
+        return iter([
+            row
+            for b in _batches(self.table, start["i"], end["i"], self.card)
+            for row in zip(*(c.to_pylist() for c in b.columns))
+        ])

@@ -1,5 +1,6 @@
-"""Host-sized session defaults: cores from the CPU affinity, driver heap
-from physical RAM, each overridable from the environment."""
+"""Session bootstrap: host-sized defaults (cores from the CPU affinity,
+driver heap from physical RAM, each overridable from the environment) and
+the fixture-view mount."""
 
 from __future__ import annotations
 
@@ -30,3 +31,25 @@ def test_environment_overrides_win(monkeypatch):
     monkeypatch.setenv("SPARK_GRAFT_DRIVER_MEM", "5g")
     assert session.default_cpus() == "3"
     assert session.default_driver_memory() == "5g"
+
+
+def test_register_tables_keeps_the_mount_memo_current(spark, sf_dir):
+    # register_tables replaces the bare-named fixture views; sql_over must
+    # see that and remount, not serve the other scale's rows
+    from lyft_presto_spark.queries.registry import sql_over
+
+    base = os.path.dirname(sf_dir)
+    small, large = os.path.join(base, "sf0.001"), os.path.join(base, "sf0.01")
+
+    def n_customers(d: str) -> int:
+        sql = "SELECT count(*) AS n FROM customer"
+        return sql_over(spark, d, sql, ("customer",)).collect()[0].n
+
+    try:
+        expected = {d: session.load_table(spark, d, "customer").count() for d in (small, large)}
+        assert expected[small] != expected[large]
+        assert n_customers(small) == expected[small]
+        session.register_tables(spark, large)
+        assert n_customers(small) == expected[small]
+    finally:
+        session.register_tables(spark, sf_dir)

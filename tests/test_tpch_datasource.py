@@ -7,11 +7,7 @@ from __future__ import annotations
 
 import pytest
 
-from lyft_presto_spark.sources.tpch_datasource import (
-    lineitem_row,
-    orders_row,
-    register_tpchgen,
-)
+from lyft_presto_spark.sources.tpch_datasource import register_tpchgen
 
 
 def _read(spark, **opts):
@@ -38,16 +34,24 @@ def test_partition_count_never_changes_results(spark):
     assert sorted(a, key=key) == sorted(b, key=key) == sorted(c, key=key)
 
 
-def test_rows_match_reference_generator(spark):
-    # executor-side generation == the local pure function, row for row
-    got = {r.o_orderkey: r for r in _read(spark, table="orders", rows=64).collect()}
-    for i in range(64):
-        exp = orders_row(i)
-        row = got[i]
-        assert (
-            row.o_custkey, row.o_orderstatus, row.o_totalprice,
-            row.o_orderpriority,
-        ) == (exp[1], exp[2], exp[3], exp[5])
+# the prelude's CTE for each connector table
+_CTE = {
+    "region": "reg", "nation": "nat", "customer": "cust", "supplier": "sup",
+    "part": "prt", "partsupp": "ps", "orders": "ord", "lineitem": "li",
+}
+
+
+@pytest.mark.parametrize("table", sorted(_CTE))
+def test_every_column_matches_duckdb_prelude(spark, sf_dir, table):
+    # the connector's one synthesis path equals the oracles' one DuckDB
+    # regeneration, every column of the table at its default cardinality,
+    # exactly (money doubles and timestamps included)
+    from lyft_presto_spark.queries.connector_queries import _GEN_DEFS
+    from lyft_presto_spark.testing import compare_with_oracle
+
+    df = _read(spark, table=table)
+    sql = _GEN_DEFS + f"SELECT {', '.join(df.columns)} FROM {_CTE[table]}"
+    compare_with_oracle(df, sql, sf_dir, name=table)
 
 
 def test_lineitem_links_to_orders(spark):
@@ -55,11 +59,6 @@ def test_lineitem_links_to_orders(spark):
     assert len(li) == 400
     # ~4 lines per order, linenumbers 1..4, keys derived from the index
     assert {r.l_linenumber for r in li} == {1, 2, 3, 4}
-    exp = lineitem_row(17)
-    row = next(r for r in li if r.l_orderkey == 17 // 4 and r.l_linenumber == 17 % 4 + 1)
-    assert (row.l_quantity, row.l_extendedprice, row.l_returnflag) == (
-        exp[2], exp[3], exp[5]
-    )
 
 
 def test_full_catalog_tables_and_default_cardinalities(spark):
@@ -237,7 +236,7 @@ def test_stream_reader_drains_and_survives_restart(spark, tmp_path):
         q.processAllAvailable()
         q.stop()
         q.awaitTermination(60)
-        return spark.read.parquet(sink).select("o_orderkey").collect()
+        return spark.read.parquet(sink).collect()
 
     first = run(300)
     keys1 = sorted(r.o_orderkey for r in first)
@@ -248,6 +247,8 @@ def test_stream_reader_drains_and_survives_restart(spark, tmp_path):
     keys2 = sorted(r.o_orderkey for r in second)
     assert keys2 == list(range(400))
     assert os.path.isdir(ckpt)
+    # every column of every streamed row equals the batch read of the rows
+    assert sorted(second) == sorted(_read(spark, table="orders", rows=400).collect())
 
 
 def test_q6_on_generator_pushes_key_range_keeps_residuals(spark):
@@ -305,24 +306,6 @@ def test_q9_on_generator_catalog_pushdown_broadcast_no_cartesian(spark):
     rows = df.collect()
     assert len(rows) > 0
     assert all(r.n_lines > 0 for r in rows)
-
-
-def test_partsupp_vectorized_batches_match_row_function(spark):
-    # the Arrow-batch synthesis path (r10) must reproduce the scalar row
-    # functions bit-for-bit — including the money doubles (same integer
-    # divided by the same 100.0) and int32 widths
-    from lyft_presto_spark.sources.tpch_datasource import partsupp_row
-
-    rows = _read(spark, table="partsupp", rows=200).collect()
-    assert len(rows) == 200
-    by_idx = {}
-    for r in rows:
-        by_idx.setdefault((r.ps_partkey, r.ps_suppkey, r.ps_availqty), r)
-    for i in range(200):
-        exp = partsupp_row(i)
-        key = (exp[0], exp[1], exp[2])
-        assert key in by_idx, (i, exp)
-        assert by_idx[key].ps_supplycost == exp[3]
 
 
 def test_vectorized_batches_honor_pushed_key_range(spark):
